@@ -31,8 +31,8 @@ import org.apache.spark.sql.SparkSession
   * is stochastic, not rank-correlated.
   *
   * Worker protocol: env `SPARK_GRAFT_BENCH_WORKER=1`, args =
-  * (sfDir, comma-joined names, outFile). The worker builds the same
-  * session config the engine benches under, warms ONLY its group —
+  * (sfDir, comma-joined names, outFile). The worker takes its session
+  * from [[GraftSession]] like every other main, warms ONLY its group —
   * one pass at sf0.001 then one at sf0.01, so light queries reach
   * JIT before timing (session init, codegen, JIT are one-time costs
   * a long-running cluster never re-pays per query), then times each
@@ -71,75 +71,58 @@ object Bench {
   // Worker: one bounded group of queries in a fresh JVM
   // ---------------------------------------------------------------
 
-  private def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // see GraftSession: re-evaluates expensive generator inputs
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // see GraftSession: AQE sizes cache-fill partitions by bytes
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
-  private def dropAllCaches(spark: SparkSession): Unit = {
-    // Several operators persist() staging tables session-scoped; a
-    // timed query over the same sf dir would otherwise silently read
-    // the warmup's InMemoryRelations (cache lookup matches
-    // canonicalized plans) and measure cached scans.
-    graft.datapipe.Staging.releaseAll()
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-  }
-
-  /** (name, runs-in-seconds, error). A query that dies must NOT read
-    * as a fast success.
+  /** The board's warm-up dirs: sf0.001 then sf0.01, or the
+    * comma-separated `SPARK_GRAFT_BENCH_WARM` override, split into
+    * (existing, missing).
     */
-  private def timeGroup(spark: SparkSession, sfDir: String,
-                        names: Seq[String]): Seq[(String, Vector[Double], Option[String])] = {
-    // Warmup (untimed): run each of THIS GROUP's queries at sf0.001
-    // and then at sf0.01 — session init, codegen compilation, and
-    // JIT never land in a timed run (measured warm-vs-cold deltas of
-    // 3-15 s were one-time cost, not plan cost), while the group
-    // bound keeps accumulated state from ever exceeding ~25 queries'
-    // worth. The second (sf0.01) pass exists for the LIGHT queries:
-    // with per-group JVMs a sub-second query whose group warmed only
-    // at sf0.001 ran before JIT fully arrived and read up to ~1.5×
-    // its long-lived-JVM cost (r12 wordpiece_encode 1.72 s vs r11's
-    // 1.14); a second pass with ~10× the rows gives the compiler the
-    // samples it needs. Override dirs (comma-separated) with
-    // SPARK_GRAFT_BENCH_WARM.
+  private def warmDirs(): (Seq[String], Seq[String]) = {
     val configured = sys.env.get("SPARK_GRAFT_BENCH_WARM")
       .map(_.split(",").toSeq)
       .getOrElse(Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01"))
-    val warmDirs = configured.filter(d => Files.isDirectory(Paths.get(d)))
+    configured.partition(d => Files.isDirectory(Paths.get(d)))
+  }
+
+  /** Untimed warm-up: run each of `names` at every warm dir, then drop
+    * the caches. Session init, codegen compilation, and JIT never land
+    * in a timed run (measured warm-vs-cold deltas of 3-15 s were
+    * one-time cost, not plan cost), while the group bound keeps
+    * accumulated state from ever exceeding ~25 queries' worth. The
+    * second (sf0.01) pass exists for the LIGHT queries: with per-group
+    * JVMs a sub-second query whose group warmed only at sf0.001 ran
+    * before JIT fully arrived and read up to ~1.5× its long-lived-JVM
+    * cost (r12 wordpiece_encode 1.72 s vs r11's 1.14); a second pass
+    * with ~10× the rows gives the compiler the samples it needs.
+    */
+  private[graft] def warm(spark: SparkSession, names: Seq[String]): Unit = {
+    val (dirs, missing) = warmDirs()
     // a missing warm dir (typo'd override, absent fixture) must be
     // LOUD — with zero warm passes, session-init/codegen/JIT land in
     // the timed window and the artifact would publish cold numbers
     // indistinguishable from warmed ones
-    for (d <- configured.filterNot(warmDirs.toSet))
+    for (d <- missing)
       System.err.println(s"BENCH WARNING: warm dir $d missing — skipped")
-    if (warmDirs.isEmpty)
+    if (dirs.isEmpty)
       System.err.println("BENCH WARNING: NO warm dirs exist — timing cold")
-    for (wd <- warmDirs; n <- names; fn <- SparkEntry.queries.get(n))
+    for (wd <- dirs; n <- names; fn <- SparkEntry.queries.get(n))
       try fn(spark, wd).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
-    dropAllCaches(spark)
+    GraftSession.dropCaches(spark)
+  }
+
+  /** (name, runs-in-seconds, error) after [[warm]]: REPS timed runs per
+    * query, caches dropped and a GC between runs. A query that dies
+    * must NOT read as a fast success.
+    */
+  private[graft] def timeGroup(spark: SparkSession, sfDir: String,
+                               names: Seq[String]): Seq[(String, Vector[Double], Option[String])] = {
+    warm(spark, names)
     names.map { name =>
       val fn = SparkEntry.queries(name)
       val runs = Vector.newBuilder[Double]
       var err: Option[String] = None
       var r = 0
       while (r < REPS && err.isEmpty) {
-        dropAllCaches(spark)
+        GraftSession.dropCaches(spark)
         // collect the previous run's heap debt outside the window
         System.gc()
         val t0 = System.nanoTime()
@@ -159,8 +142,7 @@ object Bench {
 
   private def workerMain(args: Array[String]): Unit = {
     val Array(sfDir, namesCsv, outFile) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = buildSession(cpus)
+    val spark = GraftSession.get()
     val rows = timeGroup(spark, sfDir, namesCsv.split(",").toSeq)
     val tsv = rows.map { case (n, runs, err) =>
       val clean = err.getOrElse("").map(c => if (c < ' ') ' ' else c)
@@ -255,7 +237,7 @@ object Bench {
       case c => c.toString
     } + "\""
 
-  private def median(xs: Vector[Double]): Double = {
+  private[graft] def median(xs: Vector[Double]): Double = {
     val s = xs.sorted
     if (s.isEmpty) 0.0
     else if (s.size % 2 == 1) s(s.size / 2)
@@ -593,11 +575,7 @@ object Bench {
       .map { case (k, v, _) => s"${jstr(k)}:${median(v)}" }
       .mkString("{", ",", "}")
     val midpackJson = midpackNames.map(jstr).mkString("[", ",", "]")
-    val warmJson = sys.env.get("SPARK_GRAFT_BENCH_WARM")
-      .map(_.split(",").toSeq)
-      .getOrElse(Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01"))
-      .filter(d => Files.isDirectory(Paths.get(d)))
-      .map(jstr).mkString("[", ",", "]")
+    val warmJson = warmDirs()._1.map(jstr).mkString("[", ",", "]")
     val suspectsJson = suspectNames.map(jstr).mkString("[", ",", "]")
     println(s"""{"metric":"total_compact","value":$total,"unit":"sec","n_queries":${finalResults.size},"n_failed":${finalResults.count(_._3.nonEmpty)},"slowest":$slowest,"isolation":"$isolation","n_groups":${groups.size},"fresh_jvm_recheck":$recheckJson,"recheck_max_inflation":$maxRatioPublished,"recheck_max_raw_inflation":$maxRatioRaw,"recheck_adopted":$adoptedJson,"recheck_seed":$recheckSeed,"recheck_midpack":$midpackJson,"recheck_suspects":$suspectsJson,"recheck_suspects_dropped":$suspectsDropped,"warm_dirs":$warmJson,"sf":"$sfDir","reps":$REPS,$loadJson}""")
     // LAST line, bounded < 1500 chars BY CONSTRUCTION: the driver
@@ -627,7 +605,7 @@ object Bench {
     */
   private def inProcessGroup(sfDir: String,
                              names: Seq[String]): Seq[(String, Vector[Double], Option[String])] = {
-    val spark = buildSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.get()
     try timeGroup(spark, sfDir, names)
     finally spark.stop()
   }

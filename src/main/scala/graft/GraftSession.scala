@@ -2,22 +2,32 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Standard session factory for the engine.
+import graft.datapipe.Staging
+
+/** The engine's only session factory: Verify, Bench (workers and the
+  * in-process fallback), Probe, the SCALE tools and the test suite all
+  * build their sessions here, so the oracle checks, the board times
+  * and the probes profile one and the same engine configuration.
   *
-  * Tuned for the container's local[32] harness but with settings that
-  * carry to a multi-executor cluster: AQE on (runtime shuffle
-  * coalescing + skew-join splitting), shuffle partitions sized to the
-  * parallelism rather than the 200 default, UTC session time zone for
-  * oracle parity.
+  * Settings that carry to a multi-executor cluster: AQE on (runtime
+  * shuffle coalescing + skew-join splitting), shuffle partitions sized
+  * to the parallelism rather than the 200 default, UTC session time
+  * zone for oracle parity. The local core count defaults to
+  * `SPARK_GRAFT_CPUS`, else every core the JVM sees. Any other
+  * `spark.*` setting (e.g. `spark.graft.stage.mode`, see [[Staging]])
+  * reaches the session as a `-Dspark.…` JVM property or `--conf`.
   */
 object GraftSession {
-  def builder(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession.Builder =
+  def builder(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // events.ts may be INT64 TIMESTAMP(NANOS); graft.sources.Tables
+      // relies on this to read it (as Long nanos)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // native expressions as SQL functions (cosine_similarity,
       // simhash64) for spark.sql users
@@ -53,5 +63,17 @@ object GraftSession {
     val spark = builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Drop everything a query can leave cached: the staged frames
+    * ([[Staging.releaseAll]]), the cache manager, and any RDD still
+    * persisted. Harness mains call it between queries so a timed or
+    * verified run never reads an earlier run's InMemoryRelations
+    * (cache lookup matches canonicalized plans).
+    */
+  def dropCaches(spark: SparkSession): Unit = {
+    Staging.releaseAll()
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
   }
 }

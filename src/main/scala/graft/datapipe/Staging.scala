@@ -51,11 +51,17 @@ object Staging {
     * the same query plans in hundreds of nodes. Both are
     * MEMORY_AND_DISK-backed; the blocks live in
     * `sparkContext.getPersistentRDDs`, which [[releaseAll]] sweeps.
-    * `SPARK_GRAFT_STAGE_MODE=persist` restores the cache-manager
+    * `persist` restores the cache-manager
     * path (the escape hatch — also what a fault-tolerant cluster
     * deployment may prefer: localCheckpoint blocks do not survive
     * executor loss, the standard plan-truncation trade documented on
     * Dataset.localCheckpoint).
+    *
+    * The mode is the session conf `spark.graft.stage.mode`, read from
+    * the staged frame's OWN session, so it applies per session: set it
+    * with `--conf`, a `-Dspark.graft.stage.mode=persist` JVM property,
+    * or `conf.set` on a `newSession()` child (how the plan-pin specs
+    * keep staged pipelines visible without touching other sessions).
     *
     * WHEN the staged frame computes differs by mode: a persist-mode
     * frame fills its cache at the first downstream action, but in
@@ -65,12 +71,11 @@ object Staging {
     * eagerly at `.stage()` (query-CONSTRUCTION) time — operators run
     * Spark jobs while the plan is still being built (only the final
     * result stage stays lazy). Plan-inspection tooling must expect
-    * the side work (ExplainDump does); Bench times construction and
+    * the side work (`graft.Probe explain` does); Bench times construction and
     * action together, so the timed cost is unchanged.
     */
-  private def mode: String =
-    sys.props.getOrElse("graft.stage.mode",
-      sys.env.getOrElse("SPARK_GRAFT_STAGE_MODE", "checkpoint"))
+  private def mode(df: DataFrame): String =
+    df.sparkSession.conf.get("spark.graft.stage.mode", "checkpoint")
 
   /** Persist a staging DataFrame (MEMORY_AND_DISK persist or lazy
     * localCheckpoint per [[mode]]) and register it for
@@ -78,7 +83,7 @@ object Staging {
     */
   def persist(df: DataFrame): DataFrame = {
     val p =
-      if (mode == "checkpoint") df.localCheckpoint(false)
+      if (mode(df) == "checkpoint") df.localCheckpoint(false)
       else df.persist(StorageLevel.MEMORY_AND_DISK)
     live.add(p)
     p

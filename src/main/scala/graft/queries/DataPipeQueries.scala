@@ -5931,8 +5931,9 @@ object DataPipeQueries {
     // window table, the trim-side posexplode, the id-preserving
     // join-back) — unstaged, the normalize + planting-join +
     // array_join fixture pipeline re-ran per consumer and dominated
-    // the ProfileOne stage readout (r19: the two hottest stages were
-    // BOTH fixture recomputes, 22 s + 11 s summed executor time).
+    // the stage profile (`graft.Probe profile`; r19: the two hottest
+    // stages were BOTH fixture recomputes, 22 s + 11 s summed
+    // executor time).
     (train.select(col("doc_id"), array_join(col("w"), " ").as("text")).stage(),
       bench.select(col("doc_id"), array_join(col("w"), " ").as("text")).stage())
   }

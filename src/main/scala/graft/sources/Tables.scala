@@ -14,12 +14,15 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   *     rejects it ([PARQUET_TYPE_ILLEGAL]) unless
   *     `spark.sql.legacy.parquet.nanosAsLong=true`, in which case it
   *     arrives as Long nanos → convert to TimestampType micros (the
-  *     data is microsecond-aligned, so no precision is lost).
+  *     data is microsecond-aligned, so no precision is lost). The
+  *     loaders never mutate the session: they REQUIRE a session with
+  *     that setting, which every [[graft.GraftSession]] session (and
+  *     each of its `newSession()` children) has.
   *   - parquet TIMESTAMP(MICROS) without timezone: arrives as
   *     TIMESTAMP_NTZ → cast to TimestampType. The session timezone is
-  *     pinned to UTC everywhere (GraftSession/Verify/Bench), so the
-  *     cast is micros-identity and `unix_micros(ts)` downstream keeps
-  *     matching DuckDB's naive-timestamp `epoch_us` arithmetic.
+  *     pinned to UTC by GraftSession, so the cast is micros-identity
+  *     and `unix_micros(ts)` downstream keeps matching DuckDB's
+  *     naive-timestamp `epoch_us` arithmetic.
   *
   * All loaders are thin: column pruning + filter pushdown stay with
   * Catalyst; at 100 TB the parquet scan must receive PushedFilters,
@@ -34,7 +37,6 @@ object Tables {
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val df = spark.read.parquet(path(dir, name))
       df.schema("ts").dataType match {
         case LongType => // legacy INT64 nanos read as Long

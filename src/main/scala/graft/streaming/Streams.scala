@@ -60,7 +60,6 @@ object Streams {
     * were the Kafka topic (file source replays deterministically).
     */
   def eventsFileStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import org.apache.spark.sql.types._
     // `events.ts` has shipped both as INT64 nanos and TIMESTAMP(MICROS)
     // (see Tables.table); a file-stream needs an explicit schema, so

@@ -44,19 +44,14 @@ object TimeFixedDelta {
           array_join(transform(toks, w => concat(w, lit("x"))), " ")
             .as("text")))
 
-    def drop(): Unit = {
-      graft.datapipe.Staging.releaseAll()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    }
     def time(name: String)(mk: => org.apache.spark.sql.DataFrame): Unit = {
       mk.write.format("noop").mode("overwrite").save() // warm
-      drop()
+      GraftSession.dropCaches(spark)
       val runs = (1 to 2).map { _ =>
         System.gc()
         val t0 = System.nanoTime()
         mk.write.format("noop").mode("overwrite").save()
-        drop()
+        GraftSession.dropCaches(spark)
         (System.nanoTime() - t0) / 1e9
       }
       println(f"FIXED-DELTA $name%-14s ${runs.min}%6.2f s  (runs: ${runs.map(r => f"$r%.2f").mkString(", ")})")
@@ -87,7 +82,7 @@ object TimeFixedDelta {
     // nothing). Timed against the real materialized dir; repeated
     // runs only accumulate small delta files.
     val appendRuns = (1 to 2).map { _ =>
-      drop(); System.gc()
+      GraftSession.dropCaches(spark); System.gc()
       val t0 = System.nanoTime()
       Dedup.minhashIndexAppend(delta, "id", "text",
         s"$idxPath/hh", s"$idxPath/bb", numHashes = 64, bands = 32)

@@ -59,12 +59,9 @@ class NewOpsPlanSpec extends SparkSpec {
     // pin under persist staging: checkpoint staging truncates the
     // staged tf pipeline to a LogicalRDD leaf, hiding the prefilter
     // this test exists to see (the filter still runs at stage build)
-    val plan =
-      try {
-        sys.props("graft.stage.mode") = "persist"
-        Relevance.bm25(docs, "doc_id", "text",
-          Seq("merge", "window", "customer")).queryExecution.executedPlan.toString
-      } finally sys.props.remove("graft.stage.mode")
+    val plan = Relevance.bm25(persistSpark.read.parquet(s"$sf/documents.parquet"),
+      "doc_id", "text", Seq("merge", "window", "customer"))
+      .queryExecution.executedPlan.toString
     // the non-matching token stream dies map-side, under the
     // (doc_id, term) exchange
     assert(plan.contains("IN (merge,window,customer)"),

@@ -9,25 +9,14 @@ package graft
   */
 class PlanContractSpec extends SparkSpec {
 
-  // Plan pins inspect the STAGED pipelines' internals; checkpoint
-  // staging (the r18 default) truncates staged subtrees to LogicalRDD
-  // leaves, so the pins run under persist staging — the pipeline
-  // SHAPE they certify is identical in both modes, persist just keeps
-  // it visible in the composed plan.
-  private def plan(name: String): String =
-    try {
-      sys.props("graft.stage.mode") = "persist"
-      SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
-    } finally sys.props.remove("graft.stage.mode")
-
   test("q3_top_orders: dim filter is pushed into the customer scan") {
-    val p = plan("q3_top_orders")
+    val p = persistPlan("q3_top_orders")
     assert(p.contains("EqualTo(c_mktsegment,BUILDING)"),
       s"pushdown missing; plan:\n${p.take(1200)}")
   }
 
   test("q3_top_orders: lineitem scan is column-pruned") {
-    val p = plan("q3_top_orders")
+    val p = persistPlan("q3_top_orders")
     val lineitemScan = p.linesIterator
       .find(l => l.contains("lineitem") && l.contains("ReadSchema"))
       .getOrElse(fail("no lineitem scan in plan"))
@@ -37,8 +26,8 @@ class PlanContractSpec extends SparkSpec {
   }
 
   test("dimension joins broadcast the small side") {
-    assert(plan("q3_top_orders").contains("BroadcastHashJoin"))
-    assert(plan("j1_broadcast_lookup").contains("BroadcastHashJoin"))
+    assert(persistPlan("q3_top_orders").contains("BroadcastHashJoin"))
+    assert(persistPlan("j1_broadcast_lookup").contains("BroadcastHashJoin"))
   }
 
   test("the pricing aggregate stays in whole-stage codegen") {
@@ -53,7 +42,7 @@ class PlanContractSpec extends SparkSpec {
   }
 
   test("q1_p95_latency_bucketed: events scan reads only ts and event_type") {
-    val p = plan("q1_p95_latency_bucketed")
+    val p = persistPlan("q1_p95_latency_bucketed")
     val scan = p.linesIterator
       .find(l => l.contains("events") && l.contains("ReadSchema"))
       .getOrElse(fail("no events scan in plan"))

@@ -9,20 +9,9 @@ package graft
   */
 class RoundElevenPlanSpec extends SparkSpec {
 
-  // Plan pins inspect the STAGED pipelines' internals; checkpoint
-  // staging (the r18 default) truncates staged subtrees to LogicalRDD
-  // leaves, so the pins run under persist staging — the pipeline
-  // SHAPE they certify is identical in both modes, persist just keeps
-  // it visible in the composed plan.
-  private def plan(name: String): String =
-    try {
-      sys.props("graft.stage.mode") = "persist"
-      SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
-    } finally sys.props.remove("graft.stage.mode")
-
   test("e2e_split_decontam: corpus-scale reference side meets the probe " +
     "in a shuffled-hash join — never broadcast, never sort-merge") {
-    val p = plan("e2e_split_decontam")
+    val p = persistPlan("e2e_split_decontam")
     assert(p.contains("ShuffledHashJoin"),
       s"the shuffle_hash hint on the shingle join must hold; plan:\n${p.take(2000)}")
     assert(!p.contains("SortMergeJoin"),
@@ -36,7 +25,7 @@ class RoundElevenPlanSpec extends SparkSpec {
 
   test("shard_assign: offsets come from the distributed prefix sum — " +
     "no Window, no single-partition exchange; the token total broadcasts") {
-    val p = plan("shard_assign")
+    val p = persistPlan("shard_assign")
     assert(!p.contains("Window"),
       s"shard offsets must not fall back to a window; plan:\n${p.take(2000)}")
     assert(!p.contains("Exchange SinglePartition) AS") &&
@@ -54,7 +43,7 @@ class RoundElevenPlanSpec extends SparkSpec {
 
   test("sample_weighted: one distributed top-k (TakeOrderedAndProject), " +
     "no global sort of the corpus") {
-    val p = plan("sample_weighted")
+    val p = persistPlan("sample_weighted")
     assert(p.contains("TakeOrderedAndProject"),
       s"the k-cut must plan as per-partition heaps + driver merge; plan:\n${p.take(2000)}")
     assert(!p.contains("rangepartitioning"),
@@ -63,7 +52,7 @@ class RoundElevenPlanSpec extends SparkSpec {
 
   test("chunk_sentences: the cumsum window partitions by document — " +
     "never a corpus-wide single partition") {
-    val p = plan("chunk_sentences")
+    val p = persistPlan("chunk_sentences")
     assert(p.contains("hashpartitioning(doc_id"),
       s"the sentence cumsum must shuffle on doc_id; plan:\n${p.take(2000)}")
     assert(!p.linesIterator.exists(l => l.contains("Window")
@@ -73,7 +62,7 @@ class RoundElevenPlanSpec extends SparkSpec {
 
   test("e2e_ingest_gate: three gate joins stay equi-joins, " +
     "no cartesian fan-out between the per-doc gate columns") {
-    val p = plan("e2e_ingest_gate")
+    val p = persistPlan("e2e_ingest_gate")
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       s"gate columns must join on doc_id; plan:\n${p.take(2000)}")
@@ -81,7 +70,7 @@ class RoundElevenPlanSpec extends SparkSpec {
 
   test("split_report: the per-source share window rides the rollup's " +
     "partitioning — group-table-sized, never the corpus") {
-    val p = plan("split_report")
+    val p = persistPlan("split_report")
     assert(!p.linesIterator.exists(l => l.contains("Window")
         && l.contains("SinglePartition")),
       s"the share window must partition by source; plan:\n${p.take(2000)}")

@@ -8,21 +8,10 @@ package graft
   */
 class RoundFourteenPlanSpec extends SparkSpec {
 
-  // Plan pins inspect the STAGED pipelines' internals; checkpoint
-  // staging (the r18 default) truncates staged subtrees to LogicalRDD
-  // leaves, so the pins run under persist staging — the pipeline
-  // SHAPE they certify is identical in both modes, persist just keeps
-  // it visible in the composed plan.
-  private def plan(name: String): String =
-    try {
-      sys.props("graft.stage.mode") = "persist"
-      SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
-    } finally sys.props.remove("graft.stage.mode")
-
   test("sim_matryoshka: the per-row norm pass is the codegen'd " +
     "norm_prefix_sq expression — no interpreted HOF fold survives in " +
     "the corpus scan") {
-    val p = plan("sim_matryoshka")
+    val p = persistPlan("sim_matryoshka")
     assert(p.contains("norm_prefix_sq"),
       s"the fused expression must carry the norm pass; plan:\n${p.take(2000)}")
     // quantize's transform() is the one legitimate lambda (it maps
@@ -38,7 +27,7 @@ class RoundFourteenPlanSpec extends SparkSpec {
     "the prebuilt hh/bucket tables (no shingle re-hash, no signature " +
     "explode), the delta side broadcasts, verification is the " +
     "shuffled-hash join-back") {
-    val p = plan("dedup_probe_materialized")
+    val p = persistPlan("dedup_probe_materialized")
     // index signatures must come FROM STORAGE: both prebuilt tables
     // appear as parquet FileScans of the cache dir
     assert("graft_minhash_index_[0-9a-f]+/hh".r.findFirstIn(p).isDefined,
@@ -61,7 +50,7 @@ class RoundFourteenPlanSpec extends SparkSpec {
   test("pref_krippendorff / eval_mcnemar / text_simpson: ONE map-side-" +
     "combined rollup each — never a window, never a join") {
     for (name <- Seq("pref_krippendorff", "eval_mcnemar", "text_simpson")) {
-      val p = plan(name)
+      val p = persistPlan(name)
       assert(p.contains("partial_"),
         s"$name must partial-aggregate map-side; plan:\n${p.take(2000)}")
       assert(!p.contains("Window") && !p.contains("Join"),
@@ -72,7 +61,7 @@ class RoundFourteenPlanSpec extends SparkSpec {
   test("quality_spearman: windows run over the VALUE HISTOGRAMS only, " +
     "the corpus joins are (group, value)-keyed hash joins, one moment " +
     "rollup — no corpus window, no cartesian") {
-    val p = plan("quality_spearman")
+    val p = persistPlan("quality_spearman")
     assert(p.contains("Window"), "the rank cumsums ride windows")
     assert(!p.contains("CartesianProduct"), "no cartesian anywhere")
     assert((p.contains("InMemoryTableScan") || p.contains("ExistingRDD")),
@@ -83,7 +72,7 @@ class RoundFourteenPlanSpec extends SparkSpec {
   test("corpus_ks_drift: the grid is a broadcast cross join of two " +
     "rollup outputs, cumulative windows run over the grid (value " +
     "dimension), the max is a plain rollup") {
-    val p = plan("corpus_ks_drift")
+    val p = persistPlan("corpus_ks_drift")
     assert(p.contains("Window"), "the CDF cumsums ride windows")
     assert(p.contains("BroadcastNestedLoopJoin") ||
       p.contains("BroadcastExchange"),
@@ -95,7 +84,7 @@ class RoundFourteenPlanSpec extends SparkSpec {
   test("clf_brier: ONE corpus rollup to bins (Brier terms fold in the " +
     "same pass), bins-sized everything after, broadcast scalars — no " +
     "window") {
-    val p = plan("clf_brier")
+    val p = persistPlan("clf_brier")
     assert(!p.contains("Window"), "no window in the decomposition")
     assert(p.contains("BroadcastExchange") ||
       p.contains("BroadcastNestedLoopJoin"),
@@ -106,7 +95,7 @@ class RoundFourteenPlanSpec extends SparkSpec {
   test("sim_anisotropy: the corpus-sized stage is the vecSum typed " +
     "aggregator with the fused per-row norm — no generator fan-out of " +
     "components, no window") {
-    val p = plan("sim_anisotropy")
+    val p = persistPlan("sim_anisotropy")
     assert(p.contains("ObjectHashAggregate"),
       s"the vecSum aggregator must carry the rollup; plan:\n${p.take(2000)}")
     assert(p.contains("norm_prefix_sq"),
@@ -117,7 +106,7 @@ class RoundFourteenPlanSpec extends SparkSpec {
   test("dedup_edit_verify: bucket-local candidates + shuffled-hash " +
     "text join-backs — Levenshtein runs on candidates only, never a " +
     "cartesian, never a sort-merge") {
-    val p = plan("dedup_edit_verify")
+    val p = persistPlan("dedup_edit_verify")
     assert(p.contains("bounded_levenshtein"),
       "verification must ride the banded bounded-distance expression, " +
         "not the full quadratic DP")
@@ -132,7 +121,7 @@ class RoundFourteenPlanSpec extends SparkSpec {
   test("sample_neyman: ONE corpus rollup to the stratum dimension; the " +
     "W scalar and leftover come back as broadcasts and the remainder " +
     "ranking windows the bounded strata frame only") {
-    val p = plan("sample_neyman")
+    val p = persistPlan("sample_neyman")
     assert(p.contains("partial_"), "the moment rollup partial-aggregates")
     assert(p.contains("BroadcastNestedLoopJoin") ||
       p.contains("BroadcastExchange"), "scalars broadcast")
@@ -145,7 +134,7 @@ class RoundFourteenPlanSpec extends SparkSpec {
   test("eval_paired_bootstrap: corpus x B flows through ONE map-side-" +
     "combined rollup to B rows; windows rank only the B-row frame and " +
     "the readout is broadcast scalars") {
-    val p = plan("eval_paired_bootstrap")
+    val p = persistPlan("eval_paired_bootstrap")
     assert(p.contains("partial_"),
       "the per-rep partials must combine inside the scan tasks")
     assert(p.contains("BroadcastNestedLoopJoin") ||
@@ -156,7 +145,7 @@ class RoundFourteenPlanSpec extends SparkSpec {
 
   test("sft_validate: a pure per-row projection — zero exchanges, " +
     "stream-deployable like the render twin") {
-    val p = plan("sft_validate")
+    val p = persistPlan("sft_validate")
     assert(!p.contains("Exchange"),
       s"the validator must not shuffle; plan:\n${p.take(2000)}")
     assert(!p.contains("Window") && !p.contains("Join"),
@@ -166,7 +155,7 @@ class RoundFourteenPlanSpec extends SparkSpec {
   test("text_pii_stats / eval_mde: ONE map-side-combined rollup each — " +
     "never a window, never a join") {
     for (name <- Seq("text_pii_stats", "eval_mde")) {
-      val p = plan(name)
+      val p = persistPlan(name)
       assert(p.contains("partial_"),
         s"$name must partial-aggregate map-side; plan:\n${p.take(2000)}")
       assert(!p.contains("Window") && !p.contains("Join"),
@@ -176,7 +165,7 @@ class RoundFourteenPlanSpec extends SparkSpec {
 
   test("text_burstiness: two-stage counts + the two-stage top-N — " +
     "TakeOrderedAndProject, no global sort, no window, no join") {
-    val p = plan("text_burstiness")
+    val p = persistPlan("text_burstiness")
     assert(p.contains("TakeOrderedAndProject"),
       s"the top-N must ride the heap, not a global sort; plan:\n${p.take(2000)}")
     assert(p.contains("partial_"), "both rollups partial-aggregate")
@@ -187,7 +176,7 @@ class RoundFourteenPlanSpec extends SparkSpec {
   test("vocab_growth: the only corpus-sized stage is the token " +
     "explode + min rollup; the checkpoint grid joins are bounded " +
     "broadcasts") {
-    val p = plan("vocab_growth")
+    val p = persistPlan("vocab_growth")
     assert(p.contains("partial_min") || p.contains("partial_"),
       "the first-occurrence rollup partial-aggregates")
     assert(p.contains("BroadcastNestedLoopJoin") ||

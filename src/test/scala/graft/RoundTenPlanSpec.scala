@@ -7,20 +7,9 @@ package graft
   */
 class RoundTenPlanSpec extends SparkSpec {
 
-  // Plan pins inspect the STAGED pipelines' internals; checkpoint
-  // staging (the r18 default) truncates staged subtrees to LogicalRDD
-  // leaves, so the pins run under persist staging — the pipeline
-  // SHAPE they certify is identical in both modes, persist just keeps
-  // it visible in the composed plan.
-  private def plan(name: String): String =
-    try {
-      sys.props("graft.stage.mode") = "persist"
-      SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
-    } finally sys.props.remove("graft.stage.mode")
-
   test("q_funnel: stage elections are aggregations + equi-joins, " +
     "never a window over the raw stream") {
-    val p = plan("q_funnel")
+    val p = persistPlan("q_funnel")
     assert(!p.contains("Window"),
       s"funnel must not sort/window the raw stream; plan:\n${p.take(2000)}")
     assert(!p.contains("CartesianProduct") &&
@@ -32,7 +21,7 @@ class RoundTenPlanSpec extends SparkSpec {
   }
 
   test("q_retention: two user-bounded aggregations, no raw-stream window") {
-    val p = plan("q_retention")
+    val p = persistPlan("q_retention")
     assert(!p.contains("Window"))
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"))
@@ -42,7 +31,7 @@ class RoundTenPlanSpec extends SparkSpec {
 
   test("q_table_stats: every scan is pruned to exactly one column " +
     "(columnar bytes == one four-column scan, no Expand)") {
-    val p = plan("q_table_stats")
+    val p = persistPlan("q_table_stats")
     val scans = p.linesIterator.filter(_.contains("FileScan parquet")).toSeq
     assert(scans.size == 4, s"expected four pruned scans, got ${scans.size}")
     for (s <- scans) {
@@ -57,7 +46,7 @@ class RoundTenPlanSpec extends SparkSpec {
 
   test("q_table_stats_hll: pruned per-column scans; state is " +
     "register-bounded, no distinct-set aggregation") {
-    val p = plan("q_table_stats_hll")
+    val p = persistPlan("q_table_stats_hll")
     // per-column projections column-prune to one column per scan, and
     // the single-consumption hllEstimate needs no join-back or cache
     val scans = p.linesIterator.filter(_.contains("FileScan parquet")).toSeq
@@ -75,7 +64,7 @@ class RoundTenPlanSpec extends SparkSpec {
 
   test("dedup_cluster_sizes: histogram rides the cluster table, " +
     "no cartesian") {
-    val p = plan("dedup_cluster_sizes")
+    val p = persistPlan("dedup_cluster_sizes")
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"))
     assert(p.contains("partial_count"),
@@ -83,7 +72,7 @@ class RoundTenPlanSpec extends SparkSpec {
   }
 
   test("sample_weighted: one distributed top-k, never a corpus sort") {
-    val p = plan("sample_weighted")
+    val p = persistPlan("sample_weighted")
     assert(p.contains("TakeOrderedAndProject"),
       s"the E-S draw must be a bounded top-k; plan:\n${p.take(2000)}")
     assert(!p.contains("Exchange rangepartitioning"),
@@ -92,7 +81,7 @@ class RoundTenPlanSpec extends SparkSpec {
 
   test("sample_split: one stateless codegen'd projection — zero " +
     "exchanges, zero windows") {
-    val p = plan("sample_split")
+    val p = persistPlan("sample_split")
     assert(!p.contains("Exchange"), s"split must not shuffle:\n${p.take(2000)}")
     assert(!p.contains("Window"))
     assert(p.linesIterator.count(_.contains("FileScan parquet")) == 1)
@@ -100,7 +89,7 @@ class RoundTenPlanSpec extends SparkSpec {
 
   test("dedup_soft_weights: the fp rollup joins back as an equi-join, " +
     "never a window or cartesian") {
-    val p = plan("dedup_soft_weights")
+    val p = persistPlan("dedup_soft_weights")
     assert(!p.contains("Window"),
       "multiplicity must come from an aggregate, not a corpus window")
     assert(!p.contains("CartesianProduct") &&
@@ -111,7 +100,7 @@ class RoundTenPlanSpec extends SparkSpec {
 
   test("mixture_unimax: windows run over the source-dimension " +
     "aggregate, never the corpus") {
-    val p = plan("mixture_unimax")
+    val p = persistPlan("mixture_unimax")
     // the ONE corpus-scale shuffle is the per-source count...
     assert(p.contains("hashpartitioning(source"),
       "token totals must aggregate by source")
@@ -126,7 +115,7 @@ class RoundTenPlanSpec extends SparkSpec {
 
   test("shuffle_interleave: bit-decode from the prefix sum + " +
     "broadcast source dimension — no corpus join-back, no corpus window") {
-    val p = plan("shuffle_interleave")
+    val p = persistPlan("shuffle_interleave")
     assert(p.contains("shiftright"),
       "src_idx must decode with bit ops, not a join back to the corpus")
     assert(p.contains("BroadcastExchange"),
@@ -142,7 +131,7 @@ class RoundTenPlanSpec extends SparkSpec {
 
   test("shard_assign: offsets via the distributed prefix sum (no " +
     "corpus window), total broadcast back as one row") {
-    val p = plan("shard_assign")
+    val p = persistPlan("shard_assign")
     assert(!p.contains("Window"),
       "the cumsum must come from the prefix sum, not a window")
     assert(p.contains("Scan[obj") || p.contains("ExistingRDD"),
@@ -153,7 +142,7 @@ class RoundTenPlanSpec extends SparkSpec {
 
   test("e2e_unimax_mixture: allocation windows over the source " +
     "dimension only; weights broadcast into the corpus join") {
-    val p = plan("e2e_unimax_mixture")
+    val p = persistPlan("e2e_unimax_mixture")
     val spIdx = p.indexOf("Exchange SinglePartition")
     assert(spIdx >= 0 && p.indexOf("HashAggregate", spIdx) > spIdx,
       "single-partition exchanges must consume the per-source " +
@@ -167,7 +156,7 @@ class RoundTenPlanSpec extends SparkSpec {
   test("dedup_threshold_curve: curve aggregates run over the staged " +
     "pair table — no cartesian threshold join, no re-run of the " +
     "pair generator per threshold") {
-    val p = plan("dedup_threshold_curve")
+    val p = persistPlan("dedup_threshold_curve")
     assert(!p.contains("CartesianProduct"),
       "thresholds must explode over pairs, not theta-join")
     assert((p.contains("InMemoryTableScan") || p.contains("ExistingRDD")),
@@ -180,7 +169,7 @@ class RoundTenPlanSpec extends SparkSpec {
 
   test("shard_manifest: one bounded aggregation over the assignment — " +
     "no window, no extra corpus pass") {
-    val p = plan("shard_manifest")
+    val p = persistPlan("shard_manifest")
     assert(!p.contains("Window"))
     assert(p.contains("Scan[obj") || p.contains("ExistingRDD"),
       "the manifest must ride the materialized prefix sum")
@@ -192,7 +181,7 @@ class RoundTenPlanSpec extends SparkSpec {
   test("e2e_split_decontam: both sides shuffle on the shingle hash " +
     "into a shuffled hash join — never a broadcast of a corpus-scale " +
     "reference set") {
-    val p = plan("e2e_split_decontam")
+    val p = persistPlan("e2e_split_decontam")
     assert(p.contains("ShuffledHashJoin"),
       s"the contamination probe must be a co-partitioned hash join:\n" +
         p.take(2000))
@@ -205,7 +194,7 @@ class RoundTenPlanSpec extends SparkSpec {
   test("e2e_weighted_select: the draw is one distributed top-k " +
     "(TakeOrderedAndProject), never a global sort, and the doc_id " +
     "join stays an equi-join") {
-    val p = plan("e2e_weighted_select")
+    val p = persistPlan("e2e_weighted_select")
     assert(p.contains("TakeOrderedAndProject"),
       s"selection must be per-partition heaps + merge:\n${p.take(2000)}")
     assert(!p.contains("Exchange rangepartitioning"),
@@ -216,14 +205,14 @@ class RoundTenPlanSpec extends SparkSpec {
 
   test("text_extract_html: one stateless codegen'd projection — " +
     "zero exchanges") {
-    val p = plan("text_extract_html")
+    val p = persistPlan("text_extract_html")
     assert(!p.contains("Exchange"), s"extraction must not shuffle:\n${p.take(1500)}")
     assert(p.linesIterator.count(_.contains("FileScan parquet")) == 1)
   }
 
   test("text_boilerplate: df election and join key on the line hash, " +
     "no window, no cartesian") {
-    val p = plan("text_boilerplate")
+    val p = persistPlan("text_boilerplate")
     assert(!p.contains("Window"))
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"))
@@ -233,7 +222,7 @@ class RoundTenPlanSpec extends SparkSpec {
 
   test("text_normalize_unicode: NFC runs as a native codegen " +
     "expression — no ScalaUDF, no BatchEvalPython, zero exchanges") {
-    val p = plan("text_normalize_unicode")
+    val p = persistPlan("text_normalize_unicode")
     assert(!p.contains("ScalaUDF") && !p.contains("BatchEval"),
       s"nfc must be the native expression:\n${p.take(1500)}")
     assert(p.contains("nfc_normalize"),
@@ -248,7 +237,7 @@ class RoundTenPlanSpec extends SparkSpec {
   test("q2/q3 bucketed p95: aggregation state is one count per bucket " +
     "(HashAggregate strictly below the window), no exact percentile") {
     for (name <- Seq("q2_p95_verification", "q3_p95_resolution")) {
-      val p = plan(name)
+      val p = persistPlan(name)
       assert(!p.contains("percentile"),
         s"$name must not buffer per-group values")
       val windowIdx = p.indexOf("Window")

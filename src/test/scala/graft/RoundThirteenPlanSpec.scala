@@ -8,20 +8,9 @@ package graft
   */
 class RoundThirteenPlanSpec extends SparkSpec {
 
-  // Plan pins inspect the STAGED pipelines' internals; checkpoint
-  // staging (the r18 default) truncates staged subtrees to LogicalRDD
-  // leaves, so the pins run under persist staging — the pipeline
-  // SHAPE they certify is identical in both modes, persist just keeps
-  // it visible in the composed plan.
-  private def plan(name: String): String =
-    try {
-      sys.props("graft.stage.mode") = "persist"
-      SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
-    } finally sys.props.remove("graft.stage.mode")
-
   test("sft_fim: a pure per-row projection — zero exchanges, zero " +
     "windows, stream-safe by construction") {
-    val p = plan("sft_fim")
+    val p = persistPlan("sft_fim")
     assert(!p.contains("Exchange"),
       s"the FIM transform must not shuffle; plan:\n${p.take(2000)}")
     assert(!p.contains("Window"), "no window belongs in a per-row rewrite")
@@ -29,7 +18,7 @@ class RoundThirteenPlanSpec extends SparkSpec {
 
   test("pref_best_of_n: two map-side-combined rollups and a group-keyed " +
     "join — never a window, never a global sort") {
-    val p = plan("pref_best_of_n")
+    val p = persistPlan("pref_best_of_n")
     assert(!p.contains("Window"),
       s"argmax must ride max-of-struct aggregates, not a rank window; plan:\n${p.take(2000)}")
     assert(p.contains("partial_max") || p.contains("HashAggregate"),
@@ -39,7 +28,7 @@ class RoundThirteenPlanSpec extends SparkSpec {
 
   test("mix_doremi: one token-count shuffle feeds a staged source-sized " +
     "frame; the k and Z scalars come back as broadcast one-row joins") {
-    val p = plan("mix_doremi")
+    val p = persistPlan("mix_doremi")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
       s"the scalar frames must broadcast; plan:\n${p.take(2000)}")
     assert(!p.contains("Window"), "no window in the mixture update")
@@ -50,7 +39,7 @@ class RoundThirteenPlanSpec extends SparkSpec {
   test("clf_temperature: docs × grid flows through ONE map-side-combined " +
     "rollup to grid-sized rows; the argmin is a broadcast one-row join, " +
     "never a second corpus pass or a window") {
-    val p = plan("clf_temperature")
+    val p = persistPlan("clf_temperature")
     assert(!p.contains("Window"),
       s"best-T must be min-of-struct over the grid frame; plan:\n${p.take(2000)}")
     assert((p.contains("InMemoryTableScan") || p.contains("ExistingRDD")),
@@ -61,7 +50,7 @@ class RoundThirteenPlanSpec extends SparkSpec {
 
   test("sft_loss_mask: per-row expressions + one bounded explode — " +
     "zero exchanges, zero windows, stream-safe like the render twin") {
-    val p = plan("sft_loss_mask")
+    val p = persistPlan("sft_loss_mask")
     assert(!p.contains("Exchange"),
       s"the span table must not shuffle; plan:\n${p.take(2000)}")
     assert(!p.contains("Window"),
@@ -70,7 +59,7 @@ class RoundThirteenPlanSpec extends SparkSpec {
 
   test("vocab_heaps: one map-side-combined rollup straight to the group " +
     "dimension — no token explode, no window, no join") {
-    val p = plan("vocab_heaps")
+    val p = persistPlan("vocab_heaps")
     assert(p.contains("partial_"),
       s"the regression sums must partial-aggregate map-side; plan:\n${p.take(2000)}")
     assert(!p.contains("Window") && !p.contains("Generate") &&
@@ -82,7 +71,7 @@ class RoundThirteenPlanSpec extends SparkSpec {
   test("text_robust_outliers: the corpus-sized stage is ONE staged " +
     "histogram rollup; medians ride windows over the HISTOGRAM and " +
     "every join is group-keyed — no cartesian, no doc-level window") {
-    val p = plan("text_robust_outliers")
+    val p = persistPlan("text_robust_outliers")
     assert((p.contains("InMemoryTableScan") || p.contains("ExistingRDD")),
       s"the length histogram must be staged (median, MAD and the " +
         s"outlier count all consume it); plan:\n${p.take(2000)}")
@@ -92,7 +81,7 @@ class RoundThirteenPlanSpec extends SparkSpec {
   test("pref_length_bias and pref_kappa: ONE map-side-combined rollup " +
     "each, never a window or a join") {
     for (name <- Seq("pref_length_bias", "pref_kappa")) {
-      val p = plan(name)
+      val p = persistPlan(name)
       assert(p.contains("partial_"),
         s"$name must partial-aggregate map-side; plan:\n${p.take(1500)}")
       assert(!p.contains("Window") && !p.contains("Join"),
@@ -103,7 +92,7 @@ class RoundThirteenPlanSpec extends SparkSpec {
   test("sim_matryoshka: per-row norm folds + one |dims|-way explode " +
     "into ONE map-side-combined rollup — no join, no window, no " +
     "per-component explode") {
-    val p = plan("sim_matryoshka")
+    val p = persistPlan("sim_matryoshka")
     assert(p.contains("partial_"),
       s"the per-dim stats must partial-aggregate map-side; plan:\n${p.take(2000)}")
     assert(!p.contains("Window") && !p.contains("Join"),
@@ -113,7 +102,7 @@ class RoundThirteenPlanSpec extends SparkSpec {
   test("text_collocations: pair/unigram count shuffles + vocab-keyed " +
     "joins + a scalar broadcast + the two-stage TopK — never a " +
     "cartesian, never a corpus window") {
-    val p = plan("text_collocations")
+    val p = persistPlan("text_collocations")
     assert(p.contains("TakeOrderedAndProject"),
       s"the top-k must ride the two-stage TopK, not a global sort; plan:\n${p.take(2000)}")
     assert(!p.contains("CartesianProduct"), "no cartesian anywhere")
@@ -124,7 +113,7 @@ class RoundThirteenPlanSpec extends SparkSpec {
 
   test("clf_label_noise: staged scored rows, a broadcast threshold " +
     "join, two bounded rollups — no window, no cartesian") {
-    val p = plan("clf_label_noise")
+    val p = persistPlan("clf_label_noise")
     assert(p.contains("BroadcastExchange") || p.contains("BroadcastHashJoin"),
       s"the flipped thresholds must broadcast back; plan:\n${p.take(2000)}")
     assert(!p.contains("Window"), "no window in the noise estimate")
@@ -134,7 +123,7 @@ class RoundThirteenPlanSpec extends SparkSpec {
   test("eval_bootstrap_ci: corpus × B flows through ONE map-side-" +
     "combined rollup to B rows; the only window ranks the B-row rep " +
     "frame and the readout is broadcast scalars") {
-    val p = plan("eval_bootstrap_ci")
+    val p = persistPlan("eval_bootstrap_ci")
     assert(p.contains("partial_sum"),
       s"the per-rep Σw/Σwx must partial-aggregate inside scan tasks; plan:\n${p.take(2000)}")
     assert(!p.contains("CartesianProduct"),
@@ -143,7 +132,7 @@ class RoundThirteenPlanSpec extends SparkSpec {
 
   test("pref_fleiss: ONE map-side-combined three-counter rollup — " +
     "never a join, never a window") {
-    val p = plan("pref_fleiss")
+    val p = persistPlan("pref_fleiss")
     assert(p.contains("partial_"),
       s"the vote counters must partial-aggregate map-side; plan:\n${p.take(1500)}")
     assert(!p.contains("Window") && !p.contains("Join"),
@@ -153,7 +142,7 @@ class RoundThirteenPlanSpec extends SparkSpec {
   test("split_leakage: ONE staged fingerprint rollup feeds both " +
     "strategy rows — the corpus is scanned once, no window, no " +
     "cartesian") {
-    val p = plan("split_leakage")
+    val p = persistPlan("split_leakage")
     assert((p.contains("InMemoryTableScan") || p.contains("ExistingRDD")),
       s"the fingerprint-group frame must be staged (both strategies " +
         s"consume it); plan:\n${p.take(2000)}")
@@ -162,7 +151,7 @@ class RoundThirteenPlanSpec extends SparkSpec {
 
   test("mix_epoch_schedule: one token rollup to the source dimension " +
     "+ a one-row broadcast for the share — no window") {
-    val p = plan("mix_epoch_schedule")
+    val p = persistPlan("mix_epoch_schedule")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
       s"the source-count scalar must broadcast; plan:\n${p.take(1500)}")
     assert(!p.contains("Window"), "no window in the schedule")
@@ -171,7 +160,7 @@ class RoundThirteenPlanSpec extends SparkSpec {
   test("pack_prefix_cache: ONE corpus scan fans each doc to its " +
     "eligible widths, two map-side rollups, a k-sized left join — " +
     "no window, no cartesian") {
-    val p = plan("pack_prefix_cache")
+    val p = persistPlan("pack_prefix_cache")
     assert(p.contains("partial_"),
       s"the (k, prefix) counts must partial-aggregate; plan:\n${p.take(1500)}")
     assert(!p.contains("Window") && !p.contains("CartesianProduct"))
@@ -180,7 +169,7 @@ class RoundThirteenPlanSpec extends SparkSpec {
   test("pref_majority: ONE rollup computes every rater's agreement " +
     "counter at once; the per-rater rows unfold from the bounded " +
     "group frame — no join back to the corpus, no window") {
-    val p = plan("pref_majority")
+    val p = persistPlan("pref_majority")
     assert(!p.contains("Window"), "no window in the vote rollup")
     assert(p.contains("partial_"),
       s"agreement counters must partial-aggregate; plan:\n${p.take(1500)}")
@@ -204,7 +193,7 @@ class RoundThirteenPlanSpec extends SparkSpec {
   test("sim_source_drift: the corpus rollup is the vecSum typed " +
     "aggregator (ObjectHashAggregate, map-side partials) — the " +
     "d-rows-per-vector posexplode shape must not come back") {
-    val p = plan("sim_source_drift")
+    val p = persistPlan("sim_source_drift")
     assert(p.contains("ObjectHashAggregate"),
       s"the per-source vector sum must plan as ObjectHashAggregate; plan:\n${p.take(2000)}")
     assert((p.contains("InMemoryTableScan") || p.contains("ExistingRDD")),

@@ -10,9 +10,30 @@ object SparkSpec {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** A child of [[session]] that stages through the cache manager
+    * (`spark.graft.stage.mode=persist`). Same SparkContext and cache,
+    * its own conf, so the shared session keeps checkpoint staging.
+    */
+  lazy val persistSession: SparkSession = {
+    val s = session.newSession()
+    s.conf.set("spark.graft.stage.mode", "persist")
+    s
+  }
 }
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+  lazy val persistSpark: SparkSession = SparkSpec.persistSession
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Executed plan of a catalog entry built on [[persistSpark]]. Plan
+    * pins inspect the STAGED pipelines' internals; checkpoint staging
+    * (the default) truncates staged subtrees to LogicalRDD leaves, so
+    * the pins build under persist staging — the pipeline SHAPE they
+    * certify is identical in both modes, persist just keeps it visible
+    * in the composed plan.
+    */
+  def persistPlan(name: String): String =
+    SparkEntry.queries(name)(persistSpark, sf).queryExecution.executedPlan.toString
 }

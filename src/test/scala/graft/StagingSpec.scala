@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 import graft.datapipe.Staging
@@ -15,7 +17,6 @@ class StagingSpec extends SparkSpec {
 
   test("checkpoint mode: releaseAll BEFORE a staged frame's first " +
     "action leaves the frame usable (lazy checkpoint not poisoned)") {
-    assume(sys.props.get("graft.stage.mode").forall(_ == "checkpoint"))
     Staging.releaseAll()
     val staged = Staging.persist(spark.range(100).toDF("n"))
     // the hazard: unpersisting a LAZY localCheckpoint before its
@@ -29,7 +30,6 @@ class StagingSpec extends SparkSpec {
 
   test("checkpoint mode: a MATERIALIZED staged frame is " +
     "single-consumption across releaseAll (documented narrowed contract)") {
-    assume(sys.props.get("graft.stage.mode").forall(_ == "checkpoint"))
     Staging.releaseAll()
     val staged = Staging.persist(spark.range(100).toDF("n"))
     assert(staged.count() === 100L) // materialize the checkpoint
@@ -41,21 +41,24 @@ class StagingSpec extends SparkSpec {
   }
 
   test("persist mode: a released staged frame recomputes from lineage") {
-    val prev = sys.props.get("graft.stage.mode")
-    sys.props("graft.stage.mode") = "persist"
-    try {
-      Staging.releaseAll()
-      val staged = Staging.persist(spark.range(50).toDF("n"))
-      assert(staged.count() === 50L)
-      Staging.releaseAll()
-      assert(staged.count() === 50L,
-        "persist-mode frames keep the wide recompute contract")
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.stage.mode") = v
-        case None => sys.props.remove("graft.stage.mode")
-      }
-      Staging.releaseAll()
-    }
+    Staging.releaseAll()
+    val staged = Staging.persist(persistSpark.range(50).toDF("n"))
+    assert(staged.count() === 50L)
+    Staging.releaseAll()
+    assert(staged.count() === 50L,
+      "persist-mode frames keep the wide recompute contract")
+    Staging.releaseAll()
+  }
+
+  test("the staging mode follows the staged frame's own session") {
+    Staging.releaseAll()
+    val persisted = Staging.persist(persistSpark.range(10).toDF("n"))
+    val checkpointed = Staging.persist(spark.range(10).toDF("n"))
+    assert(persisted.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation => r }.isDefined,
+      "a frame staged on the persist-mode session is cache-manager backed")
+    assert(checkpointed.queryExecution.analyzed.isInstanceOf[LogicalRDD],
+      "a frame staged on the shared session is a checkpoint leaf")
+    Staging.releaseAll()
   }
 }
