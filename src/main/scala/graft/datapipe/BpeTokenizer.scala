@@ -288,9 +288,7 @@ object BpeTokenizer {
     // the ONE corpus pass materializes the (word, count) table; BOTH
     // the cap probe and (if over-cap) the distributed loop read the
     // cache instead of re-scanning the corpus
-    val wc = wordCounts(docs, textCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    Staging.scoped(wordCounts(docs, textCol)) { wc =>
       val head = wc.limit(MaxDriverVocab + 1).as[(String, Long)].collect()
       if (head.length > MaxDriverVocab) trainDistributedFrom(wc, numMerges)
       else {
@@ -300,7 +298,7 @@ object BpeTokenizer {
           .toDF("w", "cnt", "syms")
         BpeModel(merges, Staging.persist(vocabDf))
       }
-    } finally wc.unpersist(false)
+    }
   }
 
   /** The fully-distributed training loop — the over-cap path. Each

@@ -542,9 +542,7 @@ object Dedup {
     // compaction, or use [[minhashIndexAppendRoot]], which resolves
     // the MANIFEST itself and cannot target a stale version.
     requireValidBanding(numHashes, bands)
-    val idx = minhashIndexTable(delta, idCol, textCol, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Staging.scoped(minhashIndexTable(delta, idCol, textCol, numHashes)) { idx =>
       AtomicCommit.commitAppend(hhPath, commitId) { staging =>
         idx.write.mode("overwrite").parquet(staging)
       }
@@ -552,7 +550,7 @@ object Dedup {
         minhashBucketsTable(idx, numHashes, bands)
           .write.mode("overwrite").parquet(staging)
       }
-    } finally idx.unpersist()
+    }
   }
 
   /** [[minhashIndexAppend]] against a VERSIONED index root — the

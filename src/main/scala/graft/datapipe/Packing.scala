@@ -68,7 +68,7 @@ object Packing {
     // without the cache that is two full passes over whatever
     // pipeline feeds this (in the composed e2e entry, joins over the
     // document text). 24 bytes/row, spills to disk.
-    val compact = rows
+    val compactRows = rows
       .select(col("k1").cast("long"), col("k2").cast("long"),
         col("v").cast("long"))
       // a null key or value has no place in the total order and would
@@ -76,25 +76,26 @@ object Packing {
       // like the dedup pipelines drop null-text documents
       .filter(col("k1").isNotNull && col("k2").isNotNull &&
         col("v").isNotNull)
-      .persist(lvl)
-    // Persist the sorted partitions too: both the totals job and the
-    // offset pass consume them, and the post-shuffle sort would
-    // otherwise run in each.
-    val sorted = compact
-      .repartitionByRange(col("k1"), col("k2"))
-      .sortWithinPartitions(col("k1"), col("k2"))
-      .as[(Long, Long, Long)]
-      .rdd.persist(lvl)
-    val partTotals = sorted
-      .mapPartitionsWithIndex { (i, it) =>
-        var s = 0L
-        it.foreach(s += _._3)
-        Iterator((i, s))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    // The totals job materialized `sorted`; the cached input DF
-    // behind it is no longer needed by anyone.
-    compact.unpersist(false)
+    // The totals job materializes `sorted`; the cached input DF
+    // behind it is released right after, no longer needed by anyone.
+    val (sorted, partTotals) = Staging.scoped(compactRows) { compact =>
+      // Persist the sorted partitions too: both the totals job and the
+      // offset pass consume them, and the post-shuffle sort would
+      // otherwise run in each.
+      val sorted = compact
+        .repartitionByRange(col("k1"), col("k2"))
+        .sortWithinPartitions(col("k1"), col("k2"))
+        .as[(Long, Long, Long)]
+        .rdd.persist(lvl)
+      val partTotals = sorted
+        .mapPartitionsWithIndex { (i, it) =>
+          var s = 0L
+          it.foreach(s += _._3)
+          Iterator((i, s))
+        }
+        .collect().sortBy(_._1).map(_._2)
+      (sorted, partTotals)
+    }
     // Exclusive scan over the (tiny) per-partition totals: base(i) =
     // sum of v in partitions before i.
     val base = partTotals.scanLeft(0L)(_ + _)

@@ -324,10 +324,8 @@ object Similarity {
     // null vectors while count(*) would still count the row, so sums
     // and counts would cover DIFFERENT row sets (the r13 advice
     // finding) — and a null can't seed or be assigned anyway
-    val q = vecs.select(col("vec_id"), quantize(col("emb")).as("q"))
-      .filter(col("q").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Staging.scoped(vecs.select(col("vec_id"), quantize(col("emb")).as("q"))
+      .filter(col("q").isNotNull)) { q =>
       var cents: Array[(Array[Long], Long)] = q
         .orderBy(md5(col("vec_id").cast("string").cast("binary")), col("vec_id"))
         .limit(k).select(col("q")).as[Seq[Long]].collect()
@@ -346,7 +344,7 @@ object Similarity {
         it += 1
       }
       cents
-    } finally q.unpersist()
+    }
   }
 
   /** Deterministic self-sizing coarse-quantizer cell count: hold
@@ -983,10 +981,8 @@ object Similarity {
     val subDim = dim / subspaces
     // null-vector guard: same sum/count row-set contract as
     // [[kmeansCentroids]]
-    val q = emb.select(col("vec_id"), quantize(col("emb")).as("q"))
-      .filter(col("q").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Staging.scoped(emb.select(col("vec_id"), quantize(col("emb")).as("q"))
+      .filter(col("q").isNotNull)) { q =>
       val seedVecs: Array[Array[Long]] = q
         .orderBy(md5(col("vec_id").cast("string").cast("binary")), col("vec_id"))
         .limit(kcents).select(col("q")).as[Seq[Long]].collect().map(_.toArray)
@@ -1025,7 +1021,7 @@ object Similarity {
         it += 1
       }
       cents.map(_.toSeq)
-    } finally q.unpersist()
+    }
   }
 
   /** Subspace width, validated. */

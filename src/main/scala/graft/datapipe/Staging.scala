@@ -5,41 +5,46 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** THE staging-cache convention, in one place (every bare `.persist`
-  * in the dedup/relevance/similarity operators routes through here).
+/** THE operator-cache convention, in one place: every DataFrame cache
+  * in the dedup/relevance/similarity operators routes through here, in
+  * one of two shapes.
   *
-  * Several operators materialize an intermediate table that feeds two
-  * or more downstream branches (both sides of a band self-join, a
-  * join-back, a df aggregation): without `persist()` each branch
-  * re-runs the text→hash pipeline from the scan, and Catalyst's
-  * inferred join-key null filters can serialize that recomputation
-  * onto the scan's few input splits (measured pathologies documented
-  * at each call site). Those caches are **session-scoped by design**:
-  * the operator cannot unpersist before returning, because its result
-  * DataFrame is lazy and still reads the staged table when the CALLER
-  * runs the first action.
+  * '''Staged''' ([[persist]] / `.stage()`): several operators
+  * materialize an intermediate table that feeds two or more downstream
+  * branches (both sides of a band self-join, a join-back, a df
+  * aggregation): without staging each branch re-runs the text→hash
+  * pipeline from the scan, and Catalyst's inferred join-key null
+  * filters can serialize that recomputation onto the scan's few input
+  * splits (measured pathologies documented at each call site). Those
+  * caches are **session-scoped by design**: the operator cannot
+  * unpersist before returning, because its result DataFrame is lazy
+  * and still reads the staged table when the CALLER runs the first
+  * action.
   *
-  * What bounds accumulation across repeated invocations in one
-  * session:
+  * '''Scoped''' ([[scoped]]): an operator whose cache is fully
+  * consumed by eager actions *inside* the operator (the quantizer
+  * trainers, an index write, the BPE word-count probe) persists,
+  * runs, and unpersists in one call. Nothing outlives the call, so
+  * the registry would only delay the release.
+  *
+  * What bounds accumulation of staged frames across repeated
+  * invocations:
   *  - every staged frame registers here; [[releaseAll]] unpersists
-  *    everything staged so far (called by harness mains between
+  *    everything staged so far (harness mains call it between
   *    queries; library users call it once downstream actions have
   *    consumed an operator's result);
   *  - `spark.catalog.clearCache()` is a coarser equivalent (drops ALL
   *    cached data, staged or not);
   *  - `MEMORY_AND_DISK` means an unreleased cache degrades to disk
   *    spill, never an executor OOM.
-  *
-  * The exception to the convention: operators whose staging is fully
-  * consumed by an eager action *inside* the operator (the quantizer
-  * trainers' `pqCodebooks`/`kmeansCentroids`) unpersist in
-  * `try/finally` at the call site instead — nothing outlives the call
-  * there, so the registry would only delay the release.
   */
 object Staging {
   private val live = new ConcurrentLinkedQueue[DataFrame]()
 
-  /** Staging mechanism (r18 optimization): `checkpoint` (default)
+  /** The one storage level of operator caches, staged or scoped. */
+  private val Level = StorageLevel.MEMORY_AND_DISK
+
+  /** Staging mechanism: `checkpoint` (default)
     * stages through `localCheckpoint(eager = false)` — the staged
     * frame becomes a leaf (`LogicalRDD`) in every downstream plan,
     * truncating lineage, where `persist` leaves the full upstream
@@ -84,9 +89,21 @@ object Staging {
   def persist(df: DataFrame): DataFrame = {
     val p =
       if (mode(df) == "checkpoint") df.localCheckpoint(false)
-      else df.persist(StorageLevel.MEMORY_AND_DISK)
+      else df.persist(Level)
     live.add(p)
     p
+  }
+
+  /** Cache `df` at MEMORY_AND_DISK for the duration of `body` only,
+    * then unpersist (non-blocking) — also when `body` throws. For a
+    * frame that `body` reads several times through eager actions
+    * and that nothing returned by `body` still reads lazily. Always
+    * the cache manager, whatever the staging [[mode]]: the frame is
+    * re-scanned, not re-planned, so there is no lineage to truncate.
+    */
+  def scoped[T](df: DataFrame)(body: DataFrame => T): T = {
+    val p = df.persist(Level)
+    try body(p) finally p.unpersist(false)
   }
 
   /** Release one staged frame: cache-manager unpersist for persist
@@ -97,33 +114,16 @@ object Staging {
     * its storage level would make that later first action fail
     * LocalRDDCheckpointData's persisted-with-disk requirement — a
     * releaseAll() racing query construction must not poison the
-    * query (r19, advisor item).
+    * query.
     */
   private def release(df: DataFrame): Unit = {
     df.queryExecution.analyzed match {
       case r: org.apache.spark.sql.execution.LogicalRDD =>
         if (r.rdd.isCheckpointed) r.rdd.unpersist(false)
-        // A never-materialized lazy checkpoint keeps its storage
-        // level (stripping it would poison the later first action —
-        // the advisor hazard above), so the level alone can no longer
-        // tell "released" from "live". Record the release here so
-        // [[isLive]]/[[memo]] treat the frame as dead either way:
-        // the memo must rebuild after releaseAll (bench timings
-        // charge full cost) even though the un-run frame itself
-        // stays usable.
-        releasedRddIds.add(r.rdd.id)
       case _ => ()
     }
     df.unpersist(false)
   }
-
-  /** RDD ids of checkpoint-mode staged frames that releaseAll has
-    * processed — the "released" bit for frames whose storage level
-    * must survive (see [[release]]). One Int per released frame,
-    * bounded by the session's staging traffic.
-    */
-  private val releasedRddIds =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 
   /** Unpersist every registered staging frame (non-blocking). Safe to
     * call between queries — but the post-release contract is
@@ -144,33 +144,19 @@ object Staging {
     *    first-use stays correct in both modes. StagingSpec pins both
     *    behaviors.
     *
-    * Concurrency hazard, documented for library adopters: the
-    * registry is PROCESS-global, so a releaseAll() from one thread
+    * The registry is PROCESS-wide: releaseAll() releases the staged
+    * frames of every session in the JVM, so a call from one thread
     * also drops caches another thread's in-flight query is still
-    * reading (correct but recomputed). Multi-tenant apps sharing one
-    * JVM should release per session ([[releaseAll(session)]]) at
-    * their own quiesce points. Strong refs are deliberate: an
-    * unpersist needs the frame, so a weak registry would strand
-    * caches in the session's CacheManager once the frame is GC'd.
+    * reading (correct but recomputed, or — for a materialized
+    * checkpoint — failed). Apps that share one JVM between concurrent
+    * queries should call it only at a point where no query runs.
+    * Strong refs are deliberate: an unpersist needs the frame, so a
+    * weak registry would strand caches in the session's CacheManager
+    * once the frame is GC'd.
     */
   def releaseAll(): Unit = {
     var df = live.poll()
     while (df != null) { release(df); df = live.poll() }
-    memos.clear()
-  }
-
-  /** Unpersist only the staged frames belonging to `session` —
-    * the bound a long-lived multi-session app needs so one tenant's
-    * release never forces another tenant's recompute.
-    */
-  def releaseAll(session: org.apache.spark.sql.SparkSession): Unit = {
-    val it = live.iterator()
-    while (it.hasNext) {
-      val df = it.next()
-      if (df.sparkSession eq session) { release(df); it.remove() }
-    }
-    val mit = memos.keySet.iterator()
-    while (mit.hasNext) if (mit.next()._1 eq session) mit.remove()
   }
 
   /** Register an ALREADY-persisted frame for [[releaseAll]] — for
@@ -179,72 +165,8 @@ object Staging {
     */
   def register(df: DataFrame): DataFrame = { live.add(df); df }
 
-  private val memos =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
-
-  /** Session-scoped MEMOIZED staging: several independent catalog
-    * entries derive from one expensive shared intermediate (the
-    * minhash pair table feeds dedup_clusters, dedup_cluster_sizes
-    * AND dedup_keep_one — three full pair-pipeline executions per
-    * board run without sharing). `memo` returns the live staged
-    * frame for `(session, key)` when one exists, else builds,
-    * persists, and registers it. Each entry stays independently
-    * runnable — whichever runs first builds the table; a
-    * [[releaseAll]] between queries (the bench harness) voids the
-    * memo (storageLevel drops to NONE) so per-query timings still
-    * charge full cost. Callers must pick keys that capture EVERY
-    * input that changes the frame (the sf dir, parameters).
-    */
-  /** Is the staged frame's backing storage still registered? For
-    * persist-mode frames this is the cache-manager level; for
-    * checkpoint-mode frames the LogicalRDD's RDD storage level (the
-    * frame itself never enters the cache manager).
-    */
-  private[graft] def isLive(df: DataFrame): Boolean = liveLevel(df)
-
-  private def liveLevel(df: DataFrame): Boolean =
-    df.queryExecution.analyzed match {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.getStorageLevel != StorageLevel.NONE &&
-          !releasedRddIds.contains(r.rdd.id)
-      case _ => df.storageLevel != StorageLevel.NONE
-    }
-
-  def memo(session: org.apache.spark.sql.SparkSession, key: String)
-          (build: => DataFrame): DataFrame = {
-    val k = (session, key)
-    val cur = memos.get(k)
-    if (cur != null && liveLevel(cur)) cur
-    else memos.synchronized {
-      val again = memos.get(k)
-      if (again != null && liveLevel(again)) again
-      else {
-        val built = persist(build)
-        memos.put(k, built)
-        built
-      }
-    }
-  }
-
-  /** Always-columnar staging, regardless of [[mode]]: cache-manager
-    * persist (compressed columnar InMemoryRelation batches). For the
-    * few staged tables whose dominant cost is being RE-SCANNED many
-    * times by compute-heavy consumers (wide token-array frames read
-    * 8–9× by the BLEU gram explodes), the columnar cache's vectorized
-    * scan beats checkpoint-mode row blocks (measured r18: eval_bleu
-    * +0.5 s under checkpoint staging, recovered by this). Use
-    * [[persist]]/`.stage()` everywhere else — plan truncation is the
-    * better default for long staged pipelines.
-    */
-  def persistColumnar(df: DataFrame): DataFrame = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    live.add(p)
-    p
-  }
-
   /** `.stage()` chain syntax for [[persist]]. */
   implicit class Staged(private val df: DataFrame) extends AnyVal {
     def stage(): DataFrame = Staging.persist(df)
-    def stageColumnar(): DataFrame = Staging.persistColumnar(df)
   }
 }

@@ -5163,12 +5163,11 @@ object DataPipeQueries {
       val docs = Tables.documents(s, d)
         .select(col("doc_id").as("id"), col("text"))
         .repartition(s.sparkContext.defaultParallelism)
-      val idx = Dedup.minhashIndexTable(docs, "id", "text", numHashes = 64)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      idx.write.mode("overwrite").parquet(s"$path/hh")
-      Dedup.minhashBucketsTable(idx, numHashes = 64, bands = 32)
-        .write.mode("overwrite").parquet(s"$path/bb")
-      idx.unpersist()
+      Staging.scoped(Dedup.minhashIndexTable(docs, "id", "text", numHashes = 64)) { idx =>
+        idx.write.mode("overwrite").parquet(s"$path/hh")
+        Dedup.minhashBucketsTable(idx, numHashes = 64, bands = 32)
+          .write.mode("overwrite").parquet(s"$path/bb")
+      }
     }
     path
   }
@@ -5626,20 +5625,15 @@ object DataPipeQueries {
         UNION
         SELECT e.dst, reach.r FROM edges e JOIN reach ON e.src = reach.id)"""
 
-  /** The shared minhash pair table behind the three cluster-family
-    * entries below: memoized through [[Staging.memo]] so a board run
-    * (Verify: all 200 entries in one session) executes the pair
-    * pipeline ONCE instead of three times, while each entry stays
-    * independently runnable (first caller builds) and each bench
-    * timing still pays full cost (releaseAll between queries voids
-    * the memo). Keyed on the sf dir; the 64/32/0.8 parameters are
-    * fixed here so the key needn't carry them.
+  /** The minhash pair table (64 hashes, 32 bands, jaccard ≥ 0.8)
+    * behind the three cluster-family entries below. Built per entry:
+    * every harness drops caches between entries, so a shared copy
+    * would never be reused, and [[Dedup.clusters]], the one consumer,
+    * already persists the edges it derives from the pairs.
     */
-  private def stagedMinhashPairs(s: org.apache.spark.sql.SparkSession,
-                                 d: String): DataFrame =
-    Staging.memo(s, s"minhash_pairs_64_32_08:$d") {
-      Dedup.minhashPairs(withTwins(s, d), "id", "text", 64, 32, 0.8)
-    }
+  private def clusterPairs(s: org.apache.spark.sql.SparkSession,
+                           d: String): DataFrame =
+    Dedup.minhashPairs(withTwins(s, d), "id", "text", 64, 32, 0.8)
 
   /** Near-dup clusters = connected components over the minhash pair
     * list; the oracle replays the closure with a recursive CTE over
@@ -5648,7 +5642,7 @@ object DataPipeQueries {
     "dedup_clusters",
     (s, d) => {
       val corpus = withTwins(s, d)
-      Dedup.clusters(corpus, "id", stagedMinhashPairs(s, d))
+      Dedup.clusters(corpus, "id", clusterPairs(s, d))
     },
     Some(s"""WITH RECURSIVE $exactPairsCte
       SELECT id, min(r) AS cluster_id FROM reach GROUP BY id"""))
@@ -5663,7 +5657,7 @@ object DataPipeQueries {
     "dedup_cluster_sizes",
     (s, d) => {
       val corpus = withTwins(s, d)
-      Dedup.clusters(corpus, "id", stagedMinhashPairs(s, d))
+      Dedup.clusters(corpus, "id", clusterPairs(s, d))
         .groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
         .groupBy(col("sz").as("cluster_size"))
         .agg(count(lit(1)).as("n_clusters"))
@@ -5679,7 +5673,7 @@ object DataPipeQueries {
     "dedup_keep_one",
     (s, d) => {
       val corpus = withTwins(s, d)
-      Dedup.keepOne(corpus, "id", stagedMinhashPairs(s, d))
+      Dedup.keepOne(corpus, "id", clusterPairs(s, d))
     },
     Some(s"""WITH RECURSIVE $exactPairsCte
       SELECT id, min(r) AS cluster_id, id = min(r) AS keep

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
-import graft.datapipe.{Dedup, TextAnalysis}
+import graft.datapipe.{Dedup, Staging, TextAnalysis}
 import graft.sources.Tables
 
 /** SCALE harness for the incremental-ingest family with TODAY'S-CRAWL
@@ -66,12 +66,11 @@ object TimeFixedDelta {
     // and minhash_probe is exactly the per-run index re-hash cost.
     val idxPath = java.nio.file.Files
       .createTempDirectory("graft_fixed_delta_idx").toString
-    val idx = Dedup.minhashIndexTable(index, "id", "text", numHashes = 64)
-      .persist()
-    idx.write.mode("overwrite").parquet(s"$idxPath/hh")
-    Dedup.minhashBucketsTable(idx).write.mode("overwrite")
-      .parquet(s"$idxPath/bb")
-    idx.unpersist()
+    Staging.scoped(Dedup.minhashIndexTable(index, "id", "text", numHashes = 64)) { idx =>
+      idx.write.mode("overwrite").parquet(s"$idxPath/hh")
+      Dedup.minhashBucketsTable(idx).write.mode("overwrite")
+        .parquet(s"$idxPath/bb")
+    }
     time("probe_prebuilt")(Dedup.minhashProbePrebuilt(
       spark.read.parquet(s"$idxPath/hh"), spark.read.parquet(s"$idxPath/bb"),
       delta, "id", "text",

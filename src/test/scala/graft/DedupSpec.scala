@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.datapipe.{Dedup, TextAnalysis}
+import graft.datapipe.{Dedup, Staging, TextAnalysis}
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -406,5 +406,25 @@ class DedupSpec extends SparkSpec {
     assert(s2.getAs[Long]("exact_dup_docs") === 2L)
     assert(s2.getAs[Double]("dup_frac") === 0.666667)
     assert(s2.getAs[String]("top_lang") === "fr")
+  }
+
+  test("cluster-family entries agree run alone and after one another") {
+    Staging.releaseAll()
+    // each entry alone, then two in a row in one session: the second
+    // must produce the same clusters it would standalone
+    val standalone = SparkEntry.queries("dedup_clusters")(spark, sf)
+      .collect().map(_.toString).sorted.toSeq
+    Staging.releaseAll()
+    val sizesFirst = SparkEntry.queries("dedup_cluster_sizes")(spark, sf)
+      .collect().map(_.toString).sorted.toSeq
+    val clustersAfterShared = SparkEntry.queries("dedup_clusters")(spark, sf)
+      .collect().map(_.toString).sorted.toSeq
+    assert(clustersAfterShared === standalone,
+      "running after another cluster-family entry must not change results")
+    Staging.releaseAll()
+    val sizesStandalone = SparkEntry.queries("dedup_cluster_sizes")(spark, sf)
+      .collect().map(_.toString).sorted.toSeq
+    assert(sizesFirst === sizesStandalone)
+    Staging.releaseAll()
   }
 }

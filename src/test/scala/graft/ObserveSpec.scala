@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.ops.{EventOps, Observe}
 import graft.streaming.{ObservedMetricsListener, Streams}
@@ -67,5 +69,23 @@ class ObserveSpec extends SparkSpec {
       assert(listener.total(Observe.P1Name, "n_total") === total)
       assert(listener.total(Observe.P1Name, "n_dropped") === dropped)
     } finally spark.streams.removeListener(listener)
+  }
+
+  test("the listener keeps a bounded row window and exact totals") {
+    val listener = new ObservedMetricsListener
+    val schema = StructType(Seq(
+      StructField("n_total", LongType), StructField("n_dropped", LongType)))
+    val n = ObservedMetricsListener.Window + 37
+    (1 to n).foreach { i =>
+      listener.record("bounded", new GenericRowWithSchema(
+        Array[Any](i.toLong, (i % 3).toLong), schema))
+    }
+    val rows = listener.rows("bounded")
+    assert(rows.size === ObservedMetricsListener.Window)
+    assert(rows.head.getLong(0) === (n - ObservedMetricsListener.Window + 1).toLong,
+      "the window keeps the most recent rows, oldest first")
+    assert(rows.last.getLong(0) === n.toLong)
+    assert(listener.total("bounded", "n_total") === (1 to n).map(_.toLong).sum)
+    assert(listener.total("bounded", "n_dropped") === (1 to n).map(i => (i % 3).toLong).sum)
   }
 }

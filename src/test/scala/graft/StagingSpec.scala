@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.datapipe.Staging
 
@@ -60,5 +61,31 @@ class StagingSpec extends SparkSpec {
     assert(checkpointed.queryExecution.analyzed.isInstanceOf[LogicalRDD],
       "a frame staged on the shared session is a checkpoint leaf")
     Staging.releaseAll()
+  }
+
+  test("scoped: cache-backed inside the body, released after it returns") {
+    val df = spark.range(20).toDF("n")
+    val total = Staging.scoped(df) { p =>
+      assert(p.storageLevel === StorageLevel.MEMORY_AND_DISK)
+      assert(p.queryExecution.withCachedData.collectFirst {
+        case r: InMemoryRelation => r }.isDefined,
+        "the scoped frame reads through the cache manager")
+      p.agg(sum(col("n"))).collect()(0).getLong(0)
+    }
+    assert(total === 190L)
+    assert(df.storageLevel === StorageLevel.NONE)
+  }
+
+  test("scoped: released when the body throws, and the exception " +
+    "reaches the caller") {
+    val df = spark.range(5).toDF("n")
+    val e = intercept[IllegalStateException] {
+      Staging.scoped(df) { p =>
+        assert(p.count() === 5L)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage === "body failed")
+    assert(df.storageLevel === StorageLevel.NONE)
   }
 }
