@@ -140,6 +140,31 @@ object Bench {
     }
   }
 
+  /** The SCALE tools' timing loop (TimeFixedDelta, TimeKnnCells,
+    * TimeVecIndex): `warm` once, untimed, then `reps` timed runs of
+    * `run`, each after a GC and each ending with
+    * [[GraftSession.dropCaches]] inside the window. Returns the warm
+    * result and the run seconds; [[runsNote]] prints the runs.
+    */
+  private[graft] def warmThenTime[W](spark: SparkSession, reps: Int = 2)(
+      warm: => W)(run: => Unit): (W, Vector[Double]) = {
+    val w = warm
+    GraftSession.dropCaches(spark)
+    val runs = Vector.fill(reps) {
+      System.gc()
+      val t0 = System.nanoTime()
+      run
+      GraftSession.dropCaches(spark)
+      (System.nanoTime() - t0) / 1e9
+    }
+    (w, runs)
+  }
+
+  /** `(runs: 1.23, 4.56)` — the run list the SCALE tools print after
+    * the min. */
+  private[graft] def runsNote(runs: Seq[Double]): String =
+    s"(runs: ${runs.map(r => f"$r%.2f").mkString(", ")})"
+
   private def workerMain(args: Array[String]): Unit = {
     val Array(sfDir, namesCsv, outFile) = args.take(3)
     val spark = GraftSession.get()

@@ -4,7 +4,6 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Byte-pair-encoding tokenizer training (Sennrich et al. 2016,
   * arXiv:1508.07909) — the vocabulary-learning stage of a training
@@ -109,7 +108,7 @@ object BpeTokenizer {
     * encoding loops cannot drift.
     */
   private final class BarrierLoop(start: DataFrame) {
-    private val lvl = StorageLevel.MEMORY_AND_DISK
+    private val lvl = Staging.Level
     private var last = { val p = start.persist(lvl); p.count(); p }
     private var current = last
     private var since = 0

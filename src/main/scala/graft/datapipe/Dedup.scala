@@ -256,6 +256,15 @@ object Dedup {
       xxhash64(lit(b), slice(sigCol, b * rowsPerBand + 1, rowsPerBand))
     }: _*)
 
+  /** The banding contract shared by the batch and streaming LSH
+    * paths: a truncated split silently weakens recall, and
+    * rowsPerBand = 0 would collapse every document into the same
+    * per-band buckets.
+    */
+  def requireValidBanding(numHashes: Int, bands: Int): Unit =
+    require(bands > 0 && numHashes % bands == 0,
+      s"bands ($bands) must evenly divide numHashes ($numHashes)")
+
   /** MinHash+LSH near-duplicate pairs with verified Jaccard >=
     * `threshold`. Returns (a_id, b_id, jaccard).
     *
@@ -272,15 +281,6 @@ object Dedup {
     * in practice and the operator is oracle-checkable against an
     * all-pairs exact-Jaccard query.
     */
-  /** The banding contract shared by the batch and streaming LSH
-    * paths: a truncated split silently weakens recall, and
-    * rowsPerBand = 0 would collapse every document into the same
-    * per-band buckets.
-    */
-  def requireValidBanding(numHashes: Int, bands: Int): Unit =
-    require(bands > 0 && numHashes % bands == 0,
-      s"bands ($bands) must evenly divide numHashes ($numHashes)")
-
   def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    numHashes: Int = 64, bands: Int = 32,
                    threshold: Double = 0.8): DataFrame = {
@@ -306,17 +306,9 @@ object Dedup {
     // sorted: the signature fold is order-independent, and sorted
     // arrays let verification count intersections by two-pointer
     // merge instead of building a hash set per candidate pair
-    val hhTable = docs.select(col(idCol).as("id"),
-      array_sort(hashedShingles(col(textCol), 3)).as("hh"))
-      .stage()
-    // Staged projections: hh and sig are each materialized ONCE per
-    // row before the stages that reference them repeatedly — inlining
-    // would multiply the work by the reference count (Catalyst's
-    // CollapseProject keeps non-cheap multi-referenced aliases staged).
-    val buckets = hhTable
-      .select(col("id"), minhashSignatureFromHashes(col("hh"), numHashes).as("sig"))
-      .select(col("id"),
-        explode(lshBuckets(col("sig"), bands, numHashes / bands)).as("bb"))
+    val hhTable = shingleHashRows(docs, idCol, textCol, "id", "hh").stage()
+    val buckets = bandKeys(hhTable, Seq("id"),
+      minhashSignatureFromHashes(col("hh"), numHashes), numHashes, bands)
     // shuffle_hash: the band self-join feeds a distinct hash
     // aggregation — no sort order downstream, so skip the sort-merge.
     val candidates = buckets.select(col("bb"), col("id").as("a_id"))
@@ -325,21 +317,69 @@ object Dedup {
       .filter(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"))
       .distinct()
-    candidates
+    exactJaccard(candidates
       .join(hhTable.select(col("id").as("a_id"), col("hh").as("a_hh")), "a_id")
-      .join(hhTable.select(col("id").as("b_id"), col("hh").as("b_hh")), "b_id")
-      // size filter (exact): J >= t forces t*|b| <= |a| <= |b|/t
-      .filter(size(col("a_hh")) >= lit(threshold) * size(col("b_hh")) &&
-        size(col("b_hh")) >= lit(threshold) * size(col("a_hh")))
-      .select(col("a_id"), col("b_id"),
-        graft.functions.SortedIntersectCount.column(col("a_hh"), col("b_hh"))
+      .join(hhTable.select(col("id").as("b_id"), col("hh").as("b_hh")), "b_id"),
+      "a_hh", "b_hh", threshold, "a_id", "b_id", "jaccard")
+  }
+
+  /** (`idCol` AS `id`, its SORTED 3-shingle hash array AS `hh`): the
+    * verification payload every MinHash path stages or stores. */
+  private def shingleHashRows(docs: DataFrame, idCol: String,
+                              textCol: String, id: String,
+                              hh: String): DataFrame =
+    docs.select(col(idCol).as(id),
+      array_sort(hashedShingles(col(textCol), 3)).as(hh))
+
+  /** The LSH band keys of every row: `docs`' `keep` columns plus one
+    * row per band key `bb` of the MinHash signature `sig` (a column
+    * of `docs` or an expression over it). The signature is projected
+    * ONCE below the explode: a generator evaluates its argument per
+    * reference, and [[lshBuckets]] references the signature once per
+    * band — inside the explode a signature expression ran `bands`
+    * times per row (counted with an instrumented UDF: 4 bands, 4×).
+    */
+  private[graft] def bandKeys(docs: DataFrame, keep: Seq[String],
+                              sig: Column, numHashes: Int,
+                              bands: Int): DataFrame = {
+    requireValidBanding(numHashes, bands)
+    docs.select(keep.map(col) :+ sig.as("sig"): _*)
+      .select(keep.map(col) :+
+        explode(lshBuckets(col("sig"), bands, numHashes / bands)).as("bb"): _*)
+  }
+
+  /** THE exact set-Jaccard verification of candidate pairs, shared by
+    * every MinHash and n-gram path: `pairs` carries two sorted hash
+    * arrays `a` and `b`; rows with J(a, b) >= `threshold` are kept,
+    * projected to `out` — pass-through column names of `pairs` plus
+    * the computed `jaccard` and (optionally) `n_common`, in any order.
+    *
+    * The size filter (exact: J >= t forces t·|b| <= |a| <= |b|/t)
+    * runs BEFORE the O(n) intersect — size() on a materialized array
+    * reads a stored length. (Do NOT stage the size as its own
+    * projected column: CollapseProject inlines the whole shingle-hash
+    * array expression into the size() call and the pipeline runs
+    * twice — measured 3× end-to-end.) |a ∩ b| is counted by the
+    * allocation-free two-pointer merge over the sorted arrays, and
+    * |a ∪ b| = |a| + |b| − |a ∩ b| by arithmetic — no per-pair hash
+    * set, no materialized arrays.
+    */
+  private[graft] def exactJaccard(pairs: DataFrame, a: String, b: String,
+                                  threshold: Double,
+                                  out: String*): DataFrame = {
+    val carried = out.filterNot(c => c == "jaccard" || c == "n_common")
+    pairs
+      .filter(size(col(a)) >= lit(threshold) * size(col(b)) &&
+        size(col(b)) >= lit(threshold) * size(col(a)))
+      .select(carried.map(col) ++ Seq(
+        graft.functions.SortedIntersectCount.column(col(a), col(b))
           .as("n_common"),
-        (size(col("a_hh")) + size(col("b_hh"))).cast("bigint").as("n_total"))
-      // |a ∪ b| = |a| + |b| - |a ∩ b|: merge-count once, union by
-      // arithmetic — no per-pair hash set, no materialized arrays
-      .select(col("a_id"), col("b_id"),
-        (col("n_common").cast("double") /
-          (col("n_total") - col("n_common"))).as("jaccard"))
+        (size(col(a)) + size(col(b))).cast("bigint").as("n_total")): _*)
+      .select(out.map {
+        case "jaccard" => (col("n_common").cast("double") /
+          (col("n_total") - col("n_common"))).as("jaccard")
+        case c => col(c)
+      }: _*)
       .filter(col("jaccard") >= threshold)
   }
 
@@ -351,10 +391,11 @@ object Dedup {
     * shingle→minhash→band chain and the same exact-Jaccard
     * verification as [[minhashPairs]], but the band join is
     * ASYMMETRIC: the delta's bucket table is broadcast and the index
-    * side streams — ZERO shuffle of the corpus. In production the
-    * index's signature/bucket table is the materialized artifact
-    * (computed once, appended per ingest); here it is derived
-    * inline, which changes cost, not semantics. Delta-internal
+    * side streams — ZERO shuffle of the corpus. The index's
+    * signature/bucket tables are derived inline here and handed to
+    * the same probe [[minhashProbePrebuilt]] runs against the
+    * materialized tables (production computes them once and appends
+    * per ingest), which changes cost, not semantics. Delta-internal
     * duplicates are out of contract (run [[minhashPairs]] on the
     * delta for those).
     *
@@ -375,36 +416,12 @@ object Dedup {
                    numHashes: Int = 64, bands: Int = 32,
                    threshold: Double = 0.8): DataFrame = {
     requireValidBanding(numHashes, bands)
-    def hhOf(df: DataFrame, name: String) = df
-      .select(col(idCol).as(name),
-        array_sort(hashedShingles(col(textCol), 3)).as(s"${name}_hh"))
-      .stage()
-    def bucketsOf(hh: DataFrame, id: String) = hh
-      .select(col(id),
-        minhashSignatureFromHashes(col(s"${id}_hh"), numHashes).as("sig"))
-      .select(col(id),
-        explode(lshBuckets(col("sig"), bands, numHashes / bands)).as("bb"))
-    val ihh = hhOf(index, "index_id")
-    val dhh = hhOf(delta, "delta_id")
-    val candidates = bucketsOf(ihh, "index_id")
-      .join(broadcast(bucketsOf(dhh, "delta_id")), Seq("bb"))
-      .select(col("delta_id"), col("index_id"))
-      .distinct()
-    candidates
-      .join(broadcast(dhh), "delta_id")
-      .hint("shuffle_hash")
-      .join(ihh, "index_id")
-      .filter(size(col("delta_id_hh")) >= lit(threshold) * size(col("index_id_hh")) &&
-        size(col("index_id_hh")) >= lit(threshold) * size(col("delta_id_hh")))
-      .select(col("delta_id"), col("index_id"),
-        graft.functions.SortedIntersectCount
-          .column(col("delta_id_hh"), col("index_id_hh")).as("n_common"),
-        (size(col("delta_id_hh")) + size(col("index_id_hh")))
-          .cast("bigint").as("n_total"))
-      .select(col("delta_id"), col("index_id"),
-        (col("n_common").cast("double") /
-          (col("n_total") - col("n_common"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    val ihh = shingleHashRows(index, idCol, textCol, "index_id",
+      "index_id_hh").stage()
+    val ibb = minhashBucketsTable(ihh.withColumn("sig",
+      minhashSignatureFromHashes(col("index_id_hh"), numHashes)),
+      numHashes, bands)
+    probeIndex(ihh, ibb, delta, idCol, textCol, numHashes, bands, threshold)
   }
 
   /** The PERSISTENT index side of [[minhashProbe]]: one row per
@@ -415,16 +432,15 @@ object Dedup {
     * fixed-delta SCALE wave measured the in-query rebuild at
     * corpus exponent 0.40 vs 0.26 for the churn verdicts, i.e. the
     * probe's steady-state cost was dominated by re-hashing an index
-    * that never changed. Write this frame out (parquet), read it
-    * back, and hand it to [[minhashProbePrebuilt]].
+    * that never changed. Write this frame out ([[minhashIndexWrite]]),
+    * read it back, and hand it to [[minhashProbePrebuilt]].
     *
     * Column contract: (index_id, index_id_hh array<bigint> SORTED,
     * sig array<bigint> length `numHashes`).
     */
   def minhashIndexTable(index: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 64): DataFrame =
-    index.select(col(idCol).as("index_id"),
-        array_sort(hashedShingles(col(textCol), 3)).as("index_id_hh"))
+    shingleHashRows(index, idCol, textCol, "index_id", "index_id_hh")
       .withColumn("sig",
         minhashSignatureFromHashes(col("index_id_hh"), numHashes))
 
@@ -436,20 +452,16 @@ object Dedup {
     * is the table you sort/bucket by bb at write time).
     */
   def minhashBucketsTable(indexTable: DataFrame,
-                          numHashes: Int = 64, bands: Int = 32): DataFrame = {
-    requireValidBanding(numHashes, bands)
-    indexTable.select(col("index_id"),
-      explode(lshBuckets(col("sig"), bands, numHashes / bands)).as("bb"))
-  }
+                          numHashes: Int = 64, bands: Int = 32): DataFrame =
+    bandKeys(indexTable, Seq("index_id"), col("sig"), numHashes, bands)
 
   /** [[minhashProbe]] against a PREBUILT [[minhashIndexTable]]: the
     * steady-state incremental shape — only the (small) delta is
     * hashed per run; the index side contributes one scan of the
     * materialized signature table for the band join and one
     * candidate-keyed join-back for exact verification. Same output
-    * and recall contract as [[minhashProbe]] (the banding and the
-    * exact-Jaccard verification are byte-identical); only WHERE the
-    * index signatures come from changes.
+    * and recall contract as [[minhashProbe]] (one probe serves both);
+    * only WHERE the index signatures come from changes.
     *
     * Scale shape: the delta's buckets broadcast to the index bucket
     * explode (zero index shuffle for candidate generation), the
@@ -470,34 +482,32 @@ object Dedup {
     // SortedIntersectCount requires
     val ihh = indexHh.select(col("index_id"),
       array_compact(col("index_id_hh")).as("index_id_hh"))
-    val dhh = delta
-      .select(col(idCol).as("delta_id"),
-        array_sort(hashedShingles(col(textCol), 3)).as("delta_id_hh"))
-      .stage()
-    val dBuckets = dhh
-      .select(col("delta_id"),
-        minhashSignatureFromHashes(col("delta_id_hh"), numHashes).as("sig"))
-      .select(col("delta_id"),
-        explode(lshBuckets(col("sig"), bands, numHashes / bands)).as("bb"))
-    val candidates = indexBuckets.select(col("index_id"), col("bb"))
+    probeIndex(ihh, indexBuckets, delta, idCol, textCol, numHashes, bands,
+      threshold)
+  }
+
+  // The probe both index sources share: the delta is hashed, staged
+  // and banded; its buckets broadcast into the index bucket stream;
+  // the distinct candidates join back to both hash tables (delta
+  // broadcast, index shuffled-hash) for the exact-Jaccard step.
+  private def probeIndex(ihh: DataFrame, ibb: DataFrame, delta: DataFrame,
+                         idCol: String, textCol: String, numHashes: Int,
+                         bands: Int, threshold: Double): DataFrame = {
+    val dhh = shingleHashRows(delta, idCol, textCol, "delta_id",
+      "delta_id_hh").stage()
+    val dBuckets = bandKeys(dhh, Seq("delta_id"),
+      minhashSignatureFromHashes(col("delta_id_hh"), numHashes),
+      numHashes, bands)
+    val candidates = ibb.select(col("index_id"), col("bb"))
       .join(broadcast(dBuckets), Seq("bb"))
       .select(col("delta_id"), col("index_id"))
       .distinct()
-    candidates
+    exactJaccard(candidates
       .join(broadcast(dhh), "delta_id")
       .hint("shuffle_hash")
-      .join(ihh, "index_id")
-      .filter(size(col("delta_id_hh")) >= lit(threshold) * size(col("index_id_hh")) &&
-        size(col("index_id_hh")) >= lit(threshold) * size(col("delta_id_hh")))
-      .select(col("delta_id"), col("index_id"),
-        graft.functions.SortedIntersectCount
-          .column(col("delta_id_hh"), col("index_id_hh")).as("n_common"),
-        (size(col("delta_id_hh")) + size(col("index_id_hh")))
-          .cast("bigint").as("n_total"))
-      .select(col("delta_id"), col("index_id"),
-        (col("n_common").cast("double") /
-          (col("n_total") - col("n_common"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      .join(ihh, "index_id"),
+      "delta_id_hh", "index_id_hh", threshold,
+      "delta_id", "index_id", "jaccard")
   }
 
   /** The APPEND leg that closes the materialized-index loop: after a
@@ -541,15 +551,35 @@ object Dedup {
     // re-derive via [[AtomicCommit.resolveVersionRoot]] after every
     // compaction, or use [[minhashIndexAppendRoot]], which resolves
     // the MANIFEST itself and cannot target a stale version.
+    writeIndexTables(delta, idCol, textCol, numHashes, bands) { (t, df) =>
+      AtomicCommit.commitAppend(if (t == "hh") hhPath else bbPath,
+        commitId) { staging => df.write.mode("overwrite").parquet(staging) }
+    }
+  }
+
+  /** Build a minhash index over `docs` from scratch: the
+    * [[minhashIndexTable]] at `root/hh` and its
+    * [[minhashBucketsTable]] at `root/bb`, both overwritten — the
+    * un-versioned layout [[readIndexTables]] reads. The signature
+    * table is hashed once, cached for both writes.
+    */
+  def minhashIndexWrite(docs: DataFrame, idCol: String, textCol: String,
+                        root: String, numHashes: Int = 64,
+                        bands: Int = 32): Unit =
+    writeIndexTables(docs, idCol, textCol, numHashes, bands) { (t, df) =>
+      df.write.mode("overwrite").parquet(s"$root/$t")
+    }
+
+  // Hash `docs` into a scoped signature table and hand `write` the two
+  // index tables in commit order: ("hh", signatures), ("bb", buckets).
+  private def writeIndexTables(docs: DataFrame, idCol: String,
+                               textCol: String, numHashes: Int,
+                               bands: Int)(
+      write: (String, DataFrame) => Unit): Unit = {
     requireValidBanding(numHashes, bands)
-    Staging.scoped(minhashIndexTable(delta, idCol, textCol, numHashes)) { idx =>
-      AtomicCommit.commitAppend(hhPath, commitId) { staging =>
-        idx.write.mode("overwrite").parquet(staging)
-      }
-      AtomicCommit.commitAppend(bbPath, commitId) { staging =>
-        minhashBucketsTable(idx, numHashes, bands)
-          .write.mode("overwrite").parquet(staging)
-      }
+    Staging.scoped(minhashIndexTable(docs, idCol, textCol, numHashes)) { idx =>
+      write("hh", idx)
+      write("bb", minhashBucketsTable(idx, numHashes, bands))
     }
   }
 
@@ -1105,7 +1135,7 @@ object Dedup {
     // DataFrames; edges persist so the expensive pair pipeline runs
     // once, not once per round.
     val spark = docs.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val lvl = Staging.Level
     import spark.implicits._
     val part = new org.apache.spark.HashPartitioner(
       spark.sparkContext.defaultParallelism)
@@ -1166,6 +1196,8 @@ object Dedup {
       iter += 1
     }
     edges.unpersist(false)
+    // the returned frame reads the final labels lazily
+    Staging.register(labels)
     // Silent non-convergence would mis-split a component into several
     // clusters and keepOne would retain documents dedup should drop —
     // fail loudly instead; raise maxIter for deep chains.
@@ -1252,28 +1284,10 @@ object Dedup {
       .filter(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"))
       .distinct()
-    candidates
+    exactJaccard(candidates
       .join(hhTable.select(col("id").as("a_id"), col("hh").as("a_hh")), "a_id")
-      .join(hhTable.select(col("id").as("b_id"), col("hh").as("b_hh")), "b_id")
-      // size filter: J(a,b) >= t forces t*|b| <= |a| and t*|a| <= |b|
-      // — size() on a materialized array reads a stored length, so
-      // this two-long comparison discards size-incompatible
-      // candidates before the O(n) intersect work. (Do NOT stage the
-      // size as its own projected column: CollapseProject inlines the
-      // whole shingle-hash array expression into the size() call and
-      // the pipeline runs twice — measured 3× end-to-end.)
-      .filter(size(col("a_hh")) >= lit(threshold) * size(col("b_hh")) &&
-        size(col("b_hh")) >= lit(threshold) * size(col("a_hh")))
-      // |a ∪ b| = |a| + |b| - |a ∩ b|, with the intersection counted
-      // by allocation-free two-pointer merge over the sorted arrays
-      .select(col("a_id"), col("b_id"),
-        graft.functions.SortedIntersectCount.column(col("a_hh"), col("b_hh"))
-          .as("n_common"),
-        (size(col("a_hh")) + size(col("b_hh"))).cast("bigint").as("n_total"))
-      .select(col("a_id"), col("b_id"), col("n_common"),
-        (col("n_common").cast("double") /
-          (col("n_total") - col("n_common"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      .join(hhTable.select(col("id").as("b_id"), col("hh").as("b_hh")), "b_id"),
+      "a_hh", "b_hh", threshold, "a_id", "b_id", "n_common", "jaccard")
   }
 
   /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,

@@ -5,6 +5,8 @@ import graft.datapipe.Staging.Staged
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.ExactRound.roundDouble
+
 /** Generic graph analytics over an edge list — the layer between the
   * similarity machinery (which BUILDS graphs: [[Similarity.knnGraph]],
   * [[Dedup]]'s near-dup pair generators) and corpus curation (which
@@ -23,11 +25,13 @@ object GraphOps {
     *
     * The Σ accumulates as exact DECIMAL(28,8) over the 8-dp-rounded
     * per-edge contributions — the catalog's order-independent float
-    * convention — so each round's ranks are engine-portable
-    * bit-for-bit. Dangling mass (nodes with no out-edges) is NOT
-    * redistributed — the "leaky" PageRank variant; with a fixed round
-    * count both engines replay the identical recurrence, and a kNN
-    * graph has no dangling nodes anyway (every node emits k edges).
+    * convention — and every round is DuckDB's binary half-away
+    * rounding ([[graft.functions.ExactRound.roundDouble]]), so each
+    * round's ranks are engine-portable bit-for-bit. Dangling mass
+    * (nodes with no out-edges) is NOT redistributed — the "leaky"
+    * PageRank variant; with a fixed round count both engines replay
+    * the identical recurrence, and a kNN graph has no dangling nodes
+    * anyway (every node emits k edges).
     *
     * A FIXED round count (not convergence-tested) keeps the operator
     * a pure dataflow: `rounds` unrolled join+aggregate stages, no
@@ -51,19 +55,19 @@ object GraphOps {
     def teleported(sums: DataFrame): DataFrame =
       vertices.crossJoin(broadcast(nDf))
         .join(sums, col("vid") === col("dst"), "left")
-        .select(col("vid"), round(
+        .select(col("vid"), roundDouble(
           lit(1.0 - damping) / col("n").cast("double") +
             lit(damping) * coalesce(col("s"),
               lit(0).cast("decimal(28,8)")).cast("double"), 8).as("r"))
     var r = vertices.crossJoin(broadcast(nDf))
-      .select(col("vid"), round(lit(1.0) / col("n").cast("double"), 8)
+      .select(col("vid"), roundDouble(lit(1.0) / col("n").cast("double"), 8)
         .as("r"))
     for (_ <- 1 to rounds) {
       val contrib = e
         .join(r.select(col("vid").as("src"), col("r")), Seq("src"))
         .join(deg, Seq("src"))
         .select(col("dst"),
-          round(col("r") / col("deg").cast("double"), 8).as("c"))
+          roundDouble(col("r") / col("deg").cast("double"), 8).as("c"))
       val sums = contrib.groupBy(col("dst"))
         .agg(sum(col("c").cast("decimal(28,8)")).as("s"))
       r = teleported(sums)
@@ -72,6 +76,6 @@ object GraphOps {
       .join(deg.select(col("src").as("vid"), col("deg")), Seq("vid"), "left")
       .join(r, Seq("vid"))
       .select(col("vid"), coalesce(col("deg"), lit(0L)).as("out_deg"),
-        round(col("r"), 6).as("pr"))
+        roundDouble(col("r"), 6).as("pr"))
   }
 }

@@ -42,26 +42,16 @@ object Packing {
     * counts) and [[ShuffleOrder.shuffleRank]] (ranks = prefix count
     * of ones).
     *
-    * The sorted partitions stay persisted for the session (like
-    * minhashPairs' signature table): the returned DataFrame is lazy,
-    * so there is no safe point inside this function to unpersist
-    * without forcing the caller's consumption to re-sort. Long-lived
-    * drivers that call this repeatedly should use
-    * [[exclusivePrefixSumReleasable]] and release once the result is
-    * consumed (or clear caches between runs — the bench does that).
+    * The sorted partitions stay persisted after return — the
+    * returned DataFrame is lazy and reads them, so there is no safe
+    * point inside this function to unpersist without forcing the
+    * caller's consumption to re-sort. They register with [[Staging]]:
+    * [[Staging.releaseAll]] frees them once the result is consumed
+    * (actions run after the release still succeed, but re-sort).
     */
-  def exclusivePrefixSum(rows: DataFrame): DataFrame =
-    exclusivePrefixSumReleasable(rows)._1
-
-  /** As [[exclusivePrefixSum]], plus a release handle that unpersists
-    * the sorted partitions backing the returned DataFrame. Call it
-    * after the result has been fully consumed (written/collected);
-    * actions run after release still succeed but re-sort.
-    */
-  def exclusivePrefixSumReleasable(rows: DataFrame): (DataFrame, () => Unit) = {
+  def exclusivePrefixSum(rows: DataFrame): DataFrame = {
     val spark = rows.sparkSession
     import spark.implicits._
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // Persist the compact rows BEFORE the range repartition:
     // RangePartitioner runs an eager SAMPLING job over its child to
     // pick bounds, then the shuffle-map job runs the child again —
@@ -86,7 +76,7 @@ object Packing {
         .repartitionByRange(col("k1"), col("k2"))
         .sortWithinPartitions(col("k1"), col("k2"))
         .as[(Long, Long, Long)]
-        .rdd.persist(lvl)
+        .rdd.persist(Staging.Level)
       val partTotals = sorted
         .mapPartitionsWithIndex { (i, it) =>
           var s = 0L
@@ -107,8 +97,8 @@ object Packing {
         (k1, k2, v, s)
       }
     }
-    (spark.createDataFrame(withStart).toDF("k1", "k2", "v", "start"),
-      () => { sorted.unpersist(false); () })
+    Staging.register(sorted)
+    spark.createDataFrame(withStart).toDF("k1", "k2", "v", "start")
   }
 
   /** Length-bucketed inference batching — the other packing shape:

@@ -2,6 +2,7 @@ package graft.datapipe
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
@@ -29,20 +30,26 @@ import org.apache.spark.storage.StorageLevel
   *
   * What bounds accumulation of staged frames across repeated
   * invocations:
-  *  - every staged frame registers here; [[releaseAll]] unpersists
-  *    everything staged so far (harness mains call it between
-  *    queries; library users call it once downstream actions have
-  *    consumed an operator's result);
+  *  - every staged frame registers here, and so does every RDD
+  *    barrier an operator's lazy result still reads (the final
+  *    label RDD of [[Dedup.clusters]], the sorted partitions of
+  *    [[Packing.exclusivePrefixSum]], BPE's last vocab frame);
+  *    [[releaseAll]] unpersists everything registered so far
+  *    (harness mains call it between queries; library users call
+  *    it once downstream actions have consumed an operator's
+  *    result);
   *  - `spark.catalog.clearCache()` is a coarser equivalent (drops ALL
   *    cached data, staged or not);
   *  - `MEMORY_AND_DISK` means an unreleased cache degrades to disk
   *    spill, never an executor OOM.
   */
 object Staging {
-  private val live = new ConcurrentLinkedQueue[DataFrame]()
+  // one release action per registered frame or RDD
+  private val live = new ConcurrentLinkedQueue[() => Unit]()
 
-  /** The one storage level of operator caches, staged or scoped. */
-  private val Level = StorageLevel.MEMORY_AND_DISK
+  /** The one storage level of operator caches: staged, scoped, and
+    * the RDD barriers of the iterative operators. */
+  private[datapipe] val Level = StorageLevel.MEMORY_AND_DISK
 
   /** Staging mechanism: `checkpoint` (default)
     * stages through `localCheckpoint(eager = false)` — the staged
@@ -54,8 +61,11 @@ object Staging {
     * nodes, 1.9k parquet-scan leaves for ONE query), and every AQE
     * job re-walks that tree on the driver; with checkpoint staging
     * the same query plans in hundreds of nodes. Both are
-    * MEMORY_AND_DISK-backed; the blocks live in
-    * `sparkContext.getPersistentRDDs`, which [[releaseAll]] sweeps.
+    * MEMORY_AND_DISK-backed, and [[releaseAll]] frees exactly what
+    * was registered here (a checkpoint's blocks through its
+    * underlying RDD); it does not sweep
+    * `sparkContext.getPersistentRDDs` —
+    * [[graft.GraftSession.dropCaches]] does that for the harnesses.
     * `persist` restores the cache-manager
     * path (the escape hatch — also what a fault-tolerant cluster
     * deployment may prefer: localCheckpoint blocks do not survive
@@ -90,8 +100,7 @@ object Staging {
     val p =
       if (mode(df) == "checkpoint") df.localCheckpoint(false)
       else df.persist(Level)
-    live.add(p)
-    p
+    register(p)
   }
 
   /** Cache `df` at MEMORY_AND_DISK for the duration of `body` only,
@@ -143,6 +152,8 @@ object Staging {
     *    unpersisted-but-usable (see [[release]]), so release-then-
     *    first-use stays correct in both modes. StagingSpec pins both
     *    behaviors.
+    *  - a registered RDD barrier only loses its blocks: a result that
+    *    still reads it recomputes from the RDD's lineage.
     *
     * The registry is PROCESS-wide: releaseAll() releases the staged
     * frames of every session in the JVM, so a call from one thread
@@ -155,15 +166,27 @@ object Staging {
     * once the frame is GC'd.
     */
   def releaseAll(): Unit = {
-    var df = live.poll()
-    while (df != null) { release(df); df = live.poll() }
+    var r = live.poll()
+    while (r != null) { r(); r = live.poll() }
   }
 
   /** Register an ALREADY-persisted frame for [[releaseAll]] — for
     * loop operators that persist per-round and hand back the final
     * round's frame (BPE's vocab loop).
     */
-  def register(df: DataFrame): DataFrame = { live.add(df); df }
+  def register(df: DataFrame): DataFrame = {
+    live.add(() => release(df))
+    df
+  }
+
+  /** Register an ALREADY-persisted RDD barrier for [[releaseAll]] —
+    * the final round of an RDD loop, or sorted partitions, that the
+    * operator's lazy result still reads. Released non-blocking.
+    */
+  def register[T](rdd: RDD[T]): RDD[T] = {
+    live.add(() => rdd.unpersist(false))
+    rdd
+  }
 
   /** `.stage()` chain syntax for [[persist]]. */
   implicit class Staged(private val df: DataFrame) extends AnyVal {

@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Engine-portable HALF_UP rounding of integer ratios.
+/** Engine-portable rounding: HALF_UP of integer ratios, and DuckDB's
+  * rounding of doubles ([[ExactRound.roundDouble]]).
   *
   * `round(a/b, d)` on a DOUBLE is not portable: Spark rounds the
   * shortest decimal repr of the double via BigDecimal HALF_UP, while
@@ -60,6 +61,22 @@ object ExactRound {
       b.cast("decimal(38,0)")).cast("decimal(38,12)")
     val den = b.cast("decimal(38,0)") * lit(2L)
     floor(try_divide(num, den))
+  }
+
+  /** round(x, `scale`) of a DOUBLE the way DuckDB computes it: the
+    * binary product x·10^scale rounded half away from zero, divided
+    * back by 10^scale. Catalyst's round(double, d) instead rounds the
+    * SHORTEST decimal repr of x half-up, and the two differ wherever
+    * x·10^scale lies just below a half in binary — round(0.0039215,
+    * 6) is 0.003921 in DuckDB, 0.003922 in Catalyst (the
+    * sim_graph_pagerank red). At scale 0 the two rules agree for
+    * |y| < 2^52 (a double's shortest repr ends in .5 only when the
+    * double IS that half), so Catalyst's round(y, 0) is the binary
+    * step. Oracle twin: `round(x, scale)`.
+    */
+  def roundDouble(x: Column, scale: Int): Column = {
+    val pow = lit(math.pow(10, scale))
+    round(x * pow, 0) / pow
   }
 
   // ----------------------------------------------------------------

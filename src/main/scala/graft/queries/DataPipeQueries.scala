@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
-import graft.datapipe.{BpeTokenizer, Chunker, Contamination, Dedup, LanguageModel, Packing, Relevance, Sampling, Staging, TextAnalysis}
+import graft.datapipe.{BpeTokenizer, Chunker, Contamination, Dedup, LanguageModel, Packing, Relevance, Sampling, TextAnalysis}
 import graft.functions.PromHistogram
 
 /** Queries for the training-data-pipeline operators (dedup, text
@@ -5163,11 +5163,8 @@ object DataPipeQueries {
       val docs = Tables.documents(s, d)
         .select(col("doc_id").as("id"), col("text"))
         .repartition(s.sparkContext.defaultParallelism)
-      Staging.scoped(Dedup.minhashIndexTable(docs, "id", "text", numHashes = 64)) { idx =>
-        idx.write.mode("overwrite").parquet(s"$path/hh")
-        Dedup.minhashBucketsTable(idx, numHashes = 64, bands = 32)
-          .write.mode("overwrite").parquet(s"$path/bb")
-      }
+      Dedup.minhashIndexWrite(docs, "id", "text", path,
+        numHashes = 64, bands = 32)
     }
     path
   }
@@ -5213,166 +5210,103 @@ object DataPipeQueries {
     * read day-1 results through the mutated table. The oracle
     * replays both days as exact cross-pair Jaccard, day 2 against
     * base ∪ day-1.
+    *
+    * With `compact`, the day-1 append is COMPACTED into a fresh index
+    * version ([[Dedup.minhashIndexCompact]]: MANIFEST swap, no
+    * re-hashing) before day 2 probes, so day 2 reads ONE rewritten
+    * root instead of base + delta dirs. Both forms share the oracle:
+    * compaction must be invisible in every output row.
     */
+  private def probeChain(s: org.apache.spark.sql.SparkSession, d: String,
+                         compact: Boolean): org.apache.spark.sql.DataFrame = {
+    val docs = Tables.documents(s, d)
+      .select(col("doc_id").as("id"), col("text"))
+      .repartition(s.sparkContext.defaultParallelism)
+    val toks = split(TextAnalysis.normalize(col("text")), " ")
+    val twin = array_join(slice(toks, lit(1), size(toks) - 1), " ")
+    val day1 = docs.filter(col("id") % 2 === 0)
+      .select((col("id") + 1000000).as("id"), twin.as("text"))
+    val day2 = docs.filter(col("id") % 2 === 0)
+      .select((col("id") + 2000000).as("id"), twin.as("text"))
+      .unionByName(docs.filter(col("id") % 2 === 1)
+        .select((col("id") + 3000000).as("id"), twin.as("text")))
+    // the base index is the content-keyed cache dedup_probe_
+    // materialized maintains; each run APPENDS, so it works on a
+    // file-level COPY — append idempotency is the caller's contract
+    // and a re-run must start from the un-appended base
+    val cached = ensureMinhashIndexCached(s, d)
+    val path = ScratchDirs.freshAppendScratch(
+      if (compact) "graft_probe_compact" else "graft_probe_append")
+    ScratchDirs.copyDir(s"$cached/hh", s"$path/hh")
+    ScratchDirs.copyDir(s"$cached/bb", s"$path/bb")
+    // the index is re-read per probe: day 2 must see the append (and,
+    // after a compaction, the MANIFEST's new version)
+    def probe(delta: org.apache.spark.sql.DataFrame) = {
+      val (hh, bb) = Dedup.readIndexTables(s, path)
+      Dedup.minhashProbePrebuilt(hh, bb, delta, "id", "text",
+        numHashes = 64, bands = 32, threshold = 0.8)
+    }
+    // day-1 verdicts published BEFORE the append mutates the index
+    probe(day1).write.mode("overwrite").parquet(s"$path/verdicts1")
+    Dedup.minhashIndexAppend(day1, "id", "text",
+      s"$path/hh", s"$path/bb", numHashes = 64, bands = 32)
+    if (compact) Dedup.minhashIndexCompact(s, path)
+    s.read.parquet(s"$path/verdicts1")
+      .select(lit(1L).as("day"), col("delta_id"), col("index_id"),
+        col("jaccard"))
+      .unionByName(probe(day2)
+        .select(lit(2L).as("day"), col("delta_id"), col("index_id"),
+          col("jaccard")))
+  }
+
+  private val probeChainOracle = """WITH docs0 AS (SELECT doc_id AS id, text FROM documents),
+      tok AS (SELECT id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w FROM docs0),
+      tw AS (SELECT id, array_to_string(w[1:len(w)-1], ' ') AS text FROM tok),
+      day1 AS (SELECT id + 1000000 AS id, text FROM tw WHERE id % 2 = 0),
+      day2 AS (SELECT id + 2000000 AS id, text FROM tw WHERE id % 2 = 0
+               UNION ALL
+               SELECT id + 3000000 AS id, text FROM tw WHERE id % 2 = 1),
+      idx2 AS (SELECT id, text FROM docs0 UNION ALL SELECT id, text FROM day1),
+      shB AS (SELECT DISTINCT id, array_to_string(w[i:i+2], ' ') AS shingle
+              FROM tok, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
+      tokI2 AS (SELECT id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w FROM idx2),
+      shI2 AS (SELECT DISTINCT id, array_to_string(w[i:i+2], ' ') AS shingle
+               FROM tokI2, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
+      tokD1 AS (SELECT id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w FROM day1),
+      shD1 AS (SELECT DISTINCT id, array_to_string(w[i:i+2], ' ') AS shingle
+               FROM tokD1, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
+      tokD2 AS (SELECT id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w FROM day2),
+      shD2 AS (SELECT DISTINCT id, array_to_string(w[i:i+2], ' ') AS shingle
+               FROM tokD2, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
+      szB AS (SELECT id, COUNT(*) AS n_sh FROM shB GROUP BY id),
+      szI2 AS (SELECT id, COUNT(*) AS n_sh FROM shI2 GROUP BY id),
+      szD1 AS (SELECT id, COUNT(*) AS n_sh FROM shD1 GROUP BY id),
+      szD2 AS (SELECT id, COUNT(*) AS n_sh FROM shD2 GROUP BY id),
+      c1 AS (SELECT d.id AS delta_id, i.id AS index_id, COUNT(*) AS n_common
+             FROM shD1 d JOIN shB i ON d.shingle = i.shingle GROUP BY 1, 2),
+      c2 AS (SELECT d.id AS delta_id, i.id AS index_id, COUNT(*) AS n_common
+             FROM shD2 d JOIN shI2 i ON d.shingle = i.shingle GROUP BY 1, 2),
+      v1 AS (SELECT CAST(1 AS BIGINT) AS day, delta_id, index_id,
+               CAST(n_common AS DOUBLE) / (sd.n_sh + si.n_sh - n_common) AS jaccard
+             FROM c1 JOIN szD1 sd ON sd.id = delta_id
+             JOIN szB si ON si.id = index_id
+             WHERE CAST(n_common AS DOUBLE) / (sd.n_sh + si.n_sh - n_common) >= 0.8),
+      v2 AS (SELECT CAST(2 AS BIGINT) AS day, delta_id, index_id,
+               CAST(n_common AS DOUBLE) / (sd.n_sh + si.n_sh - n_common) AS jaccard
+             FROM c2 JOIN szD2 sd ON sd.id = delta_id
+             JOIN szI2 si ON si.id = index_id
+             WHERE CAST(n_common AS DOUBLE) / (sd.n_sh + si.n_sh - n_common) >= 0.8)
+      SELECT * FROM v1 UNION ALL SELECT * FROM v2"""
+
   private val e2eProbeAppend = QueryDef(
     "e2e_probe_append",
-    (s, d) => {
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id").as("id"), col("text"))
-        .repartition(s.sparkContext.defaultParallelism)
-      val toks = split(TextAnalysis.normalize(col("text")), " ")
-      val twin = array_join(slice(toks, lit(1), size(toks) - 1), " ")
-      val day1 = docs.filter(col("id") % 2 === 0)
-        .select((col("id") + 1000000).as("id"), twin.as("text"))
-      val day2 = docs.filter(col("id") % 2 === 0)
-        .select((col("id") + 2000000).as("id"), twin.as("text"))
-        .unionByName(docs.filter(col("id") % 2 === 1)
-          .select((col("id") + 3000000).as("id"), twin.as("text")))
-      // the base index is the content-keyed cache dedup_probe_
-      // materialized maintains; each run APPENDS, so it works on a
-      // file-level COPY — append idempotency is the caller's contract
-      // and a re-run must start from the un-appended base
-      val cached = ensureMinhashIndexCached(s, d)
-      val path = ScratchDirs.freshAppendScratch("graft_probe_append")
-      ScratchDirs.copyDir(s"$cached/hh", s"$path/hh")
-      ScratchDirs.copyDir(s"$cached/bb", s"$path/bb")
-      def probe(delta: org.apache.spark.sql.DataFrame) =
-        Dedup.minhashProbePrebuilt(Dedup.readIndexTable(s, s"$path/hh"),
-          Dedup.readBucketsTable(s, s"$path/bb"), delta, "id", "text",
-          numHashes = 64, bands = 32, threshold = 0.8)
-      // day-1 verdicts published BEFORE the append mutates the index
-      probe(day1).write.mode("overwrite").parquet(s"$path/verdicts1")
-      Dedup.minhashIndexAppend(day1, "id", "text",
-        s"$path/hh", s"$path/bb", numHashes = 64, bands = 32)
-      s.read.parquet(s"$path/verdicts1")
-        .select(lit(1L).as("day"), col("delta_id"), col("index_id"),
-          col("jaccard"))
-        .unionByName(probe(day2)
-          .select(lit(2L).as("day"), col("delta_id"), col("index_id"),
-            col("jaccard")))
-    },
-    Some("""WITH docs0 AS (SELECT doc_id AS id, text FROM documents),
-      tok AS (SELECT id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w FROM docs0),
-      tw AS (SELECT id, array_to_string(w[1:len(w)-1], ' ') AS text FROM tok),
-      day1 AS (SELECT id + 1000000 AS id, text FROM tw WHERE id % 2 = 0),
-      day2 AS (SELECT id + 2000000 AS id, text FROM tw WHERE id % 2 = 0
-               UNION ALL
-               SELECT id + 3000000 AS id, text FROM tw WHERE id % 2 = 1),
-      idx2 AS (SELECT id, text FROM docs0 UNION ALL SELECT id, text FROM day1),
-      shB AS (SELECT DISTINCT id, array_to_string(w[i:i+2], ' ') AS shingle
-              FROM tok, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-      tokI2 AS (SELECT id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w FROM idx2),
-      shI2 AS (SELECT DISTINCT id, array_to_string(w[i:i+2], ' ') AS shingle
-               FROM tokI2, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-      tokD1 AS (SELECT id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w FROM day1),
-      shD1 AS (SELECT DISTINCT id, array_to_string(w[i:i+2], ' ') AS shingle
-               FROM tokD1, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-      tokD2 AS (SELECT id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w FROM day2),
-      shD2 AS (SELECT DISTINCT id, array_to_string(w[i:i+2], ' ') AS shingle
-               FROM tokD2, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-      szB AS (SELECT id, COUNT(*) AS n_sh FROM shB GROUP BY id),
-      szI2 AS (SELECT id, COUNT(*) AS n_sh FROM shI2 GROUP BY id),
-      szD1 AS (SELECT id, COUNT(*) AS n_sh FROM shD1 GROUP BY id),
-      szD2 AS (SELECT id, COUNT(*) AS n_sh FROM shD2 GROUP BY id),
-      c1 AS (SELECT d.id AS delta_id, i.id AS index_id, COUNT(*) AS n_common
-             FROM shD1 d JOIN shB i ON d.shingle = i.shingle GROUP BY 1, 2),
-      c2 AS (SELECT d.id AS delta_id, i.id AS index_id, COUNT(*) AS n_common
-             FROM shD2 d JOIN shI2 i ON d.shingle = i.shingle GROUP BY 1, 2),
-      v1 AS (SELECT CAST(1 AS BIGINT) AS day, delta_id, index_id,
-               CAST(n_common AS DOUBLE) / (sd.n_sh + si.n_sh - n_common) AS jaccard
-             FROM c1 JOIN szD1 sd ON sd.id = delta_id
-             JOIN szB si ON si.id = index_id
-             WHERE CAST(n_common AS DOUBLE) / (sd.n_sh + si.n_sh - n_common) >= 0.8),
-      v2 AS (SELECT CAST(2 AS BIGINT) AS day, delta_id, index_id,
-               CAST(n_common AS DOUBLE) / (sd.n_sh + si.n_sh - n_common) AS jaccard
-             FROM c2 JOIN szD2 sd ON sd.id = delta_id
-             JOIN szI2 si ON si.id = index_id
-             WHERE CAST(n_common AS DOUBLE) / (sd.n_sh + si.n_sh - n_common) >= 0.8)
-      SELECT * FROM v1 UNION ALL SELECT * FROM v2"""))
+    (s, d) => probeChain(s, d, compact = false),
+    Some(probeChainOracle))
 
-  /** The minhash COMPACTION leg ([[Dedup.minhashIndexCompact]]):
-    * exactly e2e_probe_append's two-day chain, but the day-1 append
-    * is COMPACTED into a fresh index version (MANIFEST swap, no
-    * re-hashing) before day 2 probes — so day 2 reads ONE rewritten
-    * root instead of base + delta dirs. The oracle is
-    * e2e_probe_append's VERBATIM: identical verdicts are the
-    * operator's whole contract (compaction must be invisible in
-    * every output row).
-    */
   private val e2eProbeCompact = QueryDef(
     "e2e_probe_compact",
-    (s, d) => {
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id").as("id"), col("text"))
-        .repartition(s.sparkContext.defaultParallelism)
-      val toks = split(TextAnalysis.normalize(col("text")), " ")
-      val twin = array_join(slice(toks, lit(1), size(toks) - 1), " ")
-      val day1 = docs.filter(col("id") % 2 === 0)
-        .select((col("id") + 1000000).as("id"), twin.as("text"))
-      val day2 = docs.filter(col("id") % 2 === 0)
-        .select((col("id") + 2000000).as("id"), twin.as("text"))
-        .unionByName(docs.filter(col("id") % 2 === 1)
-          .select((col("id") + 3000000).as("id"), twin.as("text")))
-      val cached = ensureMinhashIndexCached(s, d)
-      val path = ScratchDirs.freshAppendScratch("graft_probe_compact")
-      ScratchDirs.copyDir(s"$cached/hh", s"$path/hh")
-      ScratchDirs.copyDir(s"$cached/bb", s"$path/bb")
-      def probe(delta: org.apache.spark.sql.DataFrame) = {
-        val (hh, bb) = Dedup.readIndexTables(s, path)
-        Dedup.minhashProbePrebuilt(hh, bb, delta, "id", "text",
-          numHashes = 64, bands = 32, threshold = 0.8)
-      }
-      probe(day1).write.mode("overwrite").parquet(s"$path/verdicts1")
-      Dedup.minhashIndexAppend(day1, "id", "text",
-        s"$path/hh", s"$path/bb", numHashes = 64, bands = 32)
-      // fold base + the day-1 delta into one fresh version; day 2
-      // serves from the compacted root through the MANIFEST
-      Dedup.minhashIndexCompact(s, path)
-      s.read.parquet(s"$path/verdicts1")
-        .select(lit(1L).as("day"), col("delta_id"), col("index_id"),
-          col("jaccard"))
-        .unionByName(probe(day2)
-          .select(lit(2L).as("day"), col("delta_id"), col("index_id"),
-            col("jaccard")))
-    },
-    Some("""WITH docs0 AS (SELECT doc_id AS id, text FROM documents),
-      tok AS (SELECT id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w FROM docs0),
-      tw AS (SELECT id, array_to_string(w[1:len(w)-1], ' ') AS text FROM tok),
-      day1 AS (SELECT id + 1000000 AS id, text FROM tw WHERE id % 2 = 0),
-      day2 AS (SELECT id + 2000000 AS id, text FROM tw WHERE id % 2 = 0
-               UNION ALL
-               SELECT id + 3000000 AS id, text FROM tw WHERE id % 2 = 1),
-      idx2 AS (SELECT id, text FROM docs0 UNION ALL SELECT id, text FROM day1),
-      shB AS (SELECT DISTINCT id, array_to_string(w[i:i+2], ' ') AS shingle
-              FROM tok, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-      tokI2 AS (SELECT id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w FROM idx2),
-      shI2 AS (SELECT DISTINCT id, array_to_string(w[i:i+2], ' ') AS shingle
-               FROM tokI2, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-      tokD1 AS (SELECT id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w FROM day1),
-      shD1 AS (SELECT DISTINCT id, array_to_string(w[i:i+2], ' ') AS shingle
-               FROM tokD1, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-      tokD2 AS (SELECT id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w FROM day2),
-      shD2 AS (SELECT DISTINCT id, array_to_string(w[i:i+2], ' ') AS shingle
-               FROM tokD2, UNNEST(generate_series(1, len(w) - 2)) AS t(i)),
-      szB AS (SELECT id, COUNT(*) AS n_sh FROM shB GROUP BY id),
-      szI2 AS (SELECT id, COUNT(*) AS n_sh FROM shI2 GROUP BY id),
-      szD1 AS (SELECT id, COUNT(*) AS n_sh FROM shD1 GROUP BY id),
-      szD2 AS (SELECT id, COUNT(*) AS n_sh FROM shD2 GROUP BY id),
-      c1 AS (SELECT d.id AS delta_id, i.id AS index_id, COUNT(*) AS n_common
-             FROM shD1 d JOIN shB i ON d.shingle = i.shingle GROUP BY 1, 2),
-      c2 AS (SELECT d.id AS delta_id, i.id AS index_id, COUNT(*) AS n_common
-             FROM shD2 d JOIN shI2 i ON d.shingle = i.shingle GROUP BY 1, 2),
-      v1 AS (SELECT CAST(1 AS BIGINT) AS day, delta_id, index_id,
-               CAST(n_common AS DOUBLE) / (sd.n_sh + si.n_sh - n_common) AS jaccard
-             FROM c1 JOIN szD1 sd ON sd.id = delta_id
-             JOIN szB si ON si.id = index_id
-             WHERE CAST(n_common AS DOUBLE) / (sd.n_sh + si.n_sh - n_common) >= 0.8),
-      v2 AS (SELECT CAST(2 AS BIGINT) AS day, delta_id, index_id,
-               CAST(n_common AS DOUBLE) / (sd.n_sh + si.n_sh - n_common) AS jaccard
-             FROM c2 JOIN szD2 sd ON sd.id = delta_id
-             JOIN szI2 si ON si.id = index_id
-             WHERE CAST(n_common AS DOUBLE) / (sd.n_sh + si.n_sh - n_common) >= 0.8)
-      SELECT * FROM v1 UNION ALL SELECT * FROM v2"""))
+    (s, d) => probeChain(s, d, compact = true),
+    Some(probeChainOracle))
 
   /** Ingest-churn verdicts: delta = near-dup twins of every doc +
     * identical copies of the %7 docs + fully-rewritten (every token

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.datapipe.Staging.Staged
+
 /** Structured Streaming twins of the reference pipeline
   * (SURVEY.md §2.9, §3.1).
   *
@@ -411,42 +413,15 @@ object Streams {
                   numHashes: Int = 64, bands: Int = 32,
                   threshold: Double = 0.8): DataFrame = {
     import graft.datapipe.Dedup
-    import graft.datapipe.Staging.Staged
     Dedup.requireValidBanding(numHashes, bands)
-    val rowsPerBand = numHashes / bands
     val ihh = index.select(col(idCol).cast("long").as("index_id"),
-      array_sort(Dedup.hashedShingles(col(textCol), 3)).as("index_hh"))
+      array_sort(Dedup.hashedShingles(col(textCol), 3)).as("index_id_hh"))
       .stage()
-    val ibk = ihh.select(col("index_id"),
-      explode(Dedup.lshBuckets(
-        Dedup.minhashSignatureFromHashes(col("index_hh"), numHashes),
-        bands, rowsPerBand)).as("bb"))
-      .stage()
-    val sigged = delta.select(col(idCol).cast("long").as("delta_id"),
-      array_sort(Dedup.hashedShingles(col(textCol), 3)).as("delta_hh"),
-      col(tsCol).cast("timestamp").as("ts"))
-      .filter(col("delta_id").isNotNull && col("delta_hh").isNotNull)
-      .select(col("delta_id"), col("delta_hh"), col("ts"),
-        explode(Dedup.lshBuckets(
-          Dedup.minhashSignatureFromHashes(col("delta_hh"), numHashes),
-          bands, rowsPerBand)).as("bb"))
-    sigged
-      .join(ibk, Seq("bb"))
-      .join(ihh, Seq("index_id"))
-      .filter(size(col("delta_hh")) >= lit(threshold) * size(col("index_hh")) &&
-        size(col("index_hh")) >= lit(threshold) * size(col("delta_hh")))
-      .select(col("delta_id"), col("index_id"), col("ts"),
-        graft.functions.SortedIntersectCount
-          .column(col("delta_hh"), col("index_hh")).as("n_common"),
-        (size(col("delta_hh")) + size(col("index_hh")))
-          .cast("bigint").as("n_total"))
-      .select(col("delta_id"), col("index_id"),
-        (col("n_common").cast("double") /
-          (col("n_total") - col("n_common"))).as("jaccard"),
-        col("ts"))
-      .filter(col("jaccard") >= threshold)
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("delta_id", "index_id")
+    val ibk = Dedup.minhashBucketsTable(ihh.withColumn("sig",
+      Dedup.minhashSignatureFromHashes(col("index_id_hh"), numHashes)),
+      numHashes, bands).stage()
+    probeStaged(delta, ihh, ibk, idCol, textCol, tsCol, watermark,
+      numHashes, bands, threshold)
   }
 
   /** [[probeStream]] against the MATERIALIZED index tables
@@ -466,38 +441,36 @@ object Streams {
                           watermark: String = "30 seconds",
                           numHashes: Int = 64, bands: Int = 32,
                           threshold: Double = 0.8): DataFrame = {
-    import graft.datapipe.Dedup
-    import graft.datapipe.Staging.Staged
-    Dedup.requireValidBanding(numHashes, bands)
-    val rowsPerBand = numHashes / bands
+    graft.datapipe.Dedup.requireValidBanding(numHashes, bands)
     // array_compact restores the non-null element type a parquet
     // round-trip widens (the minhashProbePrebuilt note)
     val ihh = indexHh.select(col("index_id"),
-      array_compact(col("index_id_hh")).as("index_hh")).stage()
+      array_compact(col("index_id_hh")).as("index_id_hh")).stage()
     val ibk = indexBuckets.select(col("index_id"), col("bb")).stage()
-    val sigged = delta.select(col(idCol).cast("long").as("delta_id"),
+    probeStaged(delta, ihh, ibk, idCol, textCol, tsCol, watermark,
+      numHashes, bands, threshold)
+  }
+
+  // The stream probe both index sources share, over the staged
+  // (index_id, index_id_hh) and (index_id, bb) tables: arrivals hash
+  // and band, meet the bucket table and the hash table in two
+  // stream-static joins, pass the batch exact-Jaccard step, and dedup
+  // exact-once on (delta_id, index_id) within the watermark.
+  private def probeStaged(delta: DataFrame, ihh: DataFrame, ibk: DataFrame,
+                          idCol: String, textCol: String, tsCol: String,
+                          watermark: String, numHashes: Int, bands: Int,
+                          threshold: Double): DataFrame = {
+    import graft.datapipe.Dedup
+    val hashed = delta.select(col(idCol).cast("long").as("delta_id"),
       array_sort(Dedup.hashedShingles(col(textCol), 3)).as("delta_hh"),
       col(tsCol).cast("timestamp").as("ts"))
       .filter(col("delta_id").isNotNull && col("delta_hh").isNotNull)
-      .select(col("delta_id"), col("delta_hh"), col("ts"),
-        explode(Dedup.lshBuckets(
-          Dedup.minhashSignatureFromHashes(col("delta_hh"), numHashes),
-          bands, rowsPerBand)).as("bb"))
-    sigged
-      .join(ibk, Seq("bb"))
-      .join(ihh, Seq("index_id"))
-      .filter(size(col("delta_hh")) >= lit(threshold) * size(col("index_hh")) &&
-        size(col("index_hh")) >= lit(threshold) * size(col("delta_hh")))
-      .select(col("delta_id"), col("index_id"), col("ts"),
-        graft.functions.SortedIntersectCount
-          .column(col("delta_hh"), col("index_hh")).as("n_common"),
-        (size(col("delta_hh")) + size(col("index_hh")))
-          .cast("bigint").as("n_total"))
-      .select(col("delta_id"), col("index_id"),
-        (col("n_common").cast("double") /
-          (col("n_total") - col("n_common"))).as("jaccard"),
-        col("ts"))
-      .filter(col("jaccard") >= threshold)
+    val sigged = Dedup.bandKeys(hashed, Seq("delta_id", "delta_hh", "ts"),
+      Dedup.minhashSignatureFromHashes(col("delta_hh"), numHashes),
+      numHashes, bands)
+    Dedup.exactJaccard(sigged.join(ibk, Seq("bb")).join(ihh, Seq("index_id")),
+      "delta_hh", "index_id_hh", threshold,
+      "delta_id", "index_id", "jaccard", "ts")
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("delta_id", "index_id")
   }

@@ -2,8 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
-import graft.datapipe.{Dedup, Staging, TextAnalysis}
+import graft.{Bench, GraftSession}
+import graft.datapipe.{Dedup, TextAnalysis}
 import graft.sources.Tables
 
 /** SCALE harness for the incremental-ingest family with TODAY'S-CRAWL
@@ -45,16 +45,9 @@ object TimeFixedDelta {
             .as("text")))
 
     def time(name: String)(mk: => org.apache.spark.sql.DataFrame): Unit = {
-      mk.write.format("noop").mode("overwrite").save() // warm
-      GraftSession.dropCaches(spark)
-      val runs = (1 to 2).map { _ =>
-        System.gc()
-        val t0 = System.nanoTime()
-        mk.write.format("noop").mode("overwrite").save()
-        GraftSession.dropCaches(spark)
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"FIXED-DELTA $name%-14s ${runs.min}%6.2f s  (runs: ${runs.map(r => f"$r%.2f").mkString(", ")})")
+      def run(): Unit = mk.write.format("noop").mode("overwrite").save()
+      val (_, runs) = Bench.warmThenTime(spark)(run())(run())
+      println(f"FIXED-DELTA $name%-14s ${runs.min}%6.2f s  ${Bench.runsNote(runs)}")
     }
 
     time("ingest_churn")(Dedup.ingestChurn(index, delta, "id", "text"))
@@ -66,11 +59,7 @@ object TimeFixedDelta {
     // and minhash_probe is exactly the per-run index re-hash cost.
     val idxPath = java.nio.file.Files
       .createTempDirectory("graft_fixed_delta_idx").toString
-    Staging.scoped(Dedup.minhashIndexTable(index, "id", "text", numHashes = 64)) { idx =>
-      idx.write.mode("overwrite").parquet(s"$idxPath/hh")
-      Dedup.minhashBucketsTable(idx).write.mode("overwrite")
-        .parquet(s"$idxPath/bb")
-    }
+    Dedup.minhashIndexWrite(index, "id", "text", idxPath)
     time("probe_prebuilt")(Dedup.minhashProbePrebuilt(
       spark.read.parquet(s"$idxPath/hh"), spark.read.parquet(s"$idxPath/bb"),
       delta, "id", "text",
@@ -78,16 +67,13 @@ object TimeFixedDelta {
     // the APPEND leg (round-15): folding the probed delta into the
     // index must cost delta-hash + delta-write — independent of the
     // standing index size (parquet append adds files, rewrites
-    // nothing). Timed against the real materialized dir; repeated
-    // runs only accumulate small delta files.
-    val appendRuns = (1 to 2).map { _ =>
-      GraftSession.dropCaches(spark); System.gc()
-      val t0 = System.nanoTime()
+    // nothing). Timed against the real materialized dir with no
+    // warm-up; repeated runs only accumulate small delta files.
+    val (_, appendRuns) = Bench.warmThenTime(spark)(()) {
       Dedup.minhashIndexAppend(delta, "id", "text",
         s"$idxPath/hh", s"$idxPath/bb", numHashes = 64, bands = 32)
-      (System.nanoTime() - t0) / 1e9
     }
-    println(f"FIXED-DELTA index_append   ${appendRuns.min}%6.2f s  (runs: ${appendRuns.map(r => f"$r%.2f").mkString(", ")})")
+    println(f"FIXED-DELTA index_append   ${appendRuns.min}%6.2f s  ${Bench.runsNote(appendRuns)}")
     spark.stop()
   }
 }

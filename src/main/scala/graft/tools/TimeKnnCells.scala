@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
+import graft.{Bench, GraftSession}
 import graft.datapipe.Similarity
 import graft.sources.Tables
 
@@ -32,17 +32,11 @@ object TimeKnnCells {
         col("embedding").cast("array<double>").as("emb"))
     for (c <- cells) {
       def mk() = Similarity.knnGraph(emb, k = 5, cells = c, iters = 3)
-      val edges = mk().count() // warm + the recall-side readout
-      GraftSession.dropCaches(spark)
-      val runs = (1 to 2).map { _ =>
-        System.gc()
-        val t0 = System.nanoTime()
-        mk().write.format("noop").mode("overwrite").save()
-        GraftSession.dropCaches(spark)
-        (System.nanoTime() - t0) / 1e9
-      }
+      // the warm-up is the recall-side readout
+      val (edges, runs) = Bench.warmThenTime(spark)(mk().count())(
+        mk().write.format("noop").mode("overwrite").save())
       val label = if (c == 0) "auto" else c.toString
-      println(f"KNN-CELLS cells=$label%-4s edges=$edges%8d  ${runs.min}%6.2f s  (runs: ${runs.map(r => f"$r%.2f").mkString(", ")})")
+      println(f"KNN-CELLS cells=$label%-4s edges=$edges%8d  ${runs.min}%6.2f s  ${Bench.runsNote(runs)}")
     }
     spark.stop()
   }

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
+import graft.{Bench, GraftSession}
 import graft.datapipe.{Similarity, VectorIndex}
 import graft.sources.Tables
 
@@ -31,14 +31,8 @@ object TimeVecIndex {
     spark.sparkContext.setLogLevel("ERROR")
 
     def time(label: String)(body: => Unit): Unit = {
-      body; GraftSession.dropCaches(spark) // warm
-      val runs = (1 to 2).map { _ =>
-        System.gc()
-        val t0 = System.nanoTime()
-        body; GraftSession.dropCaches(spark)
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"VEC-INDEX $label%-22s ${runs.min}%7.2f s  (runs: ${runs.map(r => f"$r%.2f").mkString(", ")})")
+      val (_, runs) = Bench.warmThenTime(spark)(body)(body)
+      println(f"VEC-INDEX $label%-22s ${runs.min}%7.2f s  ${Bench.runsNote(runs)}")
     }
 
     for (d <- dirs) {

@@ -75,4 +75,36 @@ class ExactRoundSpec extends SparkSpec {
       }
     }
   }
+
+  // (x, scale, DuckDB 1.0's `round(x, scale)`): binary-half ties where
+  // x·10^scale sits just below .5 (DuckDB rounds down, Catalyst's
+  // shortest-repr round goes up), ties that sit above it, and exact
+  // halves at scale 0, which round away from zero in both engines
+  private val duckdbRounds: Seq[(Double, Int, Double)] = Seq(
+    (0.0039215, 6, 0.003921),
+    (-0.0039215, 6, -0.003921),
+    (0.0009845, 6, 0.000984),
+    (0.0632845, 6, 0.063284),
+    (0.000127745, 8, 0.00012774),
+    (0.000565185, 8, 0.00056518),
+    (0.0776795, 6, 0.07768),
+    (0.000820155, 8, 0.00082016),
+    (2.5, 0, 3.0),
+    (-2.5, 0, -3.0),
+    (0.5, 0, 1.0))
+
+  test("roundDouble == DuckDB's round(double, d) on binary ties") {
+    for ((x, scale, want) <- duckdbRounds) {
+      // repartition: evaluate in a codegen'd stage, as the queries do,
+      // not by folding over the local relation
+      val row = Seq(x).toDF("x").repartition(1)
+        .select(ExactRound.roundDouble(col("x"), scale).as("r"),
+          round(col("x"), scale).as("catalyst"))
+        .collect().head
+      assert(row.getDouble(0) == want, s"roundDouble($x, $scale)")
+      // the helper exists because Catalyst's own round differs here
+      if (x == 0.0039215)
+        assert(row.getDouble(1) == 0.003922, "Catalyst rounds the repr")
+    }
+  }
 }

@@ -257,17 +257,17 @@ class PackingSpec extends SparkSpec {
       (2L, 0L, 0L, None)))
   }
 
-  test("prefix-sum release handle unpersists the sorted partitions") {
+  test("Staging.releaseAll unpersists the prefix sum's sorted partitions") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (out, release) = Packing.exclusivePrefixSumReleasable(
+    val out = Packing.exclusivePrefixSum(
       Seq((1L, 0L, 3L), (2L, 0L, 4L)).toDF("k1", "k2", "v"))
     assert(out.select(col("k1"), col("start")).as[(Long, Long)]
       .collect().sortBy(_._1).toSeq === Seq((1L, 0L), (2L, 3L)))
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(added.nonEmpty, "the sorted partitions must be persisted while live")
-    release()
+    graft.datapipe.Staging.releaseAll()
     assert((spark.sparkContext.getPersistentRDDs.keySet & added).isEmpty,
-      "release must unpersist the sorted partitions")
+      "releaseAll must unpersist the sorted partitions")
   }
 
   test("contamination hits the planted extremes and stays in [0,1]") {

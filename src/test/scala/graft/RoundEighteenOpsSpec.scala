@@ -150,10 +150,7 @@ class RoundEighteenOpsSpec extends SparkSpec {
       .toDF("id", "text")
     val root = java.nio.file.Files
       .createTempDirectory("graft_minhash_orphan").toString
-    val idx0 = Dedup.minhashIndexTable(base, "id", "text", numHashes = 64)
-    idx0.write.mode("overwrite").parquet(s"$root/hh")
-    Dedup.minhashBucketsTable(idx0).write.mode("overwrite")
-      .parquet(s"$root/bb")
+    Dedup.minhashIndexWrite(base, "id", "text", root)
     Dedup.minhashIndexCompact(spark, root) // → v1; flat paths superseded
     def probe() = {
       val (hh, bb) = Dedup.readIndexTables(spark, root)
@@ -221,10 +218,7 @@ class RoundEighteenOpsSpec extends SparkSpec {
       .toDF("id", "text")
     val root = java.nio.file.Files
       .createTempDirectory("graft_minhash_stats").toString
-    val idx0 = Dedup.minhashIndexTable(docs, "id", "text", numHashes = 64)
-    idx0.write.mode("overwrite").parquet(s"$root/hh")
-    Dedup.minhashBucketsTable(idx0).write.mode("overwrite")
-      .parquet(s"$root/bb")
+    Dedup.minhashIndexWrite(docs, "id", "text", root)
     Dedup.minhashIndexAppendRoot(
       Seq((11L, "a third document unlike either of the first two docs"))
         .toDF("id", "text"),

@@ -31,9 +31,7 @@ class RoundFifteenOpsSpec extends SparkSpec {
       .toDF("id", "text")
     val dir = java.nio.file.Files
       .createTempDirectory("graft_append_spec").toString
-    val idx = Dedup.minhashIndexTable(base, "id", "text", numHashes = 64)
-    idx.write.mode("overwrite").parquet(s"$dir/hh")
-    Dedup.minhashBucketsTable(idx).write.mode("overwrite").parquet(s"$dir/bb")
+    Dedup.minhashIndexWrite(base, "id", "text", dir)
     Dedup.minhashIndexAppend(day1, "id", "text", s"$dir/hh", s"$dir/bb",
       numHashes = 64, bands = 32)
     val got = Dedup.minhashProbePrebuilt(

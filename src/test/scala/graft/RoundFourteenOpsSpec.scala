@@ -151,9 +151,7 @@ class RoundFourteenOpsSpec extends SparkSpec {
       .toSet
     val dir = java.nio.file.Files
       .createTempDirectory("graft_probe_prebuilt_spec").toString
-    val idx = Dedup.minhashIndexTable(base, "id", "text", numHashes = 64)
-    idx.write.mode("overwrite").parquet(s"$dir/hh")
-    Dedup.minhashBucketsTable(idx).write.mode("overwrite").parquet(s"$dir/bb")
+    Dedup.minhashIndexWrite(base, "id", "text", dir)
     val got = Dedup.minhashProbePrebuilt(
         spark.read.parquet(s"$dir/hh"), spark.read.parquet(s"$dir/bb"),
         delta, "id", "text", numHashes = 64, bands = 32, threshold = 0.5)

@@ -87,10 +87,7 @@ class RoundSeventeenOpsSpec extends SparkSpec {
       .toDF("id", "text")
     val dir = java.nio.file.Files
       .createTempDirectory("graft_minhash_torn").toString
-    val idx = Dedup.minhashIndexTable(base, "id", "text", numHashes = 64)
-    idx.write.mode("overwrite").parquet(s"$dir/hh")
-    Dedup.minhashBucketsTable(idx).write.mode("overwrite")
-      .parquet(s"$dir/bb")
+    Dedup.minhashIndexWrite(base, "id", "text", dir)
     def probe() = Dedup.minhashProbePrebuilt(
         Dedup.readIndexTable(spark, s"$dir/hh"),
         Dedup.readBucketsTable(spark, s"$dir/bb"),
@@ -232,10 +229,7 @@ class RoundSeventeenOpsSpec extends SparkSpec {
       .toDF("id", "text")
     val dir = java.nio.file.Files
       .createTempDirectory("graft_minhash_heal").toString
-    val idx0 = Dedup.minhashIndexTable(base, "id", "text", numHashes = 64)
-    idx0.write.mode("overwrite").parquet(s"$dir/hh")
-    Dedup.minhashBucketsTable(idx0).write.mode("overwrite")
-      .parquet(s"$dir/bb")
+    Dedup.minhashIndexWrite(base, "id", "text", dir)
     def probe() = Dedup.minhashProbePrebuilt(
         Dedup.readIndexTable(spark, s"$dir/hh"),
         Dedup.readBucketsTable(spark, s"$dir/bb"),
@@ -356,10 +350,7 @@ class RoundSeventeenOpsSpec extends SparkSpec {
       .toDF("id", "text")
     val root = java.nio.file.Files
       .createTempDirectory("graft_minhash_compact").toString
-    val idx0 = Dedup.minhashIndexTable(base, "id", "text", numHashes = 64)
-    idx0.write.mode("overwrite").parquet(s"$root/hh")
-    Dedup.minhashBucketsTable(idx0).write.mode("overwrite")
-      .parquet(s"$root/bb")
+    Dedup.minhashIndexWrite(base, "id", "text", root)
     def probe() = {
       val (hh, bb) = Dedup.readIndexTables(spark, root)
       Dedup.minhashProbePrebuilt(hh, bb, probeDocs, "id", "text",

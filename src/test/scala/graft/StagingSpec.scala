@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.datapipe.Staging
+import graft.datapipe.{Dedup, Packing, Staging}
 
 /** The release contract of [[Staging]] under both staging modes —
   * pinned because the checkpoint default (r18) NARROWED it and the
@@ -87,5 +87,29 @@ class StagingSpec extends SparkSpec {
     }
     assert(e.getMessage === "body failed")
     assert(df.storageLevel === StorageLevel.NONE)
+  }
+
+  test("releaseAll frees the RDD barriers the clusters and prefix-sum " +
+    "results read lazily") {
+    val sp = spark
+    import sp.implicits._
+    Staging.releaseAll()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val docs = (1L to 6L).map(Tuple1(_)).toDF("id")
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a_id", "b_id")
+    val labels = Dedup.clusters(docs, "id", pairs)
+      .as[(Long, Long)].collect().toMap
+    assert(labels === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L,
+      5L -> 5L, 6L -> 5L))
+    val starts = Packing.exclusivePrefixSum(
+        Seq((1L, 0L, 3L), (2L, 0L, 4L)).toDF("k1", "k2", "v"))
+      .select(col("k1"), col("start")).as[(Long, Long)].collect().toMap
+    assert(starts === Map(1L -> 0L, 2L -> 3L))
+    assert((sc.getPersistentRDDs.keySet -- before).nonEmpty,
+      "the label and sorted RDDs stay persisted until released")
+    Staging.releaseAll()
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty, s"releaseAll left persisted RDDs: ${left.values.mkString(", ")}")
   }
 }

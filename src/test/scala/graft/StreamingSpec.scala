@@ -268,10 +268,7 @@ class StreamingSpec extends SparkSpec {
       .replaceFirst("w0", "zz"))
     val d2 = (199L, (0 to 30).map(j => s"v$j").mkString(" "))
     val dir = Files.createTempDirectory("graft_probe_stream_idx").toString
-    val idx = Dedup.minhashIndexTable(index, "id", "text", numHashes = 64)
-    idx.write.mode("overwrite").parquet(s"$dir/hh")
-    Dedup.minhashBucketsTable(idx, numHashes = 64, bands = 16)
-      .write.mode("overwrite").parquet(s"$dir/bb")
+    Dedup.minhashIndexWrite(index, "id", "text", dir, bands = 16)
     val in = MemoryStream[(Long, String, Timestamp)]
     val q = Streams.probeStreamPrebuilt(in.toDF().toDF("id", "text", "ts"),
       spark.read.parquet(s"$dir/hh"), spark.read.parquet(s"$dir/bb"),
@@ -1729,10 +1726,7 @@ class StreamingSpec extends SparkSpec {
       (11L, "nothing like anything in the base corpus at all whatsoever"))
       .toDF("id", "text")
     val root = Files.createTempDirectory("graft_probe_compact_stream").toString
-    val idx0 = Dedup.minhashIndexTable(base, "id", "text", numHashes = 64)
-    idx0.write.mode("overwrite").parquet(s"$root/hh")
-    Dedup.minhashBucketsTable(idx0).write.mode("overwrite")
-      .parquet(s"$root/bb")
+    Dedup.minhashIndexWrite(base, "id", "text", root)
     // the delta the compaction must keep serving: committed as an
     // append, folded into the new version by the compact
     Dedup.minhashIndexAppendRoot(day1, "id", "text", root,
