@@ -401,6 +401,8 @@ object ShuffleOrder {
                      sourceCol: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val enc = lit(1L << 40)
+    // single-partition window is BOUNDED: it numbers the distinct
+    // sources, so it sees one row per source at any corpus size
     val srcIdx = docs.select(sourceCol.as("source")).distinct()
       .withColumn("src_idx",
         (row_number().over(Window.orderBy(col("source"))) - 1).cast("long"))

@@ -131,6 +131,8 @@ object Relevance {
     val ord =
       if (ascending) Seq(col(scoreCol).asc_nulls_last, col(idCol).asc)
       else Seq(col(scoreCol).desc_nulls_last, col(idCol).asc)
+    // single-partition window is BOUNDED: its input is the limit(n)
+    // above, at most n rows at any corpus size
     scored.orderBy(ord: _*).limit(n)
       .select(col(idCol),
         row_number().over(Window.orderBy(ord: _*)).cast("bigint").as("r"))
@@ -519,6 +521,8 @@ object Relevance {
       .select(col("rep"),
         graft.functions.ExactRound.ratio6(col("num"), col("den"))
           .as("est"))
+      // single-partition windows are BOUNDED: `perRep` is grouped by
+      // rep, drawn from sequence(0, reps - 1), so at most `reps` rows
       .withColumn("rn", row_number().over(
         Window.orderBy(col("est").asc, col("rep").asc)).cast("bigint"))
       .withColumn("nb", count(lit(1)).over(
@@ -633,6 +637,8 @@ object Relevance {
         (graft.functions.ExactRound.ratio6(col("na"), col("den")) -
           graft.functions.ExactRound.ratio6(col("nb"), col("den")))
           .as("delta"))
+      // single-partition windows are BOUNDED: at most `reps` rows, one
+      // per bootstrap replicate (grouped by rep, as above)
       .withColumn("rn", row_number().over(
         Window.orderBy(col("delta").asc, col("rep").asc)).cast("bigint"))
       .withColumn("cnt", count(lit(1)).over(

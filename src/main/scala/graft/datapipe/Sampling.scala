@@ -496,6 +496,8 @@ object Sampling {
       .agg(sum(tokens).cast("bigint").as("n_tokens"))
     val tot = counts.agg(sum(col("n_tokens")).as("budget"),
       count(lit(1)).as("n_sources"))
+    // the windows below are single-partition and BOUNDED: `counts` is
+    // grouped by source, so they see one row per source, never the corpus
     val ord = Window.orderBy(col("cap").asc, col("source").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val all = Window.partitionBy(lit(1))
@@ -748,6 +750,8 @@ object Sampling {
       .withColumn("rem", col("alloc_raw") - col("base").cast("double"))
     val leftover = shares.agg(
       (lit(budget) - sum(col("base"))).as("leftover"))
+    // single-partition window is BOUNDED: `shares` descends from `m`,
+    // grouped by stratum, so it ranks one row per stratum
     shares.crossJoin(broadcast(leftover))
       .withColumn("rk", row_number().over(
         Window.orderBy(col("rem").desc, col("stratum").asc)).cast("bigint"))

@@ -1,140 +1,35 @@
 package graft.model
 
-import java.io.ByteArrayOutputStream
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.avro.Schema
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.io.{BinaryDecoder, BinaryEncoder, DecoderFactory, EncoderFactory}
+import graft.functions.{TradeAvroRowCodec, TradeAvroRows}
 
 /** TradeEvent ↔ Avro binary, the engine's stand-in for the reference's
   * registry Avro serializer/deserializer (producer:
   * kafka_producer/app/handlers/kafka_producer.py:93-132; consumer:
-  * kafka_consumer/app/handlers/kafka_consumer.py:44-55).
+  * kafka_consumer/app/handlers/kafka_consumer.py:44-55), for callers
+  * that hold `TradeEvent` objects rather than rows.
   *
-  * Plain-Scala codec (avro core ships with the Spark distribution) —
-  * used from `Dataset.mapPartitions` so the writer/reader/encoder are
-  * constructed once per partition, the same amortization the
-  * reference gets from its pooled serializer. See
-  * [[graft.ops.TradeAvroOps]] for the Dataset-level operators.
+  * It is the row codec of [[graft.functions.TradeAvroRows]] — the one
+  * schema walk the Dataset operators in [[graft.ops.TradeAvroOps]] run —
+  * behind `TradeEvent`'s Catalyst encoder: encode serializes the event to
+  * a row and writes it; decode reads a row and deserializes it. So both
+  * paths produce the same bytes. One instance holds reusable buffers and
+  * is not thread-safe: keep one per thread, as the reference pools its
+  * serializer.
   */
 final class AvroCodec {
-  private val schema = TradeAvro.tradeEventSchema
-  private val writer = new GenericDatumWriter[GenericRecord](schema)
-  private val reader = new GenericDatumReader[GenericRecord](schema)
-  private val out = new ByteArrayOutputStream(512)
-  private var encoder: BinaryEncoder = _
-  private var decoder: BinaryDecoder = _
+  private val encoder = ExpressionEncoder[TradeEvent]()
+  private val toRow = encoder.createSerializer()
+  private val fromRow = encoder
+    .resolveAndBind(DataTypeUtils.toAttributes(TradeAvroRows.eventType))
+    .createDeserializer()
+  private val rows = new TradeAvroRowCodec(encoder.schema)
 
-  // --- case class → GenericRecord -------------------------------
+  def encode(ev: TradeEvent): Array[Byte] = rows.encode(toRow(ev))
 
-  private def tradeDataRecord(s: Schema, td: TradeData): GenericRecord = {
-    val r = new GenericData.Record(s)
-    r.put("Trade_Id", td.Trade_Id)
-    r.put("Trade_Condition", td.Trade_Condition.map(_.asJava).orNull)
-    r.put("Price", td.Price)
-    r.put("Symbol", td.Symbol)
-    r.put("Event_Timestamp", td.Event_Timestamp)
-    r.put("Volume", td.Volume)
-    r
-  }
-
-  private def credentialRecord(tc: TradeCredential): GenericRecord = {
-    val s = TradeAvro.tradeCredentialSchema
-    val r = new GenericData.Record(s)
-    r.put("context", tc.context.asJava)
-    r.put("id", tc.id)
-    r.put("issuanceDate", tc.issuanceDate)
-    val issuer = new GenericData.Record(TradeAvro.issuerSchema)
-    issuer.put("id", tc.issuer.id)
-    r.put("issuer", issuer)
-    val claims = new GenericData.Record(TradeAvro.claimsSchema)
-    claims.put("TradeData", tradeDataRecord(
-      TradeAvro.claimsSchema.getField("TradeData").schema(),
-      tc.credentialSubject.claims.TradeData))
-    val subject = new GenericData.Record(TradeAvro.credentialSubjectSchema)
-    subject.put("id", tc.credentialSubject.id)
-    subject.put("claims", claims)
-    r.put("credentialSubject", subject)
-    val proof = new GenericData.Record(TradeAvro.proofSchema)
-    proof.put("jwt", tc.proof.jwt)
-    proof.put("type", tc.proof.`type`)
-    r.put("proof", proof)
-    r.put("type", tc.`type`.asJava)
-    r
-  }
-
-  private def toRecord(ev: TradeEvent): GenericRecord = {
-    val r = new GenericData.Record(schema)
-    r.put("start_timestamp", ev.start_timestamp)
-    r.put("symbol", ev.symbol)
-    r.put("trade_event_id", ev.trade_event_id)
-    val rawSchema = schema.getField("tradeData").schema().getTypes.get(1)
-    r.put("tradeData", ev.tradeData.map(tradeDataRecord(rawSchema, _)).orNull)
-    r.put("tradeCredential", ev.tradeCredential.map(credentialRecord).orNull)
-    r
-  }
-
-  // --- GenericRecord → case class -------------------------------
-
-  private def str(r: GenericRecord, f: String): String = {
-    val v = r.get(f)
-    if (v == null) null else v.toString
-  }
-
-  private def strSeq(v: AnyRef): Seq[String] =
-    v.asInstanceOf[java.util.List[AnyRef]].asScala.map(_.toString).toSeq
-
-  private def toTradeData(r: GenericRecord): TradeData =
-    TradeData(
-      Trade_Id = str(r, "Trade_Id"),
-      Trade_Condition = Option(r.get("Trade_Condition")).map(strSeq),
-      Price = r.get("Price").asInstanceOf[Double],
-      Symbol = str(r, "Symbol"),
-      Event_Timestamp = r.get("Event_Timestamp").asInstanceOf[Long],
-      Volume = r.get("Volume").asInstanceOf[Double])
-
-  private def toCredential(r: GenericRecord): TradeCredential = {
-    val subject = r.get("credentialSubject").asInstanceOf[GenericRecord]
-    val claims = subject.get("claims").asInstanceOf[GenericRecord]
-    val proof = r.get("proof").asInstanceOf[GenericRecord]
-    TradeCredential(
-      context = strSeq(r.get("context")),
-      id = str(r, "id"),
-      issuanceDate = str(r, "issuanceDate"),
-      issuer = Issuer(str(r.get("issuer").asInstanceOf[GenericRecord], "id")),
-      credentialSubject = CredentialSubject(
-        id = str(subject, "id"),
-        claims = Claims(toTradeData(claims.get("TradeData").asInstanceOf[GenericRecord]))),
-      proof = Proof(jwt = str(proof, "jwt"), `type` = str(proof, "type")),
-      `type` = strSeq(r.get("type")))
-  }
-
-  private def toEvent(r: GenericRecord): TradeEvent =
-    TradeEvent(
-      start_timestamp = str(r, "start_timestamp"),
-      symbol = str(r, "symbol"),
-      trade_event_id = str(r, "trade_event_id"),
-      tradeData = Option(r.get("tradeData"))
-        .map(v => toTradeData(v.asInstanceOf[GenericRecord])),
-      tradeCredential = Option(r.get("tradeCredential"))
-        .map(v => toCredential(v.asInstanceOf[GenericRecord])))
-
-  // --- binary roundtrip -----------------------------------------
-
-  def encode(ev: TradeEvent): Array[Byte] = {
-    out.reset()
-    encoder = EncoderFactory.get().binaryEncoder(out, encoder)
-    writer.write(toRecord(ev), encoder)
-    encoder.flush()
-    out.toByteArray
-  }
-
-  def decode(bytes: Array[Byte]): TradeEvent = {
-    decoder = DecoderFactory.get().binaryDecoder(bytes, decoder)
-    toEvent(reader.read(null, decoder))
-  }
+  def decode(bytes: Array[Byte]): TradeEvent = fromRow(rows.decode(bytes))
 
   // --- Confluent Schema Registry wire format --------------------
   // The reference serializes through the registry client
@@ -146,29 +41,12 @@ final class AvroCodec {
   // wire-true.
 
   /** Framed encode: 0x0 magic + big-endian schema id + Avro binary. */
-  def encodeWire(ev: TradeEvent, schemaId: Int): Array[Byte] = {
-    val payload = encode(ev)
-    val framed = new Array[Byte](5 + payload.length)
-    framed(0) = 0x0
-    framed(1) = (schemaId >>> 24).toByte
-    framed(2) = (schemaId >>> 16).toByte
-    framed(3) = (schemaId >>> 8).toByte
-    framed(4) = schemaId.toByte
-    System.arraycopy(payload, 0, framed, 5, payload.length)
-    framed
-  }
+  def encodeWire(ev: TradeEvent, schemaId: Int): Array[Byte] =
+    rows.encodeWire(toRow(ev), schemaId)
 
   /** Framed decode: validates the magic byte (a non-registry frame
     * fails LOUDLY, like the reference deserializer), returns
     * (schema id, event). */
-  def decodeWire(bytes: Array[Byte]): (Int, TradeEvent) = {
-    require(bytes.length >= 5 && bytes(0) == 0x0,
-      s"not a registry-framed message (len=${bytes.length}, " +
-        s"magic=${if (bytes.isEmpty) "<empty>" else bytes(0).toString})")
-    val id = ((bytes(1) & 0xff) << 24) | ((bytes(2) & 0xff) << 16) |
-      ((bytes(3) & 0xff) << 8) | (bytes(4) & 0xff)
-    decoder = DecoderFactory.get()
-      .binaryDecoder(bytes, 5, bytes.length - 5, decoder)
-    (id, toEvent(reader.read(null, decoder)))
-  }
+  def decodeWire(bytes: Array[Byte]): (Int, TradeEvent) =
+    (rows.schemaId(bytes), fromRow(rows.decodeAt(bytes, 5)))
 }

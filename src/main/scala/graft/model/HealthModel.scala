@@ -40,7 +40,8 @@ final case class HealthSensorRecord(
 /** The HealthSensorRecord Avro schema (programmatic, same shape and
   * namespace as the avsc) plus a binary codec — the health twin of
   * [[TradeAvro]]/[[AvroCodec]]. One instance per partition
-  * (reusable writer/reader/buffer), like the trade codec.
+  * (reusable writer/reader/buffer); unlike the trade codec, it still
+  * runs over objects in `mapPartitions`.
   */
 object HealthAvro {
 

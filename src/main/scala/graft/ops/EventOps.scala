@@ -70,10 +70,9 @@ object EventOps {
     Observe.parseMetrics(parsed, "frame.type", Seq("trade"))
       .filter(col("frame.type") === "trade")
       .select(explode(col("frame.data")).as("trade"))
-      .select(col("trade.c").as("c"), col("trade.p").as("p"),
-        col("trade.s").as("s"), col("trade.t").as("t"),
-        col("trade.v").as("v"))
-      .transform(renameShortKeys(_))
+      // P4 in the same projection: one plan step, not one per key
+      .select(FinnhubRenames.map { case (short, long) =>
+        col(s"trade.$short").as(long) }: _*)
   }
 
   /** P3: unbatch — one WS frame row carrying a trade ARRAY becomes

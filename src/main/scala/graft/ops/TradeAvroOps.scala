@@ -3,7 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.model.{AvroCodec, TradeEvent}
+import graft.functions.TradeAvroRows
+import graft.model.TradeEvent
 
 /** Dataset-level Avro ingress/egress for TradeEvent — the engine's
   * S3/K2 surface (the reference's registry Avro serializer on the
@@ -12,50 +13,42 @@ import graft.model.{AvroCodec, TradeEvent}
   * kafka_consumer.py:44-55).
   *
   * Spark 4's distribution ships avro CORE but not the spark-avro
-  * connector (`from_avro`/`to_avro`), so the codec runs in
-  * `mapPartitions`: one [[graft.model.AvroCodec]] (writer + reader +
-  * reusable encoder/decoder/buffer) per PARTITION, the same
-  * amortization the reference gets from its pooled registry
-  * serializer — per row the cost is the binary encode/decode only.
-  * At scale this is shuffle-free: both directions are narrow
-  * per-partition maps.
+  * connector (`from_avro`/`to_avro`), so the codec is two native
+  * expressions ([[graft.functions.TradeAvroRows]]): struct → binary and
+  * binary → struct, each walking the schema over Catalyst's rows with
+  * one reusable Avro encoder/decoder per task. No operator here builds a
+  * `TradeEvent` object: the typed Dataset is only the signature, and
+  * both directions are narrow projections inside whole-stage codegen.
+  * The input struct's fields are found by name and must have the
+  * schema's types (string, double, bigint, array<string>, struct).
   */
 object TradeAvroOps {
+
+  /** The Dataset's columns as one struct: the codec's input row. */
+  private def event(ds: Dataset[TradeEvent]): org.apache.spark.sql.Column =
+    struct(ds.toDF().columns.map(c => col(s"`$c`")): _*)
 
   /** Egress (K2): events → Kafka-shaped (key, value) rows, key =
     * symbol (the reference partitions its topic by symbol key) and
     * value = binary Avro of the full envelope.
     */
-  def encode(ds: Dataset[TradeEvent]): DataFrame = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      val codec = new AvroCodec
-      it.map(ev => (ev.symbol, codec.encode(ev)))
-    }.toDF("key", "value")
-  }
+  def encode(ds: Dataset[TradeEvent]): DataFrame =
+    ds.toDF().select(col("symbol").as("key"), TradeAvroRows.encode(event(ds)).as("value"))
 
   /** Ingress (S3): Kafka-shaped rows (any frame with a binary `value`
     * column) → typed TradeEvent Dataset.
     */
   def decode(df: DataFrame): Dataset[TradeEvent] = {
     import df.sparkSession.implicits._
-    df.select(col("value")).as[Array[Byte]].mapPartitions { it =>
-      val codec = new AvroCodec
-      it.map(codec.decode)
-    }
+    df.select(TradeAvroRows.decode(col("value")).as("ev")).select(col("ev.*")).as[TradeEvent]
   }
 
   /** Wire-true egress: the Confluent registry framing (0x0 magic +
     * 4-byte schema id) the reference's producer actually puts on the
-    * topic (kafka_producer.py:49-62). Same shuffle-free
-    * per-partition map as [[encode]]. */
-  def encodeWire(ds: Dataset[TradeEvent], schemaId: Int): DataFrame = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      val codec = new AvroCodec
-      it.map(ev => (ev.symbol, codec.encodeWire(ev, schemaId)))
-    }.toDF("key", "value")
-  }
+    * topic (kafka_producer.py:49-62). */
+  def encodeWire(ds: Dataset[TradeEvent], schemaId: Int): DataFrame =
+    ds.toDF().select(col("symbol").as("key"),
+      TradeAvroRows.encodeWire(event(ds), schemaId).as("value"))
 
   /** Wire-true ingress: validates the 5-byte registry header per
     * message (and, when `expectSchemaId` is set, pins the id — a
@@ -64,14 +57,7 @@ object TradeAvroOps {
   def decodeWire(df: DataFrame,
                  expectSchemaId: Option[Int] = None): Dataset[TradeEvent] = {
     import df.sparkSession.implicits._
-    df.select(col("value")).as[Array[Byte]].mapPartitions { it =>
-      val codec = new AvroCodec
-      it.map { bytes =>
-        val (id, ev) = codec.decodeWire(bytes)
-        expectSchemaId.foreach(want => require(id == want,
-          s"schema id mismatch: frame has $id, expected $want"))
-        ev
-      }
-    }
+    df.select(TradeAvroRows.decodeWire(col("value"), expectSchemaId).as("ev"))
+      .select(col("ev.*")).as[TradeEvent]
   }
 }

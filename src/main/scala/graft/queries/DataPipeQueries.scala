@@ -5132,7 +5132,26 @@ object DataPipeQueries {
     * oracle is the same exact cross-pair Jaccard as the rebuild
     * form — materialization must be invisible in the output.
     */
-  private def minhashIndexCachePath(d: String): String = {
+  /** Version of what a cached index holds: its table layout and the
+    * hashing that fills it (shingles, MinHash signature, band keys).
+    * Bump it with any change to them, so no run probes a cache that
+    * older code wrote.
+    */
+  private[graft] val MinhashIndexFormat = 1
+  private val MinhashIndexHashes = 64
+  private val MinhashIndexBands = 32
+  private val MinhashIndexPrefix = "graft_minhash_index_"
+  /** Marker file naming the format of the cache directory it sits in. */
+  private val MinhashIndexFormatFile = "FORMAT"
+
+  /** Cache directory of the fixture's base index: keyed on the format
+    * version, the signature and band sizes, and the documents' paths,
+    * sizes and mtimes, so a regenerated fixture or a new format never
+    * hits a stale index.
+    */
+  private[graft] def minhashIndexCachePath(d: String,
+      format: Int = MinhashIndexFormat, numHashes: Int = MinhashIndexHashes,
+      bands: Int = MinhashIndexBands): String = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory)
         Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
@@ -5142,29 +5161,51 @@ object DataPipeQueries {
       .sortBy(_.getPath)
       .map(f => s"${f.getPath}:${f.length}:${f.lastModified}")
       .mkString("|")
+    val key = s"v$format|h$numHashes|b$bands|$d|$src"
     val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$d|$src".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map(b => f"$b%02x").mkString
-    s"${sys.props("java.io.tmpdir")}/graft_minhash_index_$h"
+    s"${sys.props("java.io.tmpdir")}/$MinhashIndexPrefix$h"
   }
+
+  /** Delete the index caches under `root` that another format version
+    * wrote (a missing or different FORMAT marker); caches of this
+    * version, for any fixture, stay.
+    */
+  private[graft] def removeOtherMinhashIndexFormats(root: java.io.File): Unit =
+    Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.isDirectory && f.getName.startsWith(MinhashIndexPrefix))
+      .filterNot { dir =>
+        val marker = new java.io.File(dir, MinhashIndexFormatFile).toPath
+        java.nio.file.Files.isRegularFile(marker) &&
+          new String(java.nio.file.Files.readAllBytes(marker),
+            java.nio.charset.StandardCharsets.UTF_8).trim == MinhashIndexFormat.toString
+      }
+      .foreach(dir => org.apache.commons.io.FileUtils.deleteQuietly(dir))
 
   /** Build-or-reuse the content-keyed materialized index of the
     * fixture's BASE documents (ids < 1000000): signature table at
     * `<path>/hh`, pre-exploded buckets at `<path>/bb`. Shared by the
     * prebuilt-probe and append-chain entries — the base index is
     * identical in both, so one build amortizes across entries AND
-    * bench reps.
+    * bench reps. Only a build, never a reuse, sweeps the caches of
+    * other format versions out of the temp directory.
     */
   private def ensureMinhashIndexCached(
       s: org.apache.spark.sql.SparkSession, d: String): String = {
     val path = minhashIndexCachePath(d)
     if (!new java.io.File(s"$path/hh", "_SUCCESS").exists() ||
       !new java.io.File(s"$path/bb", "_SUCCESS").exists()) {
+      val dir = new java.io.File(path)
+      dir.mkdirs()
+      java.nio.file.Files.write(new java.io.File(dir, MinhashIndexFormatFile).toPath,
+        MinhashIndexFormat.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      removeOtherMinhashIndexFormats(dir.getParentFile)
       val docs = Tables.documents(s, d)
         .select(col("doc_id").as("id"), col("text"))
         .repartition(s.sparkContext.defaultParallelism)
       Dedup.minhashIndexWrite(docs, "id", "text", path,
-        numHashes = 64, bands = 32)
+        numHashes = MinhashIndexHashes, bands = MinhashIndexBands)
     }
     path
   }
@@ -5177,7 +5218,7 @@ object DataPipeQueries {
       Dedup.minhashProbePrebuilt(Dedup.readIndexTable(s, s"$path/hh"),
         Dedup.readBucketsTable(s, s"$path/bb"),
         both.filter(col("id") >= 1000000),
-        "id", "text", numHashes = 64, bands = 32, threshold = 0.8)
+        "id", "text", numHashes = MinhashIndexHashes, bands = MinhashIndexBands, threshold = 0.8)
         .select(col("delta_id"), col("index_id"), col("jaccard"))
     },
     Some(s"""WITH $twinsSqlCte,
@@ -5244,12 +5285,12 @@ object DataPipeQueries {
     def probe(delta: org.apache.spark.sql.DataFrame) = {
       val (hh, bb) = Dedup.readIndexTables(s, path)
       Dedup.minhashProbePrebuilt(hh, bb, delta, "id", "text",
-        numHashes = 64, bands = 32, threshold = 0.8)
+        numHashes = MinhashIndexHashes, bands = MinhashIndexBands, threshold = 0.8)
     }
     // day-1 verdicts published BEFORE the append mutates the index
     probe(day1).write.mode("overwrite").parquet(s"$path/verdicts1")
     Dedup.minhashIndexAppend(day1, "id", "text",
-      s"$path/hh", s"$path/bb", numHashes = 64, bands = 32)
+      s"$path/hh", s"$path/bb", numHashes = MinhashIndexHashes, bands = MinhashIndexBands)
     if (compact) Dedup.minhashIndexCompact(s, path)
     s.read.parquet(s"$path/verdicts1")
       .select(lit(1L).as("day"), col("delta_id"), col("index_id"),
@@ -5344,7 +5385,7 @@ object DataPipeQueries {
       ScratchDirs.copyDir(s"$cached/hh", s"$path/hh")
       ScratchDirs.copyDir(s"$cached/bb", s"$path/bb")
       Dedup.minhashIndexAppendRoot(day1, "id", "text", path,
-        numHashes = 64, bands = 32, commitId = Some("day-1"))
+        numHashes = MinhashIndexHashes, bands = MinhashIndexBands, commitId = Some("day-1"))
       Dedup.dedupIndexStats(s, path)
         .select(col("tbl"), col("n_rows"), col("n_deltas"))
     },

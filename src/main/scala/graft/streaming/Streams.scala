@@ -43,9 +43,9 @@ object Streams {
       .load()
 
   /** S3: binary Avro `value` column (batch OR streaming frame) →
-    * typed TradeEvents — [[graft.ops.TradeAvroOps.decode]] runs the
-    * pooled codec per partition, which Structured Streaming applies
-    * per micro-batch partition unchanged.
+    * typed TradeEvents — [[graft.ops.TradeAvroOps.decode]] is a row
+    * expression, which Structured Streaming applies per micro-batch
+    * unchanged.
     */
   def decodeTradeEvents(kafkaShaped: DataFrame): Dataset[graft.model.TradeEvent] =
     graft.ops.TradeAvroOps.decode(kafkaShaped)

@@ -427,4 +427,35 @@ class DedupSpec extends SparkSpec {
     assert(sizesFirst === sizesStandalone)
     Staging.releaseAll()
   }
+
+  test("the minhash index cache key changes with the format version, hashes and bands") {
+    import graft.queries.DataPipeQueries.{MinhashIndexFormat, minhashIndexCachePath}
+    val current = minhashIndexCachePath(sf)
+    assert(current === minhashIndexCachePath(sf, format = MinhashIndexFormat))
+    assert(minhashIndexCachePath(sf, format = MinhashIndexFormat + 1) !== current)
+    assert(minhashIndexCachePath(sf, numHashes = 128) !== current)
+    assert(minhashIndexCachePath(sf, bands = 16) !== current)
+    assert("graft_minhash_index_[0-9a-f]+$".r.findFirstIn(current).isDefined)
+  }
+
+  test("sweeping the minhash index caches removes other format versions only") {
+    import java.nio.file.Files
+    import graft.queries.DataPipeQueries.{MinhashIndexFormat, removeOtherMinhashIndexFormats}
+    val root = Files.createTempDirectory("minhash-sweep").toFile
+    def cache(name: String, format: Option[String]): java.io.File = {
+      val d = new java.io.File(root, name)
+      new java.io.File(d, "hh").mkdirs()
+      format.foreach(f => Files.write(new java.io.File(d, "FORMAT").toPath, f.getBytes))
+      d
+    }
+    val keep = cache("graft_minhash_index_aa", Some(MinhashIndexFormat.toString))
+    val older = cache("graft_minhash_index_bb", Some((MinhashIndexFormat - 1).toString))
+    val unmarked = cache("graft_minhash_index_cc", None)
+    val other = cache("unrelated_dir", None)
+    try {
+      removeOtherMinhashIndexFormats(root)
+      assert(keep.exists() && other.exists())
+      assert(!older.exists() && !unmarked.exists())
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(root)
+  }
 }

@@ -48,6 +48,13 @@ object PropertySpec extends Properties("graft") {
       codec.decode(codec.encode(ev)) == ev
     }
 
+  property("the row codec writes Avro's own bytes, and Avro's reader reads them") =
+    forAll(genEvent) { ev =>
+      val bytes = new AvroCodec().encode(ev)
+      java.util.Arrays.equals(bytes, AvroReference.write(ev)) &&
+        AvroReference.read(bytes) == ev
+    }
+
   property("avro encoding is deterministic") =
     forAll(genEvent) { ev =>
       java.util.Arrays.equals(
