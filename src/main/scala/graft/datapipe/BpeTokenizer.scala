@@ -422,16 +422,6 @@ object BpeTokenizer {
         coalesce(col("n_bpe_tokens"), lit(0L)).as("n_bpe_tokens"))
   }
 
-  /** DETOKENIZATION — the inverse of the symbol encoding: strip the
-    * [[Sep]] joins and the [[Eow]] marker and the word reappears
-    * (both are non-text control characters by construction, so a
-    * single codegen'd `translate` is exact). BPE merges only ever
-    * CONCATENATE adjacent symbols, so decode∘encode == identity for
-    * every word, at every merge count — the certificate
-    * [[decodeVocab]] materializes and the bpe_decode oracle replays.
-    */
-  def decodeSyms(syms: Column): Column = translate(syms, Sep + Eow, "")
-
   /** Round-trip table over a trained model's vocabulary: one row per
     * distinct word — (w, n_sym, segmentation, round_trip).
     * `segmentation` is the symbol sequence space-joined (words never

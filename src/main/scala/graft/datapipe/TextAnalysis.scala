@@ -144,7 +144,12 @@ object TextAnalysis {
   /** Normalization used by fingerprint/dedup: lower, collapse
     * whitespace, trim.
     */
-  /** THE tokenization convention, documented once (round-7 review
+  def normalize(text: Column): Column =
+    trim(regexp_replace(lower(text), "\\s+", " "))
+
+  /** The word list `split(normalize(text), " ")`.
+    *
+    * THE tokenization convention, documented once (round-7 review
     * asked for one rule): `split(normalize(text), " ")` on empty or
     * whitespace-only text yields `[""]` — ONE phantom empty token.
     * The hashed-bag model operators (Classifier, LanguageModel's
@@ -158,8 +163,7 @@ object TextAnalysis {
     * them would change every hash for no semantic gain — keep the
     * rule per-family, per this note.
     */
-  def normalize(text: Column): Column =
-    trim(regexp_replace(lower(text), "\\s+", " "))
+  def words(text: Column): Column = split(normalize(text), " ")
 
   /** Unicode NFC normalization — run before fingerprinting/dedup so
     * the same visible text in composed vs decomposed encoding hashes

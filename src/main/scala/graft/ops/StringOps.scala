@@ -21,7 +21,4 @@ object StringOps {
   def didWeb(host: Column, project: Column, entity: Column): Column =
     concat_ws(":", lit("did"), lit("web"),
       sanitizeSegment(host), sanitizeSegment(project), sanitizeSegment(entity))
-
-  /** Inverse: DID string → path segments. host_did_web/src/main.go:398-417. */
-  def didSegments(did: Column): Column = split(did, ":")
 }

@@ -1007,6 +1007,70 @@ object Catalog {
     Some(s"""SELECT ($Now - max(epoch_us(ts))) / 1000000.0 AS max_lag_seconds
       FROM events"""))
 
+  // A2: Prometheus cumulative histogram over the event value column,
+  // grouped by event_type, via the custom Aggregator.
+  private val valueBuckets = Array(1.0, 5.0, 10.0, 50.0, 100.0, 250.0, 500.0)
+  private val valueLabels = Array("1", "5", "10", "50", "100", "250", "500", "+Inf")
+
+  private val a2PromHistogram = QueryDef(
+    "a2_prom_histogram",
+    (s, d) =>
+      Tables.events(s, d)
+        .groupBy(col("event_type"))
+        .agg(PromHistogram.column(valueBuckets, valueLabels, col("value")).as("hist"))
+        .select(col("event_type"), explode(col("hist")).as("h"))
+        .select(col("event_type"), col("h._1").as("le"),
+          col("h._2").as("cum_count")),
+    Some("""SELECT e.event_type, b.le,
+      CAST(COUNT(*) FILTER (WHERE e.value <= b.le_val) AS BIGINT) AS cum_count
+      FROM events e CROSS JOIN (VALUES
+        ('1',1.0),('5',5.0),('10',10.0),('50',50.0),('100',100.0),
+        ('250',250.0),('500',500.0),('+Inf','infinity'::DOUBLE)) b(le, le_val)
+      GROUP BY e.event_type, b.le"""))
+
+  // Q6: payload-size heatmap — exponential le buckets over document
+  // sizes per language (reference buckets 256·2^k,
+  // data_synthesizer/service/metrics/metrics.go:57-62).
+  private val q6PayloadHeatmap = QueryDef(
+    "q6_payload_heatmap",
+    (s, d) =>
+      Tables.documents(s, d)
+        .select(col("lang"),
+          when(col("n_chars") <= 128, "128")
+            .when(col("n_chars") <= 256, "256")
+            .when(col("n_chars") <= 512, "512")
+            .otherwise("+Inf").as("le"))
+        .groupBy(col("lang"), col("le"))
+        .agg(count(lit(1)).as("n")),
+    Some("""SELECT lang,
+      CASE WHEN n_chars <= 128 THEN '128' WHEN n_chars <= 256 THEN '256'
+           WHEN n_chars <= 512 THEN '512' ELSE '+Inf' END AS le,
+      COUNT(*) AS n FROM documents GROUP BY 1, 2"""))
+
+  /** T138: small-file compaction planner
+    * ([[graft.datapipe.Layout.compactionPlan]]) — sequential-fill
+    * bin assignment by exclusive per-partition byte prefix sum,
+    * planned here over the documents manifest (source = partition,
+    * doc = file, n_chars = bytes, 4 KiB target). The oracle replays
+    * the window prefix sum and the integer floor-div bin rule.
+    */
+  private val layoutCompaction = QueryDef(
+    "layout_compaction",
+    (s, d) => graft.datapipe.Layout.compactionPlan(
+      Tables.documents(s, d).select(col("source"), col("doc_id"),
+        col("n_chars")),
+      "source", "doc_id", "n_chars", targetBytes = 4096L),
+    Some("""WITH c AS (SELECT source, doc_id, n_chars,
+        COALESCE(CAST(SUM(n_chars) OVER (PARTITION BY source
+          ORDER BY doc_id
+          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT),
+          0) AS strt
+        FROM documents)
+      SELECT source, strt // 4096 AS bin_id, COUNT(*) AS n_files,
+        CAST(SUM(n_chars) AS BIGINT) AS bin_bytes,
+        MIN(doc_id) AS first_file, MAX(doc_id) AS last_file
+      FROM c GROUP BY 1, 2"""))
+
   // ---------------------------------------------------------------
   // Registry
   // ---------------------------------------------------------------
@@ -1022,13 +1086,23 @@ object Catalog {
     qSessionize, qLayoutZorder, qFunnel, qTableStats, qTableStatsHll,
     qRetention,
     q1P95Latency, q1P95LatencyBucketed, q1P95Prometheus,
-    q4Throughput, q5MaxLag, qConfigMatrix) ++
+    q4Throughput, q5MaxLag, qConfigMatrix,
+    a2PromHistogram, q6PayloadHeatmap, layoutCompaction) ++
     JoinQueries.defs ++
     EnvelopeQueries.defs ++
     HealthQueries.defs ++
-    DataPipeQueries.defs ++
     IdentityQueries.defs ++
-    SimilarityQueries.defs
+    DedupQueries.defs ++
+    TextStatsQueries.defs ++
+    TokenizerQueries.defs ++
+    LanguageModelQueries.defs ++
+    SamplingQueries.defs ++
+    PackingQueries.defs ++
+    PreferenceQueries.defs ++
+    ClassifierQueries.defs ++
+    RelevanceQueries.defs ++
+    SimilarityQueries.defs ++
+    VectorIndexQueries.defs
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     defs.map(q => q.name -> q.run).toMap

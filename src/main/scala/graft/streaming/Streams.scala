@@ -28,9 +28,12 @@ object Streams {
     * consumer's offset semantics (auto.offset.reset=latest,
     * kafka_consumer/app/handlers/kafka_consumer.py:44-55). Produces
     * the standard Kafka frame (key/value binary + topic/partition/
-    * offset/timestamp); feed it to [[decodeTradeEvents]] for the S3
-    * Avro ingress. No broker runs in this harness, so this is wiring
-    * (construction is lazy — nothing connects until a query starts);
+    * offset/timestamp); feed it to [[graft.ops.TradeAvroOps.decode]]
+    * for the S3 Avro ingress, a row expression that Structured
+    * Streaming applies per micro-batch unchanged (the K2 egress is
+    * [[graft.ops.TradeAvroOps.encode]]). No broker runs in this
+    * harness, so this is wiring (construction is lazy — nothing
+    * connects until a query starts);
     * the decode path itself is exercised by StreamingSpec over a
     * memory source carrying codec-encoded bytes.
     */
@@ -41,22 +44,6 @@ object Streams {
       .option("subscribe", topic)
       .option("startingOffsets", "latest")
       .load()
-
-  /** S3: binary Avro `value` column (batch OR streaming frame) →
-    * typed TradeEvents — [[graft.ops.TradeAvroOps.decode]] is a row
-    * expression, which Structured Streaming applies per micro-batch
-    * unchanged.
-    */
-  def decodeTradeEvents(kafkaShaped: DataFrame): Dataset[graft.model.TradeEvent] =
-    graft.ops.TradeAvroOps.decode(kafkaShaped)
-
-  /** K2: typed TradeEvents → Kafka-shaped (key=symbol, value=binary
-    * Avro) rows. On a cluster, chain `.writeStream.format("kafka")
-    * .option("topic", ...)`; the harness sinks the same frame to
-    * parquet via [[runToParquet]] and StreamingSpec round-trips it.
-    */
-  def encodeTradeEvents(events: Dataset[graft.model.TradeEvent]): DataFrame =
-    graft.ops.TradeAvroOps.encode(events)
 
   /** S2/S3 batch-twin file source: stream the events table as if it
     * were the Kafka topic (file source replays deterministically).

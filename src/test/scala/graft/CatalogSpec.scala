@@ -31,6 +31,20 @@ class CatalogSpec extends SparkSpec {
       s"README claims ${m.get.group(1)} entries; catalog has ${Catalog.defs.size}")
   }
 
+  // Every oracle, pinned: an edit to any oracle's SQL (a fragment
+  // spliced in, a family split, a whitespace change the driver would
+  // see) changes this digest, so it shows in the test run as a
+  // deliberate update of the constant rather than only in a
+  // two-checkout `cmp` of oracle_sql.json.
+  test("oracle SQL digest is pinned") {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    for ((name, sql) <- Catalog.oracleSql.toSeq.sorted)
+      md.update(s"$name\t$sql\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val digest = md.digest().map(b => f"$b%02x").mkString
+    assert(digest ===
+      "abe3c5516868df587412c4147e6676b0d96865a152acadf3c9cf47620c92f0ea")
+  }
+
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

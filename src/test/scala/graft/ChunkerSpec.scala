@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.datapipe.Chunker
@@ -12,7 +13,7 @@ import graft.datapipe.Chunker
 class ChunkerSpec extends SparkSpec {
   import spark.implicits._
 
-  private def docs = spark.read.parquet(s"$sf/documents.parquet")
+  override def docs: DataFrame = super.docs
     .select(col("doc_id"), col("text")).limit(100)
 
   test("chunks reassemble byte-exactly and respect length bounds") {

@@ -429,18 +429,28 @@ class DedupSpec extends SparkSpec {
   }
 
   test("the minhash index cache key changes with the format version, hashes and bands") {
-    import graft.queries.DataPipeQueries.{MinhashIndexFormat, minhashIndexCachePath}
+    import graft.queries.IndexCache.{Minhash, Vector}
+    import graft.queries.DedupQueries.minhashIndexCachePath
+    import graft.queries.VectorIndexQueries.vecIndexCachePath
     val current = minhashIndexCachePath(sf)
-    assert(current === minhashIndexCachePath(sf, format = MinhashIndexFormat))
-    assert(minhashIndexCachePath(sf, format = MinhashIndexFormat + 1) !== current)
+    assert(current === minhashIndexCachePath(sf, kind = Minhash))
+    assert(minhashIndexCachePath(sf, kind = Minhash.copy(format = Minhash.format + 1)) !== current)
     assert(minhashIndexCachePath(sf, numHashes = 128) !== current)
     assert(minhashIndexCachePath(sf, bands = 16) !== current)
     assert("graft_minhash_index_[0-9a-f]+$".r.findFirstIn(current).isDefined)
+    // the vector index cache: the same key over its own build parameters
+    val vec = vecIndexCachePath(sf)
+    assert(vec === vecIndexCachePath(sf, kind = Vector))
+    assert(vecIndexCachePath(sf, kind = Vector.copy(format = Vector.format + 1)) !== vec)
+    assert(vecIndexCachePath(sf, params = Seq("base", "c0", "i4")) !== vec)
+    assert(vecIndexCachePath(sf, tables = Seq("documents", "embeddings")) !== vec)
+    assert("graft_vec_index_[0-9a-f]+$".r.findFirstIn(vec).isDefined)
   }
 
   test("sweeping the minhash index caches removes other format versions only") {
     import java.nio.file.Files
-    import graft.queries.DataPipeQueries.{MinhashIndexFormat, removeOtherMinhashIndexFormats}
+    import graft.queries.IndexCache
+    import graft.queries.IndexCache.{Minhash, Vector}
     val root = Files.createTempDirectory("minhash-sweep").toFile
     def cache(name: String, format: Option[String]): java.io.File = {
       val d = new java.io.File(root, name)
@@ -448,14 +458,22 @@ class DedupSpec extends SparkSpec {
       format.foreach(f => Files.write(new java.io.File(d, "FORMAT").toPath, f.getBytes))
       d
     }
-    val keep = cache("graft_minhash_index_aa", Some(MinhashIndexFormat.toString))
-    val older = cache("graft_minhash_index_bb", Some((MinhashIndexFormat - 1).toString))
+    val keep = cache("graft_minhash_index_aa", Some(Minhash.format.toString))
+    val older = cache("graft_minhash_index_bb", Some((Minhash.format - 1).toString))
     val unmarked = cache("graft_minhash_index_cc", None)
     val other = cache("unrelated_dir", None)
+    val vecKeep = cache("graft_vec_index_aa", Some(Vector.format.toString))
+    val vecOlder = cache("graft_vec_index_bb", Some((Vector.format + 1).toString))
+    val vecUnmarked = cache("graft_vec_index_cc", None)
     try {
-      removeOtherMinhashIndexFormats(root)
+      IndexCache.sweep(Minhash, root)
       assert(keep.exists() && other.exists())
       assert(!older.exists() && !unmarked.exists())
+      assert(vecKeep.exists() && vecOlder.exists() && vecUnmarked.exists(),
+        "a minhash sweep leaves the vector caches alone")
+      IndexCache.sweep(Vector, root)
+      assert(vecKeep.exists() && keep.exists() && other.exists())
+      assert(!vecOlder.exists() && !vecUnmarked.exists())
     } finally org.apache.commons.io.FileUtils.deleteQuietly(root)
   }
 }

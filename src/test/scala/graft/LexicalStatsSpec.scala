@@ -13,8 +13,6 @@ import graft.datapipe.{Packing, TextAnalysis}
 class LexicalStatsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def docs = spark.read.parquet(s"$sf/documents.parquet")
-
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 

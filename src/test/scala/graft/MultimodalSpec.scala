@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.datapipe.Multimodal
@@ -12,7 +13,7 @@ import graft.datapipe.Multimodal
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
 
-  private def docs = spark.read.parquet(s"$sf/documents.parquet")
+  override def docs: DataFrame = super.docs
     .select(col("doc_id"), col("text")).limit(50)
 
   test("encoded BMP decodes to rule-exact dimensions and pixels") {

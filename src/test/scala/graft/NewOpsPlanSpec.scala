@@ -11,10 +11,6 @@ import graft.datapipe.{Dedup, Relevance, Similarity}
   */
 class NewOpsPlanSpec extends SparkSpec {
 
-  private def docs = spark.read.parquet(s"$sf/documents.parquet")
-  private def emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    .select(col("vec_id"), col("label"),
-      col("embedding").cast("array<double>").as("emb"))
   private def qs = emb.filter(col("vec_id") < 10)
     .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.datapipe.{Contamination, Packing, TextAnalysis}
@@ -13,7 +14,7 @@ class PackingSpec extends SparkSpec {
 
   private val C = 64L
 
-  private def docs = spark.read.parquet(s"$sf/documents.parquet")
+  override def docs: DataFrame = super.docs
     .select(col("doc_id"), col("text"))
 
   test("chunks tile the token stream: full chunks everywhere, remainder last") {

@@ -10,7 +10,7 @@ import graft.datapipe.Relevance
 class RelevanceSpec extends SparkSpec {
   import spark.implicits._
 
-  private val docs = Seq(
+  private val bm25Docs = Seq(
     (1L, "spark merge merge merge join"),       // tf(merge)=3, dl=5
     (2L, "merge sort"),                         // tf(merge)=1, dl=2
     (3L, "window window scan scan scan scan"),  // rare-term doc, dl=6
@@ -18,7 +18,7 @@ class RelevanceSpec extends SparkSpec {
     .toDF("doc_id", "text")
 
   private def scores(terms: Seq[String]): Map[Long, Double] =
-    Relevance.bm25(docs, "doc_id", "text", terms)
+    Relevance.bm25(bm25Docs, "doc_id", "text", terms)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
   test("bm25 matches a hand-rolled reference computation") {
@@ -46,10 +46,10 @@ class RelevanceSpec extends SparkSpec {
 
   test("bm25 rejects duplicate or empty term lists") {
     intercept[IllegalArgumentException] {
-      Relevance.bm25(docs, "doc_id", "text", Seq("a", "a"))
+      Relevance.bm25(bm25Docs, "doc_id", "text", Seq("a", "a"))
     }
     intercept[IllegalArgumentException] {
-      Relevance.bm25(docs, "doc_id", "text", Seq.empty)
+      Relevance.bm25(bm25Docs, "doc_id", "text", Seq.empty)
     }
   }
 

@@ -17,13 +17,6 @@ class RoundEighteenOpsSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def fixtureEmb = {
-    val sf = "/root/testdata/sf0.001"
-    spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"),
-        col("embedding").cast("array<double>").as("emb"))
-  }
-
   private def top1(dir: String, q: org.apache.spark.sql.DataFrame) =
     VectorIndex.probe(spark, dir, q, 1, nprobe = 3).collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getDouble(3))).toSet

@@ -14,13 +14,6 @@ class RoundSeventeenOpsSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def fixtureEmb = {
-    val sf = "/root/testdata/sf0.001"
-    spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"),
-        col("embedding").cast("array<double>").as("emb"))
-  }
-
   private def probeRows(dir: String, q: org.apache.spark.sql.DataFrame) =
     VectorIndex.probe(spark, dir, q, 5, nprobe = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))

@@ -11,8 +11,6 @@ import graft.datapipe.{Dedup, Sampling, ShuffleOrder, TextAnalysis}
 class RoundTenOpsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def docs = spark.read.parquet(s"$sf/documents.parquet")
-
   // --- UniMax -------------------------------------------------------
 
   private def unimaxRows(cap: Int) =

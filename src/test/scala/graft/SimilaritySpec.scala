@@ -11,10 +11,6 @@ import graft.datapipe.Similarity
   */
 class SimilaritySpec extends SparkSpec {
 
-  private def emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    .select(col("vec_id"), col("label"),
-      col("embedding").cast("array<double>").as("emb"))
-
   private def queries = emb.filter(col("vec_id") < 5)
     .select(col("vec_id").as("q_id"), col("label").as("q_label"),
       col("emb").as("q_emb"))

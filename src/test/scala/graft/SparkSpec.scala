@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one per test JVM). */
@@ -26,6 +27,17 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val persistSpark: SparkSession = SparkSpec.persistSession
   val sf: String = "/root/testdata/sf0.001"
+
+  /** The fixture's documents table, read raw. */
+  def docs: DataFrame = spark.read.parquet(s"$sf/documents.parquet")
+
+  /** The fixture's embeddings as (vec_id, label, emb: array<double>). */
+  def emb: DataFrame = spark.read.parquet(s"$sf/embeddings.parquet")
+    .select(col("vec_id"), col("label"),
+      col("embedding").cast("array<double>").as("emb"))
+
+  /** [[emb]] as the (vec_id, emb) pairs the vector indexes take. */
+  def fixtureEmb: DataFrame = emb.select(col("vec_id"), col("emb"))
 
   /** Executed plan of a catalog entry built on [[persistSpark]]. Plan
     * pins inspect the STAGED pipelines' internals; checkpoint staging

@@ -362,11 +362,11 @@ class StreamingSpec extends SparkSpec {
     val in = MemoryStream[TradeEvent]
     in.addData(evs: _*)
     val q = Streams.runToParquet(
-      Streams.encodeTradeEvents(in.toDS()), out, ckpt)
+      graft.ops.TradeAvroOps.encode(in.toDS()), out, ckpt)
     q.processAllAvailable()
     q.stop()
     // S3 ingress: the sunk frame decodes back to the same events
-    val decoded = Streams.decodeTradeEvents(spark.read.parquet(out))
+    val decoded = graft.ops.TradeAvroOps.decode(spark.read.parquet(out))
       .collect().sortBy(_.trade_event_id)
     assert(decoded.toSeq === evs.sortBy(_.trade_event_id))
     // and the frame really is Kafka-shaped

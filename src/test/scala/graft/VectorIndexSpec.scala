@@ -13,13 +13,6 @@ class VectorIndexSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def fixtureEmb = {
-    val sf = "/root/testdata/sf0.001"
-    spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"),
-        col("embedding").cast("array<double>").as("emb"))
-  }
-
   test("probe from the stored index is row-identical to the " +
     "ivfTopKKmeans retrain path") {
     val e = fixtureEmb
