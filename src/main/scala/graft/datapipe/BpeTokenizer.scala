@@ -65,7 +65,7 @@ object BpeTokenizer {
   val Eow = "\u0002"
 
   private def normTokens(textCol: Column): Column =
-    split(TextAnalysis.normalize(textCol), " ")
+    TextAnalysis.words(textCol)
 
   /** Initial symbol string: the word's characters Sep-joined, with
     * [[Eow]] attached to the last character's symbol.

@@ -116,7 +116,7 @@ object Chunker {
     // whitespace-only document has NO tokens and emits NO windows
     // (the other token operators apply the same length>0 filter).
     // The size>0 guard below also keeps the sequence() ascending.
-    val toks = filter(split(TextAnalysis.normalize(col(textCol)), " "),
+    val toks = filter(TextAnalysis.words(col(textCol)),
       t => length(t) > 0)
     val start = (col("win_id") * stride).cast("bigint")
     val len = least(lit(window).cast("bigint"), size(col("w")) - start)

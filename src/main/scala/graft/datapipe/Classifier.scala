@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
 object Classifier {
 
   private def toks(textCol: Column): Column =
-    split(TextAnalysis.normalize(textCol), " ")
+    TextAnalysis.words(textCol)
 
   private def bucketOf(t: Column, buckets: Int): Column =
     pmod(TextAnalysis.md5Long60(t.cast("binary")), lit(buckets.toLong))

@@ -132,7 +132,7 @@ object Dedup {
     // wrapper keeps the Column => Column signature where operators
     // materialize a named column instead)
     element_at(transform(
-      array(split(TextAnalysis.normalize(text), " ")), toks =>
+      array(TextAnalysis.words(text)), toks =>
         array_distinct(
           when(size(toks) < k, array(array_join(toks, " ")))
             .otherwise(transform(
@@ -158,7 +158,7 @@ object Dedup {
     */
   def hashedShingles(text: Column, k: Int): Column =
     graft.functions.ShingleHashes.ofTokens(
-      split(TextAnalysis.normalize(text), " "), k)
+      TextAnalysis.words(text), k)
 
   /** Inter-source k-gram overlap matrix — the leakage/redundancy
     * diagnostic mixture design consumes (how much of source A's
@@ -179,7 +179,7 @@ object Dedup {
     */
   def sourceOverlap(docs: DataFrame, textCol: String, sourceCol: String,
                     k: Int): DataFrame = {
-    val w = split(TextAnalysis.normalize(col(textCol)), " ")
+    val w = TextAnalysis.words(col(textCol))
     // stage(): the distinct gram-set table feeds the sizes aggregate
     // AND both sides of the pair join
     val sg = docs.filter(size(w) >= k)
@@ -948,7 +948,7 @@ object Dedup {
     */
   def dupNgramCoverage(docs: DataFrame, idCol: String, textCol: String,
                        k: Int): DataFrame = {
-    val toks = split(TextAnalysis.normalize(col(textCol)), " ")
+    val toks = TextAnalysis.words(col(textCol))
     val base = docs.select(col(idCol).as("doc_id"), toks.as("w"))
     // per-POSITION window hashes (deliberately not the distinct
     // ShingleHashes: coverage counts positions, and a doc repeating a
@@ -1008,7 +1008,7 @@ object Dedup {
     */
   def dedupLines(docs: DataFrame, idCol: String, textCol: String,
                  w: Int = 4): DataFrame = {
-    val toks = filter(split(TextAnalysis.normalize(col(textCol)), " "),
+    val toks = filter(TextAnalysis.words(col(textCol)),
       t => length(t) > 0)
     val base = docs.select(col(idCol).as("doc_id"), toks.as("w"))
     val lines = base.filter(size(col("w")) > 0)
@@ -1057,7 +1057,7 @@ object Dedup {
     */
   def boilerplateStats(docs: DataFrame, idCol: String, textCol: String,
                        w: Int = 4, minDf: Int = 5): DataFrame = {
-    val toks = filter(split(TextAnalysis.normalize(col(textCol)), " "),
+    val toks = filter(TextAnalysis.words(col(textCol)),
       t => length(t) > 0)
     val lines = docs.select(col(idCol).as("doc_id"), toks.as("w"))
       .filter(size(col("w")) > 0)
@@ -1328,7 +1328,7 @@ object Dedup {
     // tokenize ONCE into a materialized column: captured inside the
     // positional transform, the regex split would re-run per gram
     // (the HOF-lambda-capture rule)
-    val tw = split(TextAnalysis.normalize(col(textCol)), " ")
+    val tw = TextAnalysis.words(col(textCol))
     val grams = when(size(col("__tw")) >= k,
       transform(sequence(lit(1), size(col("__tw")) - k + 1),
         i => concat_ws(" ", slice(col("__tw"), i, lit(k)))))
@@ -1499,6 +1499,91 @@ object Dedup {
     newKeys.join(survivors, Seq("k"), "left_anti").select(col(idCol))
   }
 
+  /** Positional k-token window hashes: (id, pos, h) — NOT the
+    * distinct-shingle pipeline; span detection needs every occurrence
+    * with its offset. Docs shorter than k have no k-window.
+    */
+  private def positionalWindows(docs: DataFrame, idCol: String,
+                                textCol: String, k: Int): DataFrame = {
+    val toks = TextAnalysis.words(col(textCol))
+    docs
+      .select(col(idCol).as("id"), toks.as("w"))
+      .filter(size(col("w")) >= k)
+      .select(col("id"), posexplode(transform(
+        sequence(lit(0), size(col("w")) - k),
+        i => xxhash64(array_join(slice(col("w"), i + 1, lit(k)), " ")))))
+      .select(col("id"), col("pos"), col("col").as("h"))
+  }
+
+  /** The gaps-and-islands step of the span detectors ([[sharedSpans]],
+    * [[contaminationSpans]], [[selfSpans]]): `matches` holds aligned
+    * window matches at positions (`a`, `b`) per `keys` group; along each
+    * diagonal `a - b`, consecutive `a` positions form one run, so the
+    * island id is `a - row_number()` and one aggregation emits each
+    * maximal run. Output: `keys`, then `aStart`, `bStart` (0-based),
+    * n_windows and span_tokens = n_windows + k - 1, for runs of at least
+    * `minWindows` windows.
+    */
+  private def spanIslands(matches: DataFrame, keys: Seq[String], a: String, b: String,
+                          aStart: String, bStart: String,
+                          k: Int, minWindows: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val diag = col(a) - col(b)
+    matches.select(keys.map(col) :+ col(a) :+ col(b): _*)
+      .withColumn("g", col(a) - row_number().over(
+        Window.partitionBy(keys.map(col) :+ diag: _*).orderBy(col(a))))
+      .groupBy(keys.map(col) :+ diag.as("d") :+ col("g"): _*)
+      .agg(min(col(a)).as("s0"), min(col(b)).as("s1"), count(lit(1)).as("n_windows"))
+      .filter(col("n_windows") >= minWindows)
+      .select(keys.map(col) ++ Seq(
+        col("s0").cast("bigint").as(aStart),
+        col("s1").cast("bigint").as(bStart),
+        col("n_windows"),
+        (col("n_windows") + (k - 1)).as("span_tokens")): _*)
+  }
+
+  /** The cut-and-rebuild step of [[trimContamination]] and
+    * [[trimSelfSpans]]: the token positions of every `spans` row
+    * (doc_id, start, span_tokens) are removed from `docs`' normalized
+    * words — distinct per (doc, pos), since overlapping spans can claim
+    * the same token — and the survivors rebuild each document in
+    * position order. Output: (doc_id, n_tokens, n_removed,
+    * trimmed_text) for every doc_id of `docs`.
+    */
+  private def trimSpans(docs: DataFrame, idCol: String, textCol: String,
+                        spans: DataFrame): DataFrame = {
+    val removed = spans
+      .select(col("doc_id"),
+        explode(sequence(col("start"), col("start") + col("span_tokens") - 1)).as("pos"))
+      .distinct()
+    val toks = docs
+      .select(col(idCol).as("doc_id"), TextAnalysis.words(col(textCol)).as("w"))
+      .select(col("doc_id"), size(col("w")).cast("bigint").as("n_tokens"),
+        posexplode(col("w")))
+      .select(col("doc_id"), col("n_tokens"),
+        col("pos").cast("bigint").as("pos"), col("col").as("tok"))
+    val trimmed = toks.join(removed, Seq("doc_id", "pos"), "left_anti")
+      .groupBy(col("doc_id"))
+      .agg(max(col("n_tokens")).as("n_tokens"),
+        count(lit(1)).as("n_kept"),
+        array_join(transform(
+          array_sort(collect_list(struct(col("pos"), col("tok")))),
+          s => s("tok")), " ").as("trimmed_text"))
+      .select(col("doc_id"), col("n_tokens"),
+        (col("n_tokens") - col("n_kept")).as("n_removed"),
+        col("trimmed_text"))
+    // join back onto the full id set: a NULL-text document produces no
+    // posexplode rows and would silently vanish — the sibling
+    // operators (perplexity, BPE encode) preserve every doc_id with
+    // zero counts, and so does this one (trimmed_text stays NULL)
+    docs.select(col(idCol).as("doc_id"))
+      .join(trimmed, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
+        coalesce(col("n_removed"), lit(0L)).as("n_removed"),
+        col("trimmed_text"))
+  }
+
   /** Maximal shared token runs (exact substring-level duplication,
     * the complement of the set-similarity family above): for every
     * document pair, every maximal run of >= `minWindows` consecutive
@@ -1526,27 +1611,9 @@ object Dedup {
     * Output: (a_id, b_id, a_start, b_start, n_windows, span_tokens)
     * with 0-based starts and span_tokens = n_windows + k - 1.
     */
-  /** Positional k-token window hashes: (id, pos, h) — NOT the
-    * distinct-shingle pipeline; span detection needs every occurrence
-    * with its offset. Docs shorter than k have no k-window.
-    */
-  private def positionalWindows(docs: DataFrame, idCol: String,
-                                textCol: String, k: Int): DataFrame = {
-    val toks = split(TextAnalysis.normalize(col(textCol)), " ")
-    docs
-      .select(col(idCol).as("id"), toks.as("w"))
-      .filter(size(col("w")) >= k)
-      .select(col("id"), posexplode(transform(
-        sequence(lit(0), size(col("w")) - k),
-        i => xxhash64(array_join(slice(col("w"), i + 1, lit(k)), " ")))))
-      .select(col("id"), col("pos"), col("col").as("h"))
-  }
-
   def sharedSpans(docs: DataFrame, idCol: String, textCol: String,
                   k: Int = 3, minWindows: Int = 4,
                   maxDf: Int = 50, maxOccurrences: Int = 1000): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-
     // persist(): the window table feeds the hot-hash aggregation and
     // both sides of the self-join — unpersisted, the text pipeline
     // runs three times (session-scoped cache, as in ngramJaccardPairs).
@@ -1565,28 +1632,15 @@ object Dedup {
       .filter(col("df") > maxDf || col("occ") > maxOccurrences)
       .select(col("h"))
     val pruned = windows.join(broadcast(hot), Seq("h"), "left_anti")
-    // (a_id, pos) is unique, so per (pair, diagonal) each a_pos
-    // appears at most once and row_number needs no extra tie-break.
     val matches = pruned.select(col("h"), col("id").as("a_id"), col("pos").as("pa"))
       .hint("shuffle_hash")
       .join(pruned.select(col("h"), col("id").as("b_id"), col("pos").as("pb")),
         Seq("h"))
       .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), col("pa"), col("pb"))
-    val diag = col("pa") - col("pb")
-    val islands = matches
-      .withColumn("g", col("pa") - row_number().over(
-        Window.partitionBy(col("a_id"), col("b_id"), diag).orderBy(col("pa"))))
-    islands
-      .groupBy(col("a_id"), col("b_id"), diag.as("d"), col("g"))
-      .agg(min(col("pa")).as("a_start0"), min(col("pb")).as("b_start0"),
-        count(lit(1)).as("n_windows"))
-      .filter(col("n_windows") >= minWindows)
-      .select(col("a_id"), col("b_id"),
-        col("a_start0").cast("bigint").as("a_start"),
-        col("b_start0").cast("bigint").as("b_start"),
-        col("n_windows"),
-        (col("n_windows") + (k - 1)).as("span_tokens"))
+    // (a_id, pos) is unique, so per (pair, diagonal) each a_pos
+    // appears at most once and row_number needs no extra tie-break.
+    spanIslands(matches, Seq("a_id", "b_id"), "pa", "pb", "a_start", "b_start",
+      k, minWindows)
   }
 
   /** Span-level benchmark decontamination — [[sharedSpans]]'
@@ -1614,7 +1668,6 @@ object Dedup {
                          k: Int = 5, minWindows: Int = 2,
                          maxDf: Int = 50, maxOccurrences: Int = 1000)
       : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // persist(): each window table feeds the union'd hot-hash
     // aggregation and its side of the join (see sharedSpans).
     val wb = positionalWindows(bench, idCol, textCol, k).stage()
@@ -1648,21 +1701,8 @@ object Dedup {
       .hint("shuffle_hash")
       .join(pb.select(col("h"), col("id").as("bench_id"), col("pos").as("pb")),
         Seq("h"))
-      .select(col("train_id"), col("bench_id"), col("pt"), col("pb"))
-    val diag = col("pt") - col("pb")
-    matches
-      .withColumn("g", col("pt") - row_number().over(
-        Window.partitionBy(col("train_id"), col("bench_id"), diag)
-          .orderBy(col("pt"))))
-      .groupBy(col("train_id"), col("bench_id"), diag.as("d"), col("g"))
-      .agg(min(col("pt")).as("t0"), min(col("pb")).as("b0"),
-        count(lit(1)).as("n_windows"))
-      .filter(col("n_windows") >= minWindows)
-      .select(col("train_id"), col("bench_id"),
-        col("t0").cast("bigint").as("train_start"),
-        col("b0").cast("bigint").as("bench_start"),
-        col("n_windows"),
-        (col("n_windows") + (k - 1)).as("span_tokens"))
+    spanIslands(matches, Seq("train_id", "bench_id"), "pt", "pb",
+      "train_start", "bench_start", k, minWindows)
   }
 
   /** Remove benchmark-contaminated spans from training documents —
@@ -1685,37 +1725,31 @@ object Dedup {
                         k: Int = 5, minWindows: Int = 2,
                         maxDf: Int = 50, maxOccurrences: Int = 1000)
       : DataFrame = {
-    val removed = contaminationSpans(train, bench, idCol, textCol,
-      k, minWindows, maxDf, maxOccurrences)
-      .select(col("train_id").as("doc_id"),
-        explode(sequence(col("train_start"),
-          col("train_start") + col("span_tokens") - 1)).as("pos"))
-      .distinct()
-    val toks = train
-      .select(col(idCol).as("doc_id"),
-        split(TextAnalysis.normalize(col(textCol)), " ").as("w"))
-      .select(col("doc_id"), size(col("w")).cast("bigint").as("n_tokens"),
-        posexplode(col("w")))
-      .select(col("doc_id"), col("n_tokens"),
-        col("pos").cast("bigint").as("pos"), col("col").as("tok"))
-    val trimmed = toks.join(removed, Seq("doc_id", "pos"), "left_anti")
-      .groupBy(col("doc_id"))
-      .agg(max(col("n_tokens")).as("n_tokens"),
-        count(lit(1)).as("n_kept"),
-        array_join(transform(
-          array_sort(collect_list(struct(col("pos"), col("tok")))),
-          s => s("tok")), " ").as("trimmed_text"))
-      .select(col("doc_id"), col("n_tokens"),
-        (col("n_tokens") - col("n_kept")).as("n_removed"),
-        col("trimmed_text"))
-    // preserve every training doc_id (NULL-text docs produce no
-    // posexplode rows), as trimSelfSpans does
-    train.select(col(idCol).as("doc_id"))
-      .join(trimmed, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        coalesce(col("n_removed"), lit(0L)).as("n_removed"),
-        col("trimmed_text"))
+    trimSpans(train, idCol, textCol,
+      contaminationSpans(train, bench, idCol, textCol, k, minWindows, maxDf, maxOccurrences)
+        .select(col("train_id").as("doc_id"), col("train_start").as("start"),
+          col("span_tokens")))
+  }
+
+  /** Remove intra-document repeated blocks — the CONSUMER of
+    * [[selfSpans]]: every later occurrence that selfSpans reports is
+    * cut, keeping the first. Returns (doc_id, n_tokens, n_removed,
+    * trimmed_text) with trimmed_text over NORMALIZED tokens (the
+    * token space the spans are computed in).
+    *
+    * Shape: spans explode into removed-position rows (bounded by
+    * span lengths, never corpus size), distinct-ed per (doc, pos)
+    * since overlapping spans from different diagonals can claim the
+    * same token; surviving tokens rebuild the document with one
+    * per-doc ordered collect — group size is document length, the
+    * operator's natural unit. Every piece (the span detector, the
+    * interval union, the rebuild) replays in SQL, so the oracle
+    * checks the repaired text itself.
+    */
+  def trimSelfSpans(docs: DataFrame, idCol: String, textCol: String,
+                    k: Int = 5, minWindows: Int = 2): DataFrame = {
+    trimSpans(docs, idCol, textCol, selfSpans(docs, idCol, textCol, k, minWindows)
+      .select(col("doc_id"), col("b_start").as("start"), col("span_tokens")))
   }
 
   /** Intra-document repeated blocks — [[sharedSpans]]' within-doc
@@ -1735,60 +1769,8 @@ object Dedup {
     * Output: (doc_id, a_start, b_start, n_windows, span_tokens) with
     * a_start < b_start, 0-based.
     */
-  /** Remove intra-document repeated blocks — the CONSUMER of
-    * [[selfSpans]]: every later occurrence that selfSpans reports is
-    * cut, keeping the first. Returns (doc_id, n_tokens, n_removed,
-    * trimmed_text) with trimmed_text over NORMALIZED tokens (the
-    * token space the spans are computed in).
-    *
-    * Shape: spans explode into removed-position rows (bounded by
-    * span lengths, never corpus size), distinct-ed per (doc, pos)
-    * since overlapping spans from different diagonals can claim the
-    * same token; surviving tokens rebuild the document with one
-    * per-doc ordered collect — group size is document length, the
-    * operator's natural unit. Every piece (the span detector, the
-    * interval union, the rebuild) replays in SQL, so the oracle
-    * checks the repaired text itself.
-    */
-  def trimSelfSpans(docs: DataFrame, idCol: String, textCol: String,
-                    k: Int = 5, minWindows: Int = 2): DataFrame = {
-    val removed = selfSpans(docs, idCol, textCol, k, minWindows)
-      .select(col("doc_id"), explode(sequence(col("b_start"),
-        col("b_start") + col("span_tokens") - 1)).as("pos"))
-      .distinct()
-    val toks = docs
-      .select(col(idCol).as("doc_id"),
-        split(TextAnalysis.normalize(col(textCol)), " ").as("w"))
-      .select(col("doc_id"), size(col("w")).cast("bigint").as("n_tokens"),
-        posexplode(col("w")))
-      .select(col("doc_id"), col("n_tokens"),
-        col("pos").cast("bigint").as("pos"), col("col").as("tok"))
-    val trimmed = toks.join(removed, Seq("doc_id", "pos"), "left_anti")
-      .groupBy(col("doc_id"))
-      .agg(max(col("n_tokens")).as("n_tokens"),
-        count(lit(1)).as("n_kept"),
-        array_join(transform(
-          array_sort(collect_list(struct(col("pos"), col("tok")))),
-          s => s("tok")), " ").as("trimmed_text"))
-      .select(col("doc_id"), col("n_tokens"),
-        (col("n_tokens") - col("n_kept")).as("n_removed"),
-        col("trimmed_text"))
-    // join back onto the full id set: a NULL-text document produces no
-    // posexplode rows and would silently vanish — the sibling
-    // operators (perplexity, BPE encode) preserve every doc_id with
-    // zero counts, and so does this one (trimmed_text stays NULL)
-    docs.select(col(idCol).as("doc_id"))
-      .join(trimmed, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        coalesce(col("n_removed"), lit(0L)).as("n_removed"),
-        col("trimmed_text"))
-  }
-
   def selfSpans(docs: DataFrame, idCol: String, textCol: String,
                 k: Int = 5, minWindows: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-
     // persist(): both sides of the (hash, id) self-join read this
     // table (session-scoped cache, as in ngramJaccardPairs).
     val windows = positionalWindows(docs, idCol, textCol, k)
@@ -1798,20 +1780,9 @@ object Dedup {
       .join(windows.select(col("h"), col("id"), col("pos").as("pb")),
         Seq("h", "id"))
       .filter(col("pa") < col("pb"))
-      .select(col("id"), col("pa"), col("pb"))
-    val diag = col("pb") - col("pa")
-    matches
-      .withColumn("g", col("pa") - row_number().over(
-        Window.partitionBy(col("id"), diag).orderBy(col("pa"))))
-      .groupBy(col("id").as("doc_id"), diag.as("d"), col("g"))
-      .agg(min(col("pa")).as("a_start0"), min(col("pb")).as("b_start0"),
-        count(lit(1)).as("n_windows"))
-      .filter(col("n_windows") >= minWindows)
-      .select(col("doc_id"),
-        col("a_start0").cast("bigint").as("a_start"),
-        col("b_start0").cast("bigint").as("b_start"),
-        col("n_windows"),
-        (col("n_windows") + (k - 1)).as("span_tokens"))
+      .withColumnRenamed("id", "doc_id")
+    spanIslands(matches, Seq("doc_id"), "pa", "pb", "a_start", "b_start",
+      k, minWindows)
   }
 
   /** Marginal-novelty scoring (the selection signal of D4, Tirumala

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
 object LanguageModel {
 
   private def toks(textCol: Column): Column =
-    split(TextAnalysis.normalize(textCol), " ")
+    TextAnalysis.words(textCol)
 
   /** Per-document bigram-LM perplexity under an add-one-smoothed
     * bigram model trained on the WHOLE input corpus:

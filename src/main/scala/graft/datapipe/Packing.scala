@@ -320,7 +320,7 @@ object Packing {
     val ratio6 = graft.functions.ExactRound.ratio6 _
     val spark = docs.sparkSession
     import spark.implicits._
-    val ws = filter(split(TextAnalysis.normalize(col(textCol)), " "),
+    val ws = filter(TextAnalysis.words(col(textCol)),
       t => length(t) > 0)
     val eligible = docs
       .select(ws.as("__ws"))

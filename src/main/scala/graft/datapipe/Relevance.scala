@@ -39,7 +39,7 @@ object Relevance {
            terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty && terms.distinct == terms,
       s"terms must be non-empty and distinct: $terms")
-    val toks = split(TextAnalysis.normalize(col(textCol)), " ")
+    val toks = TextAnalysis.words(col(textCol))
     val base = docs.select(col(idCol).as("doc_id"), toks.as("w"))
     // dl must count ALL tokens (BM25's length normalization), so it
     // rides the explode row alongside each matched term.
@@ -101,7 +101,7 @@ object Relevance {
   def tfidfKeywords(docs: DataFrame, idCol: String, textCol: String,
                     k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = filter(split(TextAnalysis.normalize(col(textCol)), " "),
+    val toks = filter(TextAnalysis.words(col(textCol)),
       w => length(w) > 0)
     val tf = docs.select(col(idCol).as("doc_id"), explode(toks).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
@@ -210,7 +210,7 @@ object Relevance {
     val qt = queries
       .select(col("q_id"), explode(col("q_terms")).as("term")).distinct()
     val terms = qt.select(col("term")).distinct()
-    val toks = split(TextAnalysis.normalize(col(textCol)), " ")
+    val toks = TextAnalysis.words(col(textCol))
     // Staged so normalize+split runs ONE pass over the corpus: both
     // the matched-tf subtree and the (n_docs, sum_dl) stats subtree
     // read the materialized token arrays — without the stage they
@@ -272,7 +272,7 @@ object Relevance {
     val qt = queries
       .select(col("q_id"), explode(col("q_terms")).as("term")).distinct()
     val qn = qt.groupBy(col("q_id")).agg(count(lit(1)).as("n_terms"))
-    val toks = split(TextAnalysis.normalize(col(textCol)), " ")
+    val toks = TextAnalysis.words(col(textCol))
     docs
       .select(col(idCol).as("doc_id"),
         explode(array_distinct(toks)).as("term"))
@@ -729,7 +729,7 @@ object Relevance {
     * family: zero-length tokens filtered).
     */
   private def overlapToks(c: Column): Column =
-    filter(split(TextAnalysis.normalize(c), " "), t => length(t) > 0)
+    filter(TextAnalysis.words(c), t => length(t) > 0)
 
   /** Per-(pair, n) CLIPPED n-gram match counts m_n =
     * Σ_g min(count_cand(g), count_ref(g)) for n = 1..maxN — the

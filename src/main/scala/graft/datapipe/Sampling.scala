@@ -35,6 +35,16 @@ object Sampling {
   def hashSampleCond(key: Column, percent: Int): Column =
     hashSampleCond(key, lit(percent))
 
+  /** The Efraimidis–Spirakis key u^(1/w) of [[weightedSample]] and its
+    * stream twin [[graft.streaming.Streams.weightedSampleStream]]:
+    * u = (md5_60("ws:" + id) mod 10⁹ + 1)/10⁹, rounded to 8 dp. */
+  def esKey(id: Column, weight: Column): Column = {
+    val u = (TextAnalysis.md5Long60(
+      concat(lit("ws:"), id.cast("string"))) % 1000000000L + 1L)
+      .cast("double") / lit(1e9)
+    round(pow(u, lit(1.0) / weight.cast("double")), 8)
+  }
+
   /** Weighted k-sampling without replacement (Efraimidis–Spirakis
     * 2006): each row draws a deterministic uniform u from the
     * md5 contract and the sample is the top-k by key u^(1/w) —
@@ -54,11 +64,8 @@ object Sampling {
   def weightedSample(df: DataFrame, idCol: String, weight: Column,
                      k: Int): DataFrame = {
     require(k >= 1, s"need a positive sample size, got $k")
-    val u = (TextAnalysis.md5Long60(
-      concat(lit("ws:"), col(idCol).cast("string"))) % 1000000000L + 1L)
-      .cast("double") / lit(1e9)
     df.select(col(idCol).as("doc_id"), weight.cast("bigint").as("w"),
-        round(pow(u, lit(1.0) / weight.cast("double")), 8).as("es_key"))
+        esKey(col(idCol), weight).as("es_key"))
       .orderBy(col("es_key").desc, col("doc_id").asc)
       .limit(k)
   }
@@ -414,7 +421,7 @@ object Sampling {
     require(rounds >= 1, s"need at least one round, got $rounds")
     require(eta > 0, s"DoReMi step size must be positive, got $eta")
     val tk = docs.select(col(sourceCol).as("source"), explode(filter(
-      split(TextAnalysis.normalize(col(textCol)), " "),
+      TextAnalysis.words(col(textCol)),
       t => length(t) > 0)).as("t"))
     val csw = tk.groupBy(col("source"), col("t"))
       .agg(count(lit(1)).as("c_sw")).stage()

@@ -82,7 +82,7 @@ object SftPrep {
           lit(" <|eot|>"))),
       "\n")
     docs.select(col(idCol),
-        split(TextAnalysis.normalize(col(textCol)), " ").as("__toks"))
+        TextAnalysis.words(col(textCol)).as("__toks"))
       .select(
         col(idCol),
         n.as("n_tokens"),
@@ -145,7 +145,7 @@ object SftPrep {
     val targets = render(k => slice(toks,
       (k * en + lit(1L)).cast("int"), lit(spanLen)))
     docs.select(col(idCol),
-        split(TextAnalysis.normalize(col(textCol)), " ").as("__toks"))
+        TextAnalysis.words(col(textCol)).as("__toks"))
       .select(
       col(idCol),
       n.as("n_tokens"),
@@ -239,7 +239,7 @@ object SftPrep {
                     turnTokens: Int = 8): DataFrame = {
     require(turnTokens >= 1, s"turnTokens must be >= 1, got $turnTokens")
     val w = lit(turnTokens.toLong)
-    val toks = split(TextAnalysis.normalize(col(textCol)), " ")
+    val toks = TextAnalysis.words(col(textCol))
     val n = size(toks).cast("bigint")
     val nTurns = (((n + w - lit(1L)) - (n + w - lit(1L)) % w) / w)
       .cast("bigint")

@@ -180,14 +180,8 @@ object Sketches {
     */
   def bloomSeenScores(docs: DataFrame, idCol: String, textCol: String,
                       k: Int, mBits: Int, shards: Int): DataFrame = {
-    require(k >= 1 && mBits >= 2 && shards >= 1, "bad gate shape")
-    val base = docs.select(col(idCol).as("doc_id"),
-      TextAnalysis.fingerprint(col(textCol)).cast("string").as("fp"))
-    val keyed = base.select(col("doc_id"),
-      pmod(TextAnalysis.md5Long60(concat(lit("shard:"), col("fp"))),
-        lit(shards.toLong)).as("shard"),
-      explode(array((0 until k).map(i =>
-        bloomBit(col("fp"), i, mBits)): _*)).as("bit"))
+    val keyed = bloomGateKeys(docs, idCol, textCol, k, mBits, shards)
+      .select(col("doc_id"), col("shard"), explode(col("bits")).as("bit"))
     val first = keyed.groupBy(col("shard"), col("bit"))
       .agg(min(col("doc_id")).as("first_doc"))
     keyed.join(first, Seq("shard", "bit"))
@@ -195,6 +189,23 @@ object Sketches {
       .agg(max(col("first_doc")).as("mf"))
       .select(col("doc_id"), col("shard"),
         (col("mf") < col("doc_id")).as("seen_before"))
+  }
+
+  /** (doc_id, shard, bits) of the seen-before gate, shared by
+    * [[bloomSeenScores]] and its stream twin
+    * [[graft.streaming.Streams.bloomSeenStream]]: the shard is
+    * `md5_60("shard:" + fp) mod shards` and `bits` the k positions
+    * [[bloomBit]] gives the content fingerprint `fp`.
+    */
+  def bloomGateKeys(docs: DataFrame, idCol: String, textCol: String,
+                    k: Int, mBits: Int, shards: Int): DataFrame = {
+    require(k >= 1 && mBits >= 2 && shards >= 1, "bad gate shape")
+    docs.select(col(idCol).as("doc_id"),
+        TextAnalysis.fingerprint(col(textCol)).cast("string").as("fp"))
+      .select(col("doc_id"),
+        pmod(TextAnalysis.md5Long60(concat(lit("shard:"), col("fp"))),
+          lit(shards.toLong)).as("shard"),
+        array((0 until k).map(i => bloomBit(col("fp"), i, mBits)): _*).as("bits"))
   }
 
   /** Membership probe: `member` is true iff ALL k positions of the

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
 object StreamGate {
 
   private def toks(textCol: Column): Column =
-    split(TextAnalysis.normalize(textCol), " ")
+    TextAnalysis.words(textCol)
 
   /** Score and gate: (doc_id, n_tokens, nb_score, n_bigrams, ppl,
     * weight, kept) with kept = NB-positive AND ppl <= maxPpl (a

@@ -58,7 +58,7 @@ object TextAnalysis {
     */
   def readability(docs: DataFrame, idCol: String,
                   textCol: String): DataFrame = {
-    val words = filter(split(normalize(col(textCol)), " "),
+    val ws = filter(words(col(textCol)),
       w => length(w) > 0)
     val syl = (w: Column) => greatest(lit(1L),
       size(filter(split(w, "[^aeiouy]+"), x => length(x) > 0)).cast("long"))
@@ -68,9 +68,9 @@ object TextAnalysis {
     val nW = col("n_words"); val nS = col("n_sentences")
     val nSyl = col("n_syllables")
     docs.select(col(idCol).as("doc_id"),
-        coalesce(size(words), lit(0)).cast("bigint").as("n_words"),
+        coalesce(size(ws), lit(0)).cast("bigint").as("n_words"),
         sentences.as("n_sentences"),
-        coalesce(aggregate(words, lit(0L), (acc, w) => acc + syl(w)),
+        coalesce(aggregate(ws, lit(0L), (acc, w) => acc + syl(w)),
           lit(0L)).as("n_syllables"))
       .select(col("doc_id"), nW, nS, nSyl,
         when(nW === 0, lit(null).cast("double")).otherwise(round(
@@ -209,7 +209,7 @@ object TextAnalysis {
     * the cut boundary is engine-portable.
     */
   def vocabulary(docs: DataFrame, textCol: String, topN: Int): DataFrame =
-    docs.select(explode(split(normalize(col(textCol)), " ")).as("token"))
+    docs.select(explode(words(col(textCol))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("token").asc)
       .limit(topN)
@@ -275,7 +275,7 @@ object TextAnalysis {
                 topN: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tk = docs.select(col(groupCol).as("grp"), explode(filter(
-      split(normalize(col(textCol)), " "), t => length(t) > 0)).as("t"))
+      words(col(textCol)), t => length(t) > 0)).as("t"))
     val ranked = tk.groupBy(col("grp"), col("t"))
       .agg(count(lit(1)).as("freq"))
       .withColumn("rnk", row_number().over(
@@ -325,7 +325,7 @@ object TextAnalysis {
   def sourceDivergence(docs: DataFrame, textCol: String,
                        sourceCol: String): DataFrame = {
     val tk = docs.select(col(sourceCol).as("source"), explode(filter(
-      split(normalize(col(textCol)), " "), t => length(t) > 0)).as("t"))
+      words(col(textCol)), t => length(t) > 0)).as("t"))
     val csw = tk.groupBy(col("source"), col("t"))
       .agg(count(lit(1)).as("c_sw")).stage()
     val cw = csw.groupBy(col("t")).agg(sum(col("c_sw")).as("c_w"))
@@ -379,7 +379,7 @@ object TextAnalysis {
   def ablationDivergence(docs: DataFrame, textCol: String,
                          sourceCol: String): DataFrame = {
     val tk = docs.select(col(sourceCol).as("source"), explode(filter(
-      split(normalize(col(textCol)), " "), t => length(t) > 0)).as("t"))
+      words(col(textCol)), t => length(t) > 0)).as("t"))
     val csw = tk.groupBy(col("source"), col("t"))
       .agg(count(lit(1)).as("c_sw")).stage()
     val cw = csw.groupBy(col("t")).agg(sum(col("c_sw")).as("c_w"))
@@ -555,7 +555,7 @@ object TextAnalysis {
       acc => round(-closeRun(acc), 4).cast("double"))
     docs
       .select(col(idCol).as("doc_id"),
-        sort_array(split(normalize(col(textCol)), " ")).as("__w"))
+        sort_array(words(col(textCol))).as("__w"))
       .select(col("doc_id"), col("__w"),
         size(col("__w")).cast("double").as("__n"))
       .select(col("doc_id"),
@@ -565,7 +565,7 @@ object TextAnalysis {
   }
 
   def repetition(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = split(normalize(col(textCol)), " ")
+    val toks = words(col(textCol))
     def dupFrac(w: Column, k: Int): Column = {
       val total = (size(w) - (k - 1)).cast("double")
       when(size(w) < k, lit(null).cast("double"))
@@ -613,7 +613,7 @@ object TextAnalysis {
     */
   def lexicalDiversity(docs: DataFrame, idCol: String,
                        textCol: String): DataFrame = {
-    val w = filter(split(normalize(col(textCol)), " "),
+    val w = filter(words(col(textCol)),
       t => length(t) > 0)
     // hapax = tokens of multiplicity exactly 1: +1 when a new run
     // opens, −1 the moment it reaches length 2, 0 on longer runs.
@@ -659,7 +659,7 @@ object TextAnalysis {
   def goodTuring(docs: DataFrame, textCol: String,
                  groupCol: String): DataFrame = {
     val tk = docs.select(col(groupCol).as("grp"), explode(filter(
-      split(normalize(col(textCol)), " "), t => length(t) > 0)).as("t"))
+      words(col(textCol)), t => length(t) > 0)).as("t"))
     tk.groupBy(col("grp"), col("t")).agg(count(lit(1)).as("c"))
       .groupBy(col("grp"))
       .agg(sum(col("c")).as("n_tokens"),
@@ -769,7 +769,7 @@ object TextAnalysis {
     require(ks.distinct.size == ks.size,
       s"duplicate k values collapse in the per-k rollup: $ks")
     import org.apache.spark.sql.expressions.Window
-    val w = filter(split(normalize(col(textCol)), " "), t => length(t) > 0)
+    val w = filter(words(col(textCol)), t => length(t) > 0)
     val top = docs.select(explode(w).as("t"))
       .groupBy(col("t")).agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("t").asc).limit(ks.max)
@@ -871,7 +871,7 @@ object TextAnalysis {
     require(maxHitPct >= 0 && maxHitPct <= 100,
       s"maxHitPct is a percentage, got $maxHitPct")
     val bl = array(blocklist.map(lit): _*)
-    val ws = filter(split(normalize(col(textCol)), " "), t => length(t) > 0)
+    val ws = filter(words(col(textCol)), t => length(t) > 0)
     docs.select(col(idCol).as("doc_id"),
         size(ws).cast("bigint").as("n_tokens"),
         filter(ws, t => array_contains(bl, t)).as("hits"))
@@ -912,7 +912,7 @@ object TextAnalysis {
     // tokenize ONCE into a materialized column: captured inside the
     // positional transform, the regex split would re-run per gram
     // position (the HOF-lambda-capture rule — see collocations)
-    val ws = filter(split(normalize(col(textCol)), " "), t => length(t) > 0)
+    val ws = filter(words(col(textCol)), t => length(t) > 0)
     val tokenized = docs.select(ws.as("__ws"))
     val perN = ns.sorted.map { n =>
       // guard: sequence(1, size-n+1) DESCENDS when size < n, which
@@ -960,7 +960,7 @@ object TextAnalysis {
                    topK: Int = 100): DataFrame = {
     require(minCount >= 1 && topK >= 1,
       s"need minCount/topK >= 1, got $minCount/$topK")
-    val ws = filter(split(normalize(col(textCol)), " "), t => length(t) > 0)
+    val ws = filter(words(col(textCol)), t => length(t) > 0)
     // tokenize ONCE into a materialized column before the positional
     // transform — an expression captured inside the lambda would
     // re-run the regex split per position (the bootstrapCI lesson)
@@ -1017,7 +1017,7 @@ object TextAnalysis {
     */
   def heapsFit(docs: DataFrame, textCol: String,
                groupCol: String): DataFrame = {
-    val ws = filter(split(normalize(col(textCol)), " "), t => length(t) > 0)
+    val ws = filter(words(col(textCol)), t => length(t) > 0)
     val n = size(ws).cast("bigint")
     val v = size(array_distinct(ws)).cast("bigint")
     val pts = docs
@@ -1074,7 +1074,7 @@ object TextAnalysis {
                      k: Int = 5): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")
     import org.apache.spark.sql.expressions.Window
-    val ws = filter(split(normalize(col(textCol)), " "), t => length(t) > 0)
+    val ws = filter(words(col(textCol)), t => length(t) > 0)
     val hist = docs
       .select(col(groupCol).as("grp"), size(ws).cast("bigint").as("v"))
       .groupBy(col("grp"), col("v")).agg(count(lit(1)).as("cnt"))
@@ -1200,7 +1200,7 @@ object TextAnalysis {
   def ksDrift(docs: DataFrame, textCol: String,
               groupCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ws = filter(split(normalize(col(textCol)), " "), t => length(t) > 0)
+    val ws = filter(words(col(textCol)), t => length(t) > 0)
     val hist = docs
       .select(col(groupCol).as("grp"), size(ws).cast("bigint").as("v"))
       .groupBy(col("grp"), col("v")).agg(count(lit(1)).as("cnt"))
@@ -1360,7 +1360,7 @@ object TextAnalysis {
   def vocabGrowthCurve(docs: DataFrame, idCol: String, textCol: String,
                        points: Int = 10): DataFrame = {
     require(points >= 2, s"need >= 2 checkpoints, got $points")
-    val ws = filter(split(normalize(col(textCol)), " "), t => length(t) > 0)
+    val ws = filter(words(col(textCol)), t => length(t) > 0)
     val base = docs.select(col(idCol).cast("bigint").as("id"),
         ws.as("w"))
       .stage() // feeds the first-occurrence rollup AND the doc buckets
@@ -1413,7 +1413,7 @@ object TextAnalysis {
   def burstiness(docs: DataFrame, idCol: String, textCol: String,
                  topN: Int = 40): DataFrame = {
     require(topN >= 1, s"need topN >= 1, got $topN")
-    val ws = filter(split(normalize(col(textCol)), " "), t => length(t) > 0)
+    val ws = filter(words(col(textCol)), t => length(t) > 0)
     docs.select(col(idCol).as("__id"), explode(ws).as("t"))
       .groupBy(col("t"), col("__id")).agg(count(lit(1)).as("c"))
       .groupBy(col("t"))
@@ -1445,7 +1445,7 @@ object TextAnalysis {
     */
   def simpsonDiversity(docs: DataFrame, textCol: String,
                        groupCol: String): DataFrame = {
-    val ws = filter(split(normalize(col(textCol)), " "), t => length(t) > 0)
+    val ws = filter(words(col(textCol)), t => length(t) > 0)
     val freq = docs
       .select(col(groupCol).as("grp"), explode(ws).as("t"))
       .groupBy(col("grp"), col("t")).agg(count(lit(1)).as("c"))

@@ -63,7 +63,7 @@ object UnigramLM {
 
   private def words(docs: DataFrame, textCol: String): DataFrame =
     docs.select(explode(filter(
-        split(TextAnalysis.normalize(col(textCol)), " "),
+        TextAnalysis.words(col(textCol)),
         w => length(w) > 0)).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
 
@@ -169,7 +169,7 @@ object UnigramLM {
         col("k._2").cast("decimal(28,8)").as("wlp"))
     val agg = docs
       .select(col(idCol).as("doc_id"), explode(filter(
-        split(TextAnalysis.normalize(col(textCol)), " "),
+        TextAnalysis.words(col(textCol)),
         w => length(w) > 0)).as("w"))
       .join(dict, Seq("w"))
       .groupBy(col("doc_id"))
@@ -269,7 +269,7 @@ object UnigramLM {
         n
       }
     }
-    val w = split(TextAnalysis.normalize(col(textCol)), " ")
+    val w = TextAnalysis.words(col(textCol))
     docs.select(col(idCol).as("doc_id"),
       coalesce(size(filter(w, t => length(t) > 0)), lit(0))
         .cast("bigint").as("n_words"),

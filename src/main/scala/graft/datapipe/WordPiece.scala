@@ -38,7 +38,7 @@ object WordPiece {
 
   private def words(docs: DataFrame, textCol: String): DataFrame =
     docs.select(explode(filter(
-        split(TextAnalysis.normalize(col(textCol)), " "),
+        TextAnalysis.words(col(textCol)),
         w => length(w) > 0)).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
 
@@ -154,7 +154,7 @@ object WordPiece {
       .select(col("w"), nPieces(col("w")).as("n_sub"))
     val agg = docs
       .select(col(idCol).as("doc_id"), explode(filter(
-        split(TextAnalysis.normalize(col(textCol)), " "),
+        TextAnalysis.words(col(textCol)),
         w => length(w) > 0)).as("w"))
       .join(dict, Seq("w"))
       .groupBy(col("doc_id"))
@@ -184,7 +184,7 @@ object WordPiece {
         n
       }
     }
-    val w = split(TextAnalysis.normalize(col(textCol)), " ")
+    val w = TextAnalysis.words(col(textCol))
     docs.select(col(idCol).as("doc_id"),
       coalesce(size(filter(w, t => length(t) > 0)), lit(0))
         .cast("bigint").as("n_words"),

@@ -18,19 +18,20 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.model.TradeAvro
-
-/** TradeEvent rows ↔ Avro binary over Catalyst's `InternalRow`, with no
-  * JVM object per record: the codec behind [[graft.ops.TradeAvroOps]]
-  * and [[graft.model.AvroCodec]].
+/** Catalyst rows ↔ Avro binary for any record schema, with no JVM
+  * object per record: the one codec behind both reference topics —
+  * TradeEvent ([[graft.ops.TradeAvroOps]], [[graft.ops.HotPath]]) and
+  * HealthSensorRecord ([[graft.ops.HealthAvroOps]]) — and behind the
+  * object codecs of [[graft.model.AvroObjectCodec]].
   *
-  * One field walk of [[TradeAvro.tradeEventSchema]], compiled once into a
+  * One field walk of the record schema, compiled once per codec into a
   * small tree of writers and readers, drives Avro's own
   * `BinaryEncoder`/`BinaryDecoder` primitives in the order
   * `GenericDatumWriter` calls them, so the bytes are Avro's:
   *  - records: fields in schema order; a writer finds each field in the
   *    input struct by NAME, so field order and extra fields in the input
   *    do not matter;
+  *  - `int`, `long`, `double`: Catalyst int, bigint, double;
   *  - `union(null, T)`: the branch index, then T when non-null;
   *  - arrays: one block of `n` items and the end marker on write; any
   *    number of blocks on read (`readArrayStart`/`arrayNext`), so
@@ -40,14 +41,13 @@ import graft.model.TradeAvro
   *
   * A null where the schema has no null branch fails like Avro's writer
   * (NullPointerException naming the field). Decoded rows have the
-  * Catalyst type [[eventType]], derived from the same schema: required
-  * fields are non-nullable, union fields nullable, array items
-  * non-null. It matches `TradeEvent`'s encoder schema up to that
-  * nullability, so `.as[TradeEvent]` resolves on it.
+  * Catalyst type [[rowType]] of the same schema: required fields are
+  * non-nullable, union fields nullable, array items non-null. It
+  * matches the record case class's encoder schema up to that
+  * nullability, so `.as[TradeEvent]` / `.as[HealthSensorRecord]`
+  * resolves on it.
   */
-object TradeAvroRows {
-
-  private val schema = TradeAvro.tradeEventSchema
+object AvroRows {
 
   /** `union(null, T)` → (index of the null branch, T); other schemas → None. */
   private def optional(s: Schema): Option[(Int, Schema)] =
@@ -65,6 +65,7 @@ object TradeAvroRows {
       case Schema.Type.STRING => StringType
       case Schema.Type.DOUBLE => DoubleType
       case Schema.Type.LONG => LongType
+      case Schema.Type.INT => IntegerType
       case Schema.Type.ARRAY => ArrayType(catalystType(s.getElementType),
         containsNull = optional(s.getElementType).isDefined)
       case Schema.Type.RECORD => StructType(s.getFields.asScala.map(f =>
@@ -73,8 +74,8 @@ object TradeAvroRows {
     }
   }
 
-  /** Catalyst type of a decoded TradeEvent. */
-  val eventType: StructType = catalystType(schema).asInstanceOf[StructType]
+  /** Catalyst type of a decoded `schema` record. */
+  def rowType(schema: Schema): StructType = catalystType(schema).asInstanceOf[StructType]
 
   // --- write: Catalyst value → Avro ------------------------------
 
@@ -102,6 +103,10 @@ object TradeAvroRows {
 
   private object PutLong extends Put {
     def put(in: SpecializedGetters, i: Int, out: Encoder): Unit = out.writeLong(in.getLong(i))
+  }
+
+  private object PutInt extends Put {
+    def put(in: SpecializedGetters, i: Int, out: Encoder): Unit = out.writeInt(in.getInt(i))
   }
 
   private final class PutOptional(nullBranch: Int, value: Put) extends Put {
@@ -160,6 +165,7 @@ object TradeAvroRows {
       case (Schema.Type.STRING, _: StringType) => PutString
       case (Schema.Type.DOUBLE, DoubleType) => PutDouble
       case (Schema.Type.LONG, LongType) => PutLong
+      case (Schema.Type.INT, IntegerType) => PutInt
       case (Schema.Type.ARRAY, ArrayType(et, containsNull)) =>
         val itemRequired = containsNull && optional(s.getElementType).isEmpty
         new PutArray(writer(s.getElementType, et, s"$path[]"),
@@ -181,9 +187,9 @@ object TradeAvroRows {
     }
   }
 
-  /** The TradeEvent writer for rows of `input`; fails when a schema
-    * field is missing from `input` or has an incompatible type. */
-  private[functions] def writer(input: StructType): PutRecord =
+  /** The `schema` record writer for rows of `input`; fails when a
+    * schema field is missing from `input` or has an incompatible type. */
+  private[functions] def writer(schema: Schema, input: StructType): PutRecord =
     writer(schema, input, schema.getName).asInstanceOf[PutRecord]
 
   // --- read: Avro → Catalyst value --------------------------------
@@ -206,6 +212,10 @@ object TradeAvroRows {
 
   private object GetLong extends Get {
     def get(in: Decoder): Any = in.readLong()
+  }
+
+  private object GetInt extends Get {
+    def get(in: Decoder): Any = in.readInt()
   }
 
   private final class GetOptional(nullBranch: Int, value: Get) extends Get {
@@ -248,52 +258,53 @@ object TradeAvroRows {
     }
   }
 
-  private def reader(s: Schema): Get = optional(s) match {
+  /** The reader of one `s` value; for a record schema, one row of
+    * type [[rowType]]. */
+  private[functions] def reader(s: Schema): Get = optional(s) match {
     case Some((nul, t)) => new GetOptional(nul, reader(t))
     case None => s.getType match {
       case Schema.Type.STRING => GetString
       case Schema.Type.DOUBLE => GetDouble
       case Schema.Type.LONG => GetLong
+      case Schema.Type.INT => GetInt
       case Schema.Type.ARRAY => new GetArray(reader(s.getElementType))
       case Schema.Type.RECORD => new GetRecord(s.getFields.asScala.map(f => reader(f.schema)).toArray)
       case other => throw new IllegalArgumentException(s"unsupported Avro type $other")
     }
   }
 
-  private val eventReader: Get = reader(schema)
-
-  /** One TradeEvent row of type [[eventType]] read from `in`. */
-  private[functions] def read(in: Decoder): InternalRow = eventReader.get(in).asInstanceOf[InternalRow]
-
   // --- Column API ---------------------------------------------------
 
-  /** TradeEvent struct → Avro binary. */
-  def encode(event: Column): Column =
-    ColumnBridge.column(TradeAvroEncode(ColumnBridge.expression(event), None))
+  /** `schema` record struct → Avro binary. */
+  def encode(record: Column, schema: Schema): Column =
+    ColumnBridge.column(AvroEncode(ColumnBridge.expression(record), schema, None))
 
-  /** TradeEvent struct → registry-framed Avro binary (0x0 magic +
+  /** `schema` record struct → registry-framed Avro binary (0x0 magic +
     * big-endian schema id + payload). */
-  def encodeWire(event: Column, schemaId: Int): Column =
-    ColumnBridge.column(TradeAvroEncode(ColumnBridge.expression(event), Some(schemaId)))
+  def encodeWire(record: Column, schema: Schema, schemaId: Int): Column =
+    ColumnBridge.column(AvroEncode(ColumnBridge.expression(record), schema, Some(schemaId)))
 
-  /** Avro binary → TradeEvent struct of type [[eventType]]. */
-  def decode(bytes: Column): Column =
-    ColumnBridge.column(TradeAvroDecode(ColumnBridge.expression(bytes), wire = false, None))
+  /** Avro binary → `schema` record struct of type [[rowType]]. */
+  def decode(bytes: Column, schema: Schema): Column =
+    ColumnBridge.column(AvroDecode(ColumnBridge.expression(bytes), schema, wire = false, None))
 
-  /** Registry-framed Avro binary → TradeEvent struct; a wrong magic byte,
-    * or a schema id other than `expectSchemaId` when set, fails the query. */
-  def decodeWire(bytes: Column, expectSchemaId: Option[Int]): Column =
-    ColumnBridge.column(TradeAvroDecode(ColumnBridge.expression(bytes), wire = true, expectSchemaId))
+  /** Registry-framed Avro binary → `schema` record struct; a wrong magic
+    * byte, or a schema id other than `expectSchemaId` when set, fails
+    * the query. */
+  def decodeWire(bytes: Column, schema: Schema, expectSchemaId: Option[Int]): Column =
+    ColumnBridge.column(AvroDecode(ColumnBridge.expression(bytes), schema, wire = true, expectSchemaId))
 }
 
-/** The reusable state of one encoder/decoder: output buffer, Avro
-  * encoder and decoder, and the writer compiled for rows of `input`.
-  * Not thread-safe; generated code holds one per task.
+/** The reusable state of one encoder/decoder of `schema` records:
+  * output buffer, Avro encoder and decoder, the writer compiled for rows
+  * of `input` and the reader. Not thread-safe; generated code holds one
+  * per task.
   */
-final class TradeAvroRowCodec(input: StructType) {
-  def this() = this(TradeAvroRows.eventType)
+final class AvroRowCodec(schema: Schema, input: StructType) {
+  def this(schema: Schema) = this(schema, AvroRows.rowType(schema))
 
-  private lazy val writer = TradeAvroRows.writer(input)
+  private lazy val writer = AvroRows.writer(schema, input)
+  private lazy val reader = AvroRows.reader(schema)
   private val out = new ByteArrayOutputStream(512)
   // bound to `out` once: re-binding per record allocates a new sink
   private var encoder: BinaryEncoder = EncoderFactory.get().binaryEncoder(out, null)
@@ -351,30 +362,33 @@ final class TradeAvroRowCodec(input: StructType) {
   /** The payload of a registry frame whose header was checked. */
   def decodeAt(bytes: Array[Byte], offset: Int): InternalRow = {
     decoder = DecoderFactory.get().binaryDecoder(bytes, offset, bytes.length - offset, decoder)
-    TradeAvroRows.read(decoder)
+    reader.get(decoder).asInstanceOf[InternalRow]
   }
 }
 
-/** TradeEvent struct → Avro binary, framed with the registry header when
-  * `schemaId` is set. Null struct → null. */
-case class TradeAvroEncode(child: Expression, schemaId: Option[Int]) extends UnaryExpression {
+/** `schema` record struct → Avro binary, framed with the registry header
+  * when `schemaId` is set. Null struct → null. */
+case class AvroEncode(child: Expression, schema: Schema, schemaId: Option[Int])
+    extends UnaryExpression {
 
   override def dataType: DataType = BinaryType
-  override def prettyName: String = "trade_avro_encode"
+  override def prettyName: String = "avro_encode"
+  // the schema prints as its name, not as its JSON
+  override protected def stringArgs: Iterator[Any] = Iterator(child, schema.getFullName, schemaId)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case st: StructType => Try(TradeAvroRows.writer(st)) match {
+    case st: StructType => Try(AvroRows.writer(schema, st)) match {
       case Success(_) => TypeCheckResult.TypeCheckSuccess
       case Failure(e) => TypeCheckResult.TypeCheckFailure(
-        s"trade_avro_encode cannot write ${st.catalogString}: ${e.getMessage}")
+        s"avro_encode cannot write ${st.catalogString} as ${schema.getFullName}: ${e.getMessage}")
     }
     case other => TypeCheckResult.TypeCheckFailure(
-      s"trade_avro_encode requires a TradeEvent struct, got ${other.catalogString}")
+      s"avro_encode requires a ${schema.getFullName} struct, got ${other.catalogString}")
   }
 
   @transient private lazy val codec = newCodec()
 
-  def newCodec(): TradeAvroRowCodec = new TradeAvroRowCodec(child.dataType.asInstanceOf[StructType])
+  def newCodec(): AvroRowCodec = new AvroRowCodec(schema, child.dataType.asInstanceOf[StructType])
 
   override def nullSafeEval(input: Any): Any = {
     val row = input.asInstanceOf[InternalRow]
@@ -382,33 +396,37 @@ case class TradeAvroEncode(child: Expression, schemaId: Option[Int]) extends Una
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("tradeAvroEncode", this)
-    val codec = ctx.addMutableState(classOf[TradeAvroRowCodec].getName, "tradeAvroCodec",
+    val self = ctx.addReferenceObj("avroEncode", this)
+    val codec = ctx.addMutableState(classOf[AvroRowCodec].getName, "avroCodec",
       v => s"$v = $self.newCodec();")
     defineCodeGen(ctx, ev, row =>
       schemaId.fold(s"$codec.encode($row)")(id => s"$codec.encodeWire($row, $id)"))
   }
 
-  override protected def withNewChildInternal(newChild: Expression): TradeAvroEncode =
+  override protected def withNewChildInternal(newChild: Expression): AvroEncode =
     copy(child = newChild)
 }
 
-/** Avro binary → TradeEvent struct of type [[TradeAvroRows.eventType]];
+/** Avro binary → `schema` record struct of type [[AvroRows.rowType]];
   * with `wire`, the binary carries the registry header, whose schema id
   * must equal `expectSchemaId` when that is set. Null binary → null. */
-case class TradeAvroDecode(child: Expression, wire: Boolean, expectSchemaId: Option[Int])
-    extends UnaryExpression {
+case class AvroDecode(child: Expression, schema: Schema, wire: Boolean,
+                      expectSchemaId: Option[Int]) extends UnaryExpression {
 
-  override def dataType: DataType = TradeAvroRows.eventType
-  override def prettyName: String = "trade_avro_decode"
+  override lazy val dataType: DataType = AvroRows.rowType(schema)
+  override def prettyName: String = "avro_decode"
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, schema.getFullName, wire, expectSchemaId)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case BinaryType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"trade_avro_decode requires binary, got ${other.catalogString}")
+      s"avro_decode requires binary, got ${other.catalogString}")
   }
 
-  @transient private lazy val codec = new TradeAvroRowCodec()
+  @transient private lazy val codec = newCodec()
+
+  def newCodec(): AvroRowCodec = new AvroRowCodec(schema)
 
   override def nullSafeEval(input: Any): Any = {
     val bytes = input.asInstanceOf[Array[Byte]]
@@ -417,13 +435,14 @@ case class TradeAvroDecode(child: Expression, wire: Boolean, expectSchemaId: Opt
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = classOf[TradeAvroRowCodec].getName
-    val codec = ctx.addMutableState(cls, "tradeAvroCodec", v => s"$v = new $cls();")
+    val self = ctx.addReferenceObj("avroDecode", this)
+    val codec = ctx.addMutableState(classOf[AvroRowCodec].getName, "avroCodec",
+      v => s"$v = $self.newCodec();")
     defineCodeGen(ctx, ev, bytes =>
       if (wire) s"$codec.decodeWire($bytes, ${expectSchemaId.isDefined}, ${expectSchemaId.getOrElse(0)})"
       else s"$codec.decode($bytes)")
   }
 
-  override protected def withNewChildInternal(newChild: Expression): TradeAvroDecode =
+  override protected def withNewChildInternal(newChild: Expression): AvroDecode =
     copy(child = newChild)
 }

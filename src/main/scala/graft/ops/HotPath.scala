@@ -3,8 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TradeAvroRows
+import graft.functions.AvroRows
 import graft.identity.CredentialOps
+import graft.model.TradeAvro
 
 /** The reference's consumer topology as ONE reusable composition —
   * WS frame parse (P1/P3/P4) → default-fill (P2) → envelope build
@@ -62,8 +63,9 @@ object HotPath {
       lit("2024-01-01T00:00:00Z"), perTradeSsi, td, cred)
     // K2 egress + S3 ingress as two row expressions: no TradeEvent
     // object is built per trade (see TradeAvroOps)
+    val schema = TradeAvro.tradeEventSchema
     val decoded = trades.select(
-      TradeAvroRows.decode(TradeAvroRows.encode(env)).as("ev"))
+      AvroRows.decode(AvroRows.encode(env, schema), schema).as("ev"))
     val vc = col("ev.tradeCredential")
     decoded.select(col("ev.symbol").as("symbol"),
       vc.isNotNull.as("is_ssi"),

@@ -233,6 +233,27 @@ object Streams {
   final case class BucketState(ids: Array[Long], sigs: Array[Array[Long]],
                                pos: Int)
 
+  /** One arrival into a bucket's bounded FIFO ring of (id, payload)
+    * slots, the state update of [[nearDupStream]] and [[codeDupStream]]:
+    * appends while fewer than `cap` slots are held, then overwrites the
+    * oldest slot in place and advances `pos`. Returns the ring's new
+    * (ids, payloads, pos).
+    */
+  private def ringPush[P](ids: Array[Long], payloads: Array[P], pos: Int,
+                          id: Long, payload: P, cap: Int): (Array[Long], Array[P], Int) =
+    if (ids.length < cap) {
+      val n = ids.length
+      val ids2 = java.util.Arrays.copyOf(ids, n + 1)
+      val payloads2 = Array.copyOf(payloads, n + 1)
+      ids2(n) = id
+      payloads2(n) = payload
+      (ids2, payloads2, 0)
+    } else {
+      ids(pos) = id
+      payloads(pos) = payload
+      (ids, payloads, (pos + 1) % cap)
+    }
+
   /** Streaming near-duplicate detection — the streaming twin of
     * [[graft.datapipe.Dedup.minhashPairs]]: each incoming document's
     * minhash signature is banded into LSH bucket keys, and
@@ -326,19 +347,8 @@ object Streams {
               }
               j += 1
             }
-            st = if (st.ids.length < maxPerBucket) {
-              val n = st.ids.length
-              val ids2 = java.util.Arrays.copyOf(st.ids, n + 1)
-              val sigs2 = java.util.Arrays.copyOf(st.sigs, n + 1)
-              ids2(n) = id
-              sigs2(n) = sigArr
-              BucketState(ids2, sigs2, 0)
-            } else {
-              // full: overwrite the oldest slot in place, advance pos
-              st.ids(st.pos) = id
-              st.sigs(st.pos) = sigArr
-              BucketState(st.ids, st.sigs, (st.pos + 1) % maxPerBucket)
-            }
+            val (ids, sigs, pos) = ringPush(st.ids, st.sigs, st.pos, id, sigArr, maxPerBucket)
+            st = BucketState(ids, sigs, pos)
           }
           state.update(st)
           stateTtl.foreach(state.setTimeoutDuration)
@@ -526,18 +536,8 @@ object Streams {
               }
               j += 1
             }
-            st = if (st.ids.length < maxPerBucket) {
-              val n = st.ids.length
-              val ids2 = java.util.Arrays.copyOf(st.ids, n + 1)
-              val codes2 = java.util.Arrays.copyOf(st.codes, n + 1)
-              ids2(n) = id
-              codes2(n) = code
-              CodeBucketState(ids2, codes2, 0)
-            } else {
-              st.ids(st.pos) = id
-              st.codes(st.pos) = code
-              CodeBucketState(st.ids, st.codes, (st.pos + 1) % maxPerBucket)
-            }
+            val (ids, codes, pos) = ringPush(st.ids, st.codes, st.pos, id, code, maxPerBucket)
+            st = CodeBucketState(ids, codes, pos)
           }
           state.update(st)
           stateTtl.foreach(state.setTimeoutDuration)
@@ -635,20 +635,6 @@ object Streams {
       .join(right.withWatermark(rightTs, watermark), cond, joinType)
   }
 
-  /** U5: batched side-output — the reference's size-OR-timeout git
-    * batcher (host_did_web/src/main.go:207-279: flush at BatchSize
-    * items or BatchTimeout, whichever first). Structured-Streaming
-    * mapping: the TRIGGER is the timeout (a ProcessingTime trigger
-    * bounds how long an item waits) and the size cap is applied
-    * INSIDE foreachBatch by chunking the micro-batch into
-    * `flush_group`s of `batchSize` rows in `orderCol` order — each
-    * group is one side-effecting flush, tagged with its
-    * (batch_id, flush_group) so downstream audit can replay exactly
-    * which flush carried which records.
-    *
-    * The per-batch window is driver-light (no collect): the chunk
-    * assignment is a row_number window written straight back out.
-    */
   /** Streaming per-source token QUOTA gate — the arrival-order twin
     * of [[graft.datapipe.Sampling.tokenBudget]]. The batch operator
     * ranks a finished pool by priority and takes the greedy prefix;
@@ -692,6 +678,20 @@ object Streams {
       .toDF("doc_id", "source", "n_tokens", "cum_tokens")
   }
 
+  /** U5: batched side-output — the reference's size-OR-timeout git
+    * batcher (host_did_web/src/main.go:207-279: flush at BatchSize
+    * items or BatchTimeout, whichever first). Structured-Streaming
+    * mapping: the TRIGGER is the timeout (a ProcessingTime trigger
+    * bounds how long an item waits) and the size cap is applied
+    * INSIDE foreachBatch by chunking each input partition of the
+    * micro-batch into `flush_group`s of `batchSize` rows in `orderCol`
+    * order — each group is one side-effecting flush, tagged with its
+    * (batch_id, part_id, flush_group) so downstream audit can replay
+    * exactly which flush carried which records.
+    *
+    * The per-batch window is driver-light (no collect): the chunk
+    * assignment is a row_number window written straight back out.
+    */
   def batchedSideOutput(df: DataFrame, outPath: String, checkpoint: String,
                         batchSize: Int = 10, orderCol: String = "event_id",
                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
@@ -730,7 +730,8 @@ object Streams {
     * Efraimidis–Spirakis (their Algorithm A-Res is a streaming
     * algorithm): maintain the top-k rows by key u^(1/w) as rows
     * arrive. The batch twin [[graft.datapipe.Sampling.weightedSample]]
-    * is its deterministic certificate: u derives from the md5
+    * is its deterministic certificate: both rank by the same key
+    * ([[graft.datapipe.Sampling.esKey]]), whose u derives from the md5
     * contract, so after any batch split the reservoir holds exactly
     * the batch top-k (StreamingSpec pins it).
     *
@@ -747,16 +748,13 @@ object Streams {
     val spark = rows.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import graft.datapipe.TextAnalysis
+    import graft.datapipe.{Sampling, TextAnalysis}
     val keyed = rows.select(
         col(idCol).cast("long").as("id"), col(wCol).cast("long").as("w"),
         pmod(TextAnalysis.md5Long60(
           concat(lit("wss:"), col(idCol).cast("string"))),
           lit(shards.toLong)).as("shard"),
-        round(pow(
-          (TextAnalysis.md5Long60(concat(lit("ws:"), col(idCol).cast("string")))
-            % 1000000000L + 1L).cast("double") / lit(1e9),
-          lit(1.0) / col(wCol).cast("double")), 8).as("es_key"))
+        Sampling.esKey(col(idCol), col(wCol)).as("es_key"))
       .as[(Long, Long, Long, Double)]
     keyed.groupByKey(_._3)
       .flatMapGroupsWithState[ReservoirState, (Long, Long, Long, Double)](
@@ -865,7 +863,10 @@ object Streams {
     * shard processes its rows in doc_id order (the canonical order
     * that makes the gate replayable — with batches arriving in
     * doc_id order the emitted flags equal the batch twin exactly;
-    * StreamingSpec pins it across multiple batches).
+    * StreamingSpec pins it across multiple batches). Shards and bit
+    * positions come from [[graft.datapipe.Sketches.bloomGateKeys]],
+    * the batch twin's own definition, which also rejects a gate shape
+    * the batch twin rejects (k < 1 would flag every document).
     *
     * State per shard is (mBits+63)/64 longs — kilobytes total at any
     * corpus size, the entire point of a bloom gate; shards scale the
@@ -876,15 +877,8 @@ object Streams {
     val spark = docs.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import graft.datapipe.{Sketches, TextAnalysis}
     val words = (mBits + 63) / 64
-    val keyed = docs.select(col(idCol).as("doc_id"),
-        TextAnalysis.fingerprint(col(textCol)).cast("string").as("fp"))
-      .select(col("doc_id"),
-        pmod(TextAnalysis.md5Long60(concat(lit("shard:"), col("fp"))),
-          lit(shards.toLong)).as("shard"),
-        array((0 until k).map(i =>
-          Sketches.bloomBit(col("fp"), i, mBits)): _*).as("bits"))
+    val keyed = graft.datapipe.Sketches.bloomGateKeys(docs, idCol, textCol, k, mBits, shards)
     keyed.as[(Long, Long, Seq[Long])]
       .groupByKey(_._2)
       .flatMapGroupsWithState[BloomShardState, (Long, Long, Boolean)](

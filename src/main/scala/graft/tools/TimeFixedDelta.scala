@@ -33,7 +33,7 @@ object TimeFixedDelta {
     val deltaBase = Tables.documents(spark, "/root/testdata/sf0.1")
       .filter(col("doc_id") < deltaDocs)
       .select(col("doc_id").as("id"), col("text"))
-    val toks = split(TextAnalysis.normalize(col("text")), " ")
+    val toks = TextAnalysis.words(col("text"))
     val delta = deltaBase
       .select((col("id") + 1000000).as("id"),
         array_join(slice(toks, lit(1), size(toks) - 1), " ").as("text"))

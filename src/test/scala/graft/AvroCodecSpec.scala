@@ -6,7 +6,7 @@ import org.apache.avro.io.EncoderFactory
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 
-import graft.functions.TradeAvroRows
+import graft.functions.AvroRows
 import graft.model._
 import graft.ops.TradeAvroOps
 
@@ -217,7 +217,7 @@ class AvroCodecSpec extends SparkSpec {
       case ArrayType(et, _) => ArrayType(nullable(et), containsNull = true)
       case other => other
     }
-    assert(nullable(TradeAvroRows.eventType) ===
+    assert(nullable(AvroRows.rowType(TradeAvro.tradeEventSchema)) ===
       nullable(Encoders.product[TradeEvent].schema))
   }
 }

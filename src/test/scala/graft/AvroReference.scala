@@ -10,9 +10,10 @@ import org.apache.avro.io.{DecoderFactory, EncoderFactory}
 
 import graft.model._
 
-/** Avro's own generic writer and reader over [[TradeAvro.tradeEventSchema]]:
-  * the judge of the wire format the engine's row codec must match
-  * byte for byte. Case class ↔ GenericRecord by field name.
+/** Avro's own generic writer and reader over [[TradeAvro.tradeEventSchema]]
+  * and [[HealthAvro.healthSensorRecordSchema]]: the judge of the wire
+  * format the engine's row codec must match byte for byte. Case class ↔
+  * GenericRecord by field name.
   */
 object AvroReference {
   private val schema = TradeAvro.tradeEventSchema
@@ -92,17 +93,43 @@ object AvroReference {
       Option(r.get("tradeData")).map(v => toTradeData(v.asInstanceOf[GenericRecord])),
       Option(r.get("tradeCredential")).map(v => toCredential(v.asInstanceOf[GenericRecord])))
 
-  /** GenericDatumWriter's bytes for `ev`. */
-  def write(ev: TradeEvent): Array[Byte] = {
+  private def bytes(s: Schema, r: GenericRecord): Array[Byte] = {
     val out = new ByteArrayOutputStream()
     val enc = EncoderFactory.get().binaryEncoder(out, null)
-    new GenericDatumWriter[GenericRecord](schema).write(toRecord(ev), enc)
+    new GenericDatumWriter[GenericRecord](s).write(r, enc)
     enc.flush()
     out.toByteArray
   }
+
+  /** GenericDatumWriter's bytes for `ev`. */
+  def write(ev: TradeEvent): Array[Byte] = bytes(schema, toRecord(ev))
 
   /** GenericDatumReader's event from `bytes`. */
   def read(bytes: Array[Byte]): TradeEvent =
     toEvent(new GenericDatumReader[GenericRecord](schema)
       .read(null, DecoderFactory.get().binaryDecoder(bytes, null)))
+
+  def toRecord(rec: HealthSensorRecord): GenericRecord = {
+    val d = new GenericData.Record(HealthAvro.sensorDataSchema)
+    d.put("id", rec.data.id)
+    d.put("patient_id", rec.data.patient_id)
+    d.put("event_timestamp", rec.data.event_timestamp)
+    d.put("sensor_id", rec.data.sensor_id)
+    d.put("sensor_type", rec.data.sensor_type)
+    d.put("temperature", rec.data.temperature)
+    d.put("systolic_bp", rec.data.systolic_bp)
+    d.put("diastolic_bp", rec.data.diastolic_bp)
+    d.put("heart_rate", rec.data.heart_rate)
+    val r = new GenericData.Record(HealthAvro.healthSensorRecordSchema)
+    r.put("data", d)
+    r.put("vc_store_signature", rec.vc_store_signature)
+    r.put("start_timestamp", rec.start_timestamp)
+    r.put("did", rec.did)
+    r.put("jwt", rec.jwt)
+    r
+  }
+
+  /** GenericDatumWriter's bytes for the health record `rec`. */
+  def write(rec: HealthSensorRecord): Array[Byte] =
+    bytes(HealthAvro.healthSensorRecordSchema, toRecord(rec))
 }

@@ -49,7 +49,7 @@ class HotPathSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Console.withOut(out)(q.explain())
       out.toString("UTF-8")
     } finally q.stop()
-    assert(plan.contains("trade_avro_decode"), s"no micro-batch plan:\n$plan")
+    assert(plan.contains("avro_decode("), s"no micro-batch plan:\n$plan")
     assert(!plan.contains("Exchange"), s"streaming readout shuffles:\n$plan")
   }
 
@@ -58,7 +58,7 @@ class HotPathSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val objectNodes = Set("DeserializeToObject", "MapPartitions", "SerializeFromObject")
     val found = collect(plan) { case p if objectNodes(p.nodeName) => p.nodeName }
     assert(found.isEmpty, s"object nodes $found in\n$plan")
-    assert(plan.toString.contains("trade_avro_encode") &&
-      plan.toString.contains("trade_avro_decode"))
+    assert(plan.toString.contains("avro_encode(") &&
+      plan.toString.contains("avro_decode("))
   }
 }

@@ -581,6 +581,17 @@ class StreamingSpec extends SparkSpec {
     assert(!batch(1L)._2 && !batch(4L)._2, "first occurrences pass")
   }
 
+  test("streaming bloom gate rejects k = 0 like its batch twin") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.streaming.Streams
+    // with no bit positions every document would pass `bits.forall`
+    // and be flagged seen_before
+    val docs = MemoryStream[(Long, String)].toDF().toDF("doc_id", "text")
+    val ex = intercept[IllegalArgumentException](
+      Streams.bloomSeenStream(docs, "doc_id", "text", k = 0, mBits = 4096, shards = 2))
+    assert(ex.getMessage.contains("bad gate shape"))
+  }
+
   test("streaming funnel: stateful stage election across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.Streams
