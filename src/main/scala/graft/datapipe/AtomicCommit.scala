@@ -30,20 +30,34 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * partition pruning and column pruning behave exactly as on a single
   * root (each root carries the same `cell=N` directory layout).
   *
-  * WRITER CONTRACT for the versioned-index lifecycle built on this
-  * protocol ([[VectorIndex]], [[Dedup.minhashIndexCompact]]):
-  * APPENDS may run concurrently with maintenance — a compact/rebuild
-  * re-lists the live version's committed deltas right before its
-  * MANIFEST swap and folds forward any commit that landed after its
-  * snapshot, and the per-table FOLDED ledger ([[foldedIds]]) carries
-  * every folded commit-id into the new version so a redelivery
-  * straddling the swap stays a no-op. MAINTENANCE itself is
-  * single-writer: run at most one compact/rebuild/vacuum per index
-  * root at a time (two concurrent maintenance runs can race the same
-  * `v<n>` name and the MANIFEST swap). An append that commits into a
-  * version superseded mid-flight is never lost: it is ORPHANED, the
-  * next compact folds it forward from the superseded root, and
-  * vacuum REFUSES to sweep while any orphan exists.
+  * THE VERSIONED-INDEX LIFECYCLE — the one protocol both stored
+  * indexes run ([[Dedup.minhashIndexCompact]], [[VectorIndex.compact]],
+  * [[VectorIndex.rebuild]]/`rebuildPq`): `<path>/MANIFEST` names the
+  * live version directory (`v1`, `v2`, …) under `<path>`; no MANIFEST
+  * means the legacy flat layout (the version IS `<path>`). One
+  * maintenance step ([[maintain]]), in commit order:
+  *  1. snapshot each table's committed roots (base + committed
+  *     deltas) ONCE — what the rewrite folds is that driver-side list,
+  *     never a re-listing race;
+  *  2. the index's own rewrite of the snapshot into `v<n+1>`;
+  *  3. write each table's FOLDED ledger ([[foldedIds]]) = the live
+  *     ledger ∪ the snapshot's delta ids, so a redelivery of a folded
+  *     commit stays a no-op across the swap;
+  *  4. fold forward, through [[commitAppend]] under its original id,
+  *     every commit the snapshot missed — late commits into the
+  *     still-live version and ORPHANS stranded in superseded roots by
+  *     an earlier race — re-committed by the index's own refold;
+  *  5. swap the MANIFEST (one atomic rename, [[writeManifest]]).
+  * A step killed anywhere before 5 leaves the old version fully live.
+  *
+  * WRITER CONTRACT: APPENDS may run concurrently with maintenance.
+  * MAINTENANCE itself is single-writer: run at most one
+  * compact/rebuild/vacuum per index root at a time (two concurrent
+  * maintenance runs can race the same `v<n>` name and the MANIFEST
+  * swap). An append that commits into a version superseded
+  * mid-flight is never lost: it is ORPHANED, the next maintenance
+  * step folds it forward, and [[vacuum]] REFUSES to sweep while any
+  * orphan exists.
   */
 object AtomicCommit {
 
@@ -58,16 +72,13 @@ object AtomicCommit {
     * torn directory in — the rename protocol itself publishes
     * complete writes only).
     */
-  def committedPaths(target: String): Seq[String] = {
-    val base =
-      if (new java.io.File(target).isDirectory) Seq(target) else Seq.empty
-    val deltas = Option(new java.io.File(deltasRoot(target)).listFiles())
-      .map(_.toSeq).getOrElse(Seq.empty)
-      .filter(d => d.isDirectory && new java.io.File(d, "_SUCCESS").exists())
-      .sortBy(_.getName)
-      .map(_.getPath)
-    base ++ deltas
-  }
+  def committedPaths(target: String): Seq[String] =
+    roots(target, committedDeltaIds(target))
+
+  // the base of `target` (if present) plus its delta dirs `ids`
+  private def roots(target: String, ids: Seq[String]): Seq[String] =
+    (if (new java.io.File(target).isDirectory) Seq(target) else Seq.empty) ++
+      ids.map(id => s"${deltasRoot(target)}/$id")
 
   /** The commit-ids of the COMMITTED delta directories of `target`
     * (directory names, committed order) — the filesystem half of the
@@ -94,10 +105,10 @@ object AtomicCommit {
     else Set.empty
 
   /** Atomically (re)write the folded-commit ledger of `target` —
-    * written ONCE per version by the maintenance rewrite, before the
-    * MANIFEST swap publishes the version.
+    * written ONCE per version by [[maintain]], before the MANIFEST
+    * swap publishes the version.
     */
-  def writeFoldedIds(target: String, ids: Set[String]): Unit = {
+  private def writeFoldedIds(target: String, ids: Set[String]): Unit = {
     val p = foldedPath(target)
     Files.createDirectories(p.getParent)
     val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
@@ -122,21 +133,23 @@ object AtomicCommit {
     * probe each root for their own table names — a root without the
     * table contributes nothing.
     */
-  def supersededRoots(path: String): Seq[String] = {
-    if (!Files.exists(Paths.get(path, "MANIFEST"))) return Seq.empty
-    val live = resolveVersionRoot(path)
+  private def supersededRoots(path: String): Seq[String] =
+    manifestName(path).toSeq.flatMap { live =>
+      versionDirs(path).filterNot(_.getName == live).map(_.getPath) :+ path
+    }
+
+  // the `v<n>` version directories under `path`
+  private def versionDirs(path: String): Seq[java.io.File] =
     Option(new java.io.File(path).listFiles())
       .map(_.toSeq).getOrElse(Seq.empty)
       .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
-      .map(_.getPath).filterNot(_ == live) :+ path
-  }
 
   /** Orphaned deltas of table `table` under the versioned index at
     * `path`: (supersededRoot, commitId) pairs committed into a
     * superseded version and absent from the live version's committed
-    * set — an append that raced a maintenance swap. The next compact
-    * folds these forward; [[VectorIndex.vacuum]] /
-    * [[Dedup.minhashVacuum]] refuse while any exist.
+    * set — an append that raced a maintenance swap. The next
+    * [[maintain]] folds these forward; [[vacuum]] refuses while any
+    * exist.
     */
   def orphanedDeltas(path: String, table: String): Seq[(String, String)] = {
     val liveSet = committedIds(s"${resolveVersionRoot(path)}/$table")
@@ -145,10 +158,12 @@ object AtomicCommit {
     }
   }
 
-  /** Recursive copy with the walk stream closed. Used by the
-    * maintenance fold-forward (a committed delta dir is a complete
-    * parquet dataset — copying it under a new version preserves both
-    * the data and the `_SUCCESS` marker the commit protocol checks).
+  /** Recursive copy with the walk stream closed (`Files.walk` holds a
+    * directory handle until its stream is closed). The minhash
+    * fold-forward uses it — a committed delta dir is a complete parquet
+    * dataset, so copying it under a new version preserves both the
+    * data and the `_SUCCESS` marker the commit protocol checks — and
+    * so do the catalog's index scratch copies.
     */
   def copyDir(from: String, to: String): Unit = {
     val src = Paths.get(from)
@@ -233,7 +248,9 @@ object AtomicCommit {
     }
   }
 
-  private[datapipe] def deleteRecursively(p: java.nio.file.Path): Unit =
+  /** Recursive delete with the walk stream closed; a missing `p` is a
+    * no-op. */
+  def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       val s = Files.walk(p)
       try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
@@ -246,23 +263,22 @@ object AtomicCommit {
     * flat layout). One bounded driver read; shared by the vector
     * index and the minhash index roots.
     */
-  def resolveVersionRoot(path: String): String = {
+  def resolveVersionRoot(path: String): String =
+    manifestName(path).fold(path)(v => s"$path/$v")
+
+  // the live version name the MANIFEST holds; None for a flat index
+  private def manifestName(path: String): Option[String] = {
     val m = Paths.get(path, "MANIFEST")
     if (Files.exists(m))
-      s"$path/${new String(Files.readAllBytes(m),
-        java.nio.charset.StandardCharsets.UTF_8).trim}"
-    else path
+      Some(new String(Files.readAllBytes(m),
+        java.nio.charset.StandardCharsets.UTF_8).trim)
+    else None
   }
 
   /** The next unused `v<n>` version name under `path`. */
-  def nextVersion(path: String): String = {
-    val n = Option(new java.io.File(path).listFiles())
-      .map(_.toSeq).getOrElse(Seq.empty)
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
-      .map(_.getName.drop(1).toInt)
-      .foldLeft(0)(math.max) + 1
-    s"v$n"
-  }
+  def nextVersion(path: String): String =
+    s"v${versionDirs(path).map(_.getName.drop(1).toInt)
+      .foldLeft(0)(math.max) + 1}"
 
   /** Atomically (re)point a single-file manifest at `value` — the
     * version-swap commit for rebuilt indexes: write-to-temp +
@@ -274,5 +290,100 @@ object AtomicCommit {
     Files.write(tmp, value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     Files.move(tmp, manifest, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** One maintenance step's versions: `live` (the root the rewrite
+    * reads), `next` (the `v<n+1>` root it writes) and `roots`, each
+    * table's committed roots as snapshotted before the rewrite.
+    */
+  final case class Version(live: String, next: String,
+                           roots: Map[String, Seq[String]])
+
+  /** Run one step of the lifecycle stated above over `tables` (in
+    * commit order) of the index at `path`. The index supplies only its
+    * own decisions: `rewrite` writes every table (and any training
+    * artifact) of the snapshot under `Version.next`; `refold(version,
+    * from, staging)` re-commits the committed delta dir `from` into
+    * `version.next`, writing a complete parquet dataset at `staging`.
+    * Everything else — snapshot, folded ledger, fold-forward under the
+    * original commit-id, MANIFEST swap — happens here.
+    */
+  def maintain(path: String, tables: Seq[String])(rewrite: Version => Unit)(
+      refold: (Version, String, String) => Unit): Unit = {
+    val live = resolveVersionRoot(path)
+    val name = nextVersion(path)
+    val snapIds = tables.map(t => t -> committedDeltaIds(s"$live/$t")).toMap
+    val v = Version(live, s"$path/$name",
+      tables.map(t => t -> roots(s"$live/$t", snapIds(t))).toMap)
+    rewrite(v)
+    for (t <- tables) {
+      val target = s"${v.next}/$t"
+      writeFoldedIds(target, foldedIds(s"$live/$t") ++ snapIds(t))
+      val missed =
+        committedDeltaIds(s"$live/$t").filterNot(snapIds(t).toSet)
+          .map(live -> _) ++
+        supersededRoots(path).filterNot(_ == v.next).flatMap { r =>
+          committedDeltaIds(s"$r/$t").map(r -> _)
+        }
+      val already = committedIds(target)
+      missed.filterNot { case (_, id) => already(id) }
+        .foreach { case (r, id) =>
+          commitAppend(target, Some(id))(
+            refold(v, s"${deltasRoot(s"$r/$t")}/$id", _))
+        }
+    }
+    writeManifest(Paths.get(path, "MANIFEST"), name)
+  }
+
+  /** Drop every NON-LIVE version directory of the index at `path`
+    * and, once a MANIFEST exists, the superseded flat artifacts: each
+    * of `tables` with its deltas, staging and ledger, plus the
+    * `artifacts` directories (training state). Vacuum is the CALLER's
+    * declaration that no reader predates the current MANIFEST; a flat
+    * index is untouched. Idempotent; trivially crash-safe (it deletes
+    * only dirs no reader resolves).
+    *
+    * ORPHAN GUARD: REFUSES (IllegalStateException, naming every
+    * orphan's `<root>/<table>.deltas/<id>`) while any superseded root
+    * holds a committed delta the live version never folded
+    * ([[orphanedDeltas]]) — sweeping it would be the one way the
+    * protocol loses an acknowledged commit. Compact first.
+    */
+  def vacuum(path: String, tables: Seq[String],
+             artifacts: Seq[String]): Unit =
+    manifestName(path).foreach { live =>
+      val orphans = tables.flatMap { t =>
+        orphanedDeltas(path, t)
+          .map { case (r, id) => s"${deltasRoot(s"$r/$t")}/$id" }
+      }
+      if (orphans.nonEmpty)
+        throw new IllegalStateException(
+          s"vacuum refused at $path: superseded versions hold committed " +
+            "deltas the live version never folded (an append raced a " +
+            "compact/rebuild) — compact to fold them forward, then " +
+            "vacuum. Orphans: " + orphans.mkString(", "))
+      versionDirs(path).filterNot(_.getName == live)
+        .foreach(f => deleteRecursively(f.toPath))
+      (artifacts ++ tables.flatMap(t =>
+          Seq(t, deltasRoot(t), stagingRoot(t), s"$t.folded")))
+        .foreach(nm => deleteRecursively(Paths.get(path, nm)))
+    }
+
+  /** The table at `target`'s `(n_deltas, n_files)`: its committed
+    * delta-dir count — exactly how many extra roots every reader's
+    * listing unions, the compact trigger — and the parquet data-file
+    * count across base + deltas (per-probe open cost). Bounded
+    * driver-side listings.
+    */
+  def tableStats(target: String): (Long, Long) =
+    (committedDeltaIds(target).size.toLong,
+      committedPaths(target).map(countDataFiles).sum)
+
+  // parquet data files (part-*) under `root`, recursively
+  private def countDataFiles(root: String): Long = {
+    val s = Files.walk(Paths.get(root))
+    try s.filter(p => Files.isRegularFile(p) &&
+        p.getFileName.toString.startsWith("part-")).count()
+    finally s.close()
   }
 }

@@ -623,122 +623,61 @@ object Dedup {
       AtomicCommit.read(spark, s"$cur/bb"))
   }
 
-  /** COMPACT the minhash index root — the maintenance leg
-    * [[VectorIndex.compact]] gives the vector side, minhash edition:
-    * sustained [[minhashIndexAppend]]s accumulate one delta dir per
-    * commit per table, and probe-side file listings grow with commit
-    * count. Compaction rewrites both tables (base + committed
-    * deltas) into the next `v<n>` version under `root` — the bucket
-    * table re-sorted by `bb` within partitions, restoring the
+  // The stored index's tables in commit order: signatures before
+  // buckets, so a torn maintenance step or append never exposes
+  // buckets without their signatures.
+  private val IndexTables = Seq("hh", "bb")
+
+  /** COMPACT the minhash index root — the minhash edition of
+    * [[VectorIndex.compact]]: sustained [[minhashIndexAppend]]s
+    * accumulate one delta dir per commit per table, and probe-side
+    * file listings grow with commit count. Compaction rewrites both
+    * tables (base + committed deltas) into the next version — the
+    * bucket table re-sorted by `bb` within partitions, restoring the
     * scan-pruning layout the daily appends only maintain per-file —
-    * and swaps the MANIFEST atomically: a killed compaction leaves
-    * the old version fully live, probes never read a half-index.
+    * through [[AtomicCommit.maintain]], whose scaladoc states the
+    * snapshot / folded-ledger / fold-forward / MANIFEST-swap protocol.
     * No re-hashing (signatures are content-pure), so a probe against
-    * the compacted root is bit-identical (RoundSeventeenOpsSpec).
-    *
-    * Appends racing the compaction are never lost: the rewrite
-    * snapshots each table's committed roots ONCE, records the folded
-    * commit-ids in the new version's ledger ([[AtomicCommit
-    * .foldedIds]] — so redelivery across the swap stays a no-op),
-    * and right before the MANIFEST swap folds forward any delta the
-    * snapshot missed — late commits into the still-live version AND
-    * orphans stranded in superseded roots by an earlier race. A
-    * minhash delta dir is content-pure (no quantizer), so the fold
-    * is a file copy recommitted under the same id. After compaction,
-    * append via [[minhashIndexAppendRoot]] (or re-resolve the
-    * version root) — the flat table paths are superseded.
+    * the compacted root is bit-identical (RoundSeventeenOpsSpec), and
+    * a minhash delta dir carries no quantizer, so its fold-forward is
+    * a file copy recommitted under the same id. After compaction,
+    * append via [[minhashIndexAppendRoot]] (or re-resolve the version
+    * root) — the flat table paths are superseded.
     */
-  def minhashIndexCompact(spark: SparkSession, root: String): Unit = {
-    val cur = AtomicCommit.resolveVersionRoot(root)
-    val next = AtomicCommit.nextVersion(root)
-    val snap = Seq("hh", "bb").map { t =>
-      val ids = AtomicCommit.committedDeltaIds(s"$cur/$t")
-      val base = if (new java.io.File(s"$cur/$t").isDirectory)
-        Seq(s"$cur/$t") else Seq.empty
-      t -> (base ++ ids.map(id => s"$cur/$t.deltas/$id"), ids)
-    }.toMap
-    AtomicCommit.readPaths(spark, snap("hh")._1)
-      .write.mode("overwrite").parquet(s"$root/$next/hh")
-    AtomicCommit.readPaths(spark, snap("bb")._1)
-      .sortWithinPartitions(col("bb"))
-      .write.mode("overwrite").parquet(s"$root/$next/bb")
-    for (t <- Seq("hh", "bb")) {
-      val snapIds = snap(t)._2
-      AtomicCommit.writeFoldedIds(s"$root/$next/$t",
-        AtomicCommit.foldedIds(s"$cur/$t") ++ snapIds)
-      val missed =
-        AtomicCommit.committedDeltaIds(s"$cur/$t")
-          .filterNot(snapIds.toSet).map(cur -> _) ++
-        AtomicCommit.supersededRoots(root)
-          .filterNot(_ == s"$root/$next").flatMap { r =>
-            AtomicCommit.committedDeltaIds(s"$r/$t").map(r -> _)
-          }
-      val already = AtomicCommit.committedIds(s"$root/$next/$t")
-      missed.filterNot { case (_, id) => already(id) }
-        .foreach { case (r, id) =>
-          AtomicCommit.commitAppend(s"$root/$next/$t", Some(id)) {
-            staging => AtomicCommit.copyDir(s"$r/$t.deltas/$id", staging)
-          }
-        }
-    }
-    AtomicCommit.writeManifest(
-      java.nio.file.Paths.get(root, "MANIFEST"), next)
-  }
+  def minhashIndexCompact(spark: SparkSession, root: String): Unit =
+    AtomicCommit.maintain(root, IndexTables) { v =>
+      AtomicCommit.readPaths(spark, v.roots("hh"))
+        .write.mode("overwrite").parquet(s"${v.next}/hh")
+      AtomicCommit.readPaths(spark, v.roots("bb"))
+        .sortWithinPartitions(col("bb"))
+        .write.mode("overwrite").parquet(s"${v.next}/bb")
+    } { (_, from, staging) => AtomicCommit.copyDir(from, staging) }
 
   /** Drop every non-live version of the minhash index at `root` (and
     * the superseded flat artifacts once a MANIFEST exists) — version
-    * retention, the twin of [[VectorIndex.vacuum]]. The caller's
-    * declaration that no probe predates the current MANIFEST; a flat
-    * index is untouched. REFUSES (IllegalStateException) while any
-    * superseded root holds a committed delta of EITHER table that
-    * the live version never folded — the raced-append orphan only
-    * the next [[minhashIndexCompact]] can fold forward.
+    * retention, [[AtomicCommit.vacuum]] over both tables: a flat index
+    * is untouched, and it REFUSES (IllegalStateException) while a
+    * superseded root holds a committed delta of EITHER table that the
+    * live version never folded — compact first.
     */
-  def minhashVacuum(root: String): Unit = {
-    val m = java.nio.file.Paths.get(root, "MANIFEST")
-    if (!java.nio.file.Files.exists(m)) return
-    val orphans = Seq("hh", "bb").flatMap { t =>
-      AtomicCommit.orphanedDeltas(root, t)
-        .map { case (r, id) => s"$r/$t.deltas/$id" }
-    }
-    if (orphans.nonEmpty)
-      throw new IllegalStateException(
-        "minhashVacuum refused: superseded versions hold committed " +
-          "deltas the live version never folded — run " +
-          "minhashIndexCompact first. Orphans: " + orphans.mkString(", "))
-    val live = new String(java.nio.file.Files.readAllBytes(m),
-      java.nio.charset.StandardCharsets.UTF_8).trim
-    Option(new java.io.File(root).listFiles())
-      .map(_.toSeq).getOrElse(Seq.empty)
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+") &&
-        f.getName != live)
-      .foreach(f => AtomicCommit.deleteRecursively(f.toPath))
-    Seq("hh", "bb").flatMap(t =>
-        Seq(t, s"$t.deltas", s"$t.staging", s"$t.folded"))
-      .foreach(nm => AtomicCommit.deleteRecursively(
-        java.nio.file.Paths.get(root, nm)))
-  }
+  def minhashVacuum(root: String): Unit =
+    AtomicCommit.vacuum(root, IndexTables, Seq.empty)
 
   /** Index-health readout over the stored minhash index — the
     * maintenance-scheduling twin of [[VectorIndex.indexStats]]: per
     * table (signatures `hh`, band-buckets `bb`), the served row
-    * count (base + committed deltas), the committed delta-dir count
-    * (`n_deltas` — exactly how many extra roots every probe's
-    * listing unions, the [[minhashIndexCompact]] trigger), and the
-    * data-file count (`n_files`, per-probe open cost). Row counts
-    * are one metadata-cheap count per table; the listings are
-    * bounded driver work.
+    * count (base + committed deltas, one metadata-cheap count) and
+    * [[AtomicCommit.tableStats]]' `n_deltas` (the
+    * [[minhashIndexCompact]] trigger) and `n_files`.
     *
     * Output: (tbl, n_rows, n_deltas, n_files) — one row per table.
     */
   def dedupIndexStats(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     val cur = AtomicCommit.resolveVersionRoot(root)
-    Seq("hh", "bb").map { t =>
-      val paths = AtomicCommit.committedPaths(s"$cur/$t")
-      (t, AtomicCommit.readPaths(spark, paths).count(),
-        AtomicCommit.committedDeltaIds(s"$cur/$t").size.toLong,
-        paths.map(VectorIndex.countDataFiles).sum)
+    IndexTables.map { t =>
+      val (nDeltas, nFiles) = AtomicCommit.tableStats(s"$cur/$t")
+      (t, AtomicCommit.read(spark, s"$cur/$t").count(), nDeltas, nFiles)
     }.toDF("tbl", "n_rows", "n_deltas", "n_files")
   }
 

@@ -371,7 +371,7 @@ object Similarity {
     * [[kmeansCentroids]] trains on, so the rule and the trainer see
     * one corpus definition.
     */
-  private def sizeCells(emb: DataFrame, cells: Int): Int =
+  private[datapipe] def sizeCells(emb: DataFrame, cells: Int): Int =
     if (cells > 0) cells
     else autoCells(emb.filter(col("emb").isNotNull).count())
 

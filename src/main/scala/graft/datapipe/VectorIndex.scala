@@ -37,13 +37,11 @@ import graft.functions.VectorFunctions.cosineSimilarity
   *    pins it). Readers scan base + committed deltas as one
   *    multi-root pruned scan.
   *
-  * VERSIONING ([[rebuild]]): `<path>/MANIFEST` names the live version
-  * directory (`v1`, `v2`, …) under `<path>`; no MANIFEST means the
-  * legacy flat layout (the version IS `<path>`). [[rebuild]] retrains
-  * from the stored vectors into the NEXT version directory and then
-  * swaps the MANIFEST with one atomic rename — a probe concurrent
-  * with (or after a crash during) a rebuild reads either the complete
-  * old version or the complete new one, never a half-index.
+  * VERSIONING ([[rebuild]], [[compact]], [[vacuum]]): the versioned
+  * lifecycle of [[AtomicCommit]] (its scaladoc states the protocol) —
+  * a probe concurrent with (or after a crash during) maintenance reads
+  * either the complete old version or the complete new one, never a
+  * half-index.
   *
   * [[probe]] is row-identical to the retrain path
   * (`ivfTopKKmeans(emb, q, k, cells, iters, nprobe)` — VectorIndexSpec
@@ -98,27 +96,49 @@ object VectorIndex {
     */
   def build(emb: DataFrame, path: String, cells: Int = 0,
             iters: Int = 3): Unit = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     val e = emb.select(col("vec_id"), col("emb"))
-    val sized =
-      if (cells > 0) cells
-      else Similarity.autoCells(e.filter(col("emb").isNotNull).count())
-    val cents = Similarity.kmeansCentroids(e, sized, iters)
-    cents.zipWithIndex
+    persist(e, path,
+      Similarity.kmeansCentroids(e, Similarity.sizeCells(e, cells), iters)
+        .toSeq, None)
+  }
+
+  // Write one trained index version at `path`: the coarse centroids,
+  // the PQ codebooks when given, and `e` assigned (and encoded) with
+  // them — the layout [[loadCentroids]]/[[loadCodebooks]]/[[probe]]
+  // read back.
+  private def persist(e: DataFrame, path: String,
+                      coarse: Seq[(Array[Long], Long)],
+                      cbs: Option[IndexedSeq[Seq[(Array[Long], Long)]]]): Unit = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    coarse.zipWithIndex
       .map { case ((s, n), c) => (c.toLong, s.toSeq, n) }
-      .toSeq.toDF("cell", "s", "n")
+      .toDF("cell", "s", "n")
       .coalesce(1) // cells rows — one footer, one driver read-back
       .write.mode("overwrite").parquet(s"$path/centroids")
-    // one hash exchange on the partition key, then partition-local
-    // writes — bounds the file count by cells, not tasks × cells
-    e.select(col("vec_id"), col("emb"),
-        Similarity.kmeansAssignCol(Similarity.quantize(col("emb")),
-          cents.toSeq).as("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/vectors")
+    cbs.foreach(_.zipWithIndex.flatMap { case (cb, s) =>
+      cb.zipWithIndex.map { case ((sv, n), c) =>
+        (s.toLong, c.toLong, sv.toSeq, n) }
+    }.toDF("subspace", "cell", "s", "n")
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$path/codebooks"))
+    writeAssigned(e, coarse, cbs, s"$path/vectors")
   }
+
+  // THE assign-and-write body of every vectors table: (vec_id, emb,
+  // [code,] cell) partitioned by cell. One hash exchange on the
+  // partition key, then partition-local writes — bounds the file count
+  // by cells, not tasks × cells.
+  private def writeAssigned(delta: DataFrame,
+                            coarse: Seq[(Array[Long], Long)],
+                            cbs: Option[IndexedSeq[Seq[(Array[Long], Long)]]],
+                            dst: String): Unit =
+    delta.select(Seq(col("vec_id"), col("emb")) ++
+        cbs.map(c => Similarity.pqCodeCol(c, c.head.head._1.length).as("code")) :+
+        Similarity.kmeansAssignCol(Similarity.quantize(col("emb")), coarse)
+          .as("cell"): _*)
+      .repartition(col("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(dst)
 
   /** RETRAIN the index from its own stored vectors into the next
     * version directory and swap the MANIFEST atomically — the
@@ -128,123 +148,58 @@ object VectorIndex {
     * per-cell design point; rebuild re-levels the layout from the
     * full stored corpus (base + every committed delta).
     *
-    * Crash/concurrency contract: training and the full re-write land
-    * in `<path>/v<n+1>` while every reader still resolves the old
-    * version through the MANIFEST; the one-file atomic manifest swap
-    * ([[AtomicCommit.writeManifest]]) is the commit. A rebuild killed
-    * at ANY point leaves the old version fully live. Old version
-    * directories are kept (the caller's retention policy decides when
-    * to drop them — probes in flight may still hold the old root).
+    * Crash/concurrency contract: [[AtomicCommit.maintain]] — training
+    * and the full re-write land in `<path>/v<n+1>` while every reader
+    * still resolves the old version, and deltas the snapshot missed
+    * are re-assigned against the NEW quantizers (a dir copy would
+    * carry stale cell assignments after a retrain). Old version
+    * directories are kept until [[vacuum]] (probes in flight may
+    * still hold the old root).
     *
     * Cost: one full corpus re-train + re-write — the operation is
     * O(index), which is exactly why [[append]] exists for the daily
     * path and rebuild is gated on the [[indexStats]] readout.
     */
   def rebuild(spark: SparkSession, path: String, cells: Int = 0,
-              iters: Int = 3): Unit = {
-    val cur = resolveRoot(path)
-    val (snapPaths, snapIds) = snapshot(cur)
-    val vecs = AtomicCommit.readPaths(spark, snapPaths)
-      .select(col("vec_id"), col("emb"))
-    val next = nextVersion(path)
-    build(vecs, s"$path/$next", cells, iters)
-    finishMaintenance(spark, path, cur, next, snapIds)
-  }
-
-  /** The committed roots of `root`'s vectors table, listed ONCE:
-    * (paths to read, delta commit-ids in them). Everything the
-    * maintenance rewrite folds is exactly this driver-side list —
-    * a delta committing later is a fold-forward candidate, never a
-    * silently-half-read one.
-    */
-  private def snapshot(root: String): (Seq[String], Seq[String]) = {
-    val ids = AtomicCommit.committedDeltaIds(s"$root/vectors")
-    val base =
-      if (new java.io.File(s"$root/vectors").isDirectory)
-        Seq(s"$root/vectors")
-      else Seq.empty
-    (base ++ ids.map(id => s"$root/vectors.deltas/$id"), ids)
-  }
-
-  /** The shared tail of every maintenance rewrite (compact/rebuild,
-    * plain and PQ), in commit order: (1) write the new version's
-    * FOLDED ledger = the old ledger ∪ the snapshot's delta ids, so a
-    * redelivery of any folded commit stays a no-op across the swap;
-    * (2) fold forward every delta the snapshot missed — commits that
-    * landed in the (still-live) current version after the snapshot,
-    * and orphans stranded in superseded roots by an earlier race —
-    * re-assigned/re-encoded against the NEW version's quantizers
-    * (delta-sized work; a dir copy would carry stale cell
-    * assignments after a retrain); (3) swap the MANIFEST. A commit
-    * racing past step 2's re-listing is not lost either: it becomes
-    * an orphan in the superseded version, [[vacuum]] refuses while
-    * it exists, and the next compact folds it in here.
-    */
-  private def finishMaintenance(spark: SparkSession, path: String,
-                                cur: String, next: String,
-                                snapIds: Seq[String]): Unit = {
-    val nextRoot = s"$path/$next"
-    AtomicCommit.writeFoldedIds(s"$nextRoot/vectors",
-      AtomicCommit.foldedIds(s"$cur/vectors") ++ snapIds)
-    val missed =
-      AtomicCommit.committedDeltaIds(s"$cur/vectors")
-        .filterNot(snapIds.toSet).map(cur -> _) ++
-      AtomicCommit.supersededRoots(path)
-        .filterNot(_ == nextRoot).flatMap { r =>
-          AtomicCommit.committedDeltaIds(s"$r/vectors").map(r -> _)
-        }
-    val already = AtomicCommit.committedIds(s"$nextRoot/vectors")
-    missed.filterNot { case (_, id) => already(id) }
-      .foreach { case (r, id) =>
-        appendInto(spark, nextRoot,
-          spark.read.parquet(s"$r/vectors.deltas/$id")
-            .select(col("vec_id"), col("emb")), Some(id))
-      }
-    AtomicCommit.writeManifest(Paths.get(path, "MANIFEST"), next)
-  }
-
-  /** [[append]]/[[appendPq]] against an EXPLICIT version root —
-    * picks the PQ shape when the root carries codebooks. Used by the
-    * maintenance fold-forward, which must target the not-yet-live
-    * next version.
-    */
-  private def appendInto(spark: SparkSession, root: String,
-                         delta: DataFrame,
-                         commitId: Option[String]): Unit = {
-    val cents = loadCentroids(spark, root)
-    val pq = Files.isDirectory(Paths.get(s"$root/codebooks"))
-    AtomicCommit.commitAppend(s"$root/vectors", commitId) { staging =>
-      val assigned =
-        if (pq) {
-          val cbs = loadCodebooks(spark, root)
-          delta.select(col("vec_id"), col("emb"),
-            Similarity.pqCodeCol(cbs, cbs.head.head._1.length).as("code"),
-            Similarity.kmeansAssignCol(Similarity.quantize(col("emb")),
-              cents).as("cell"))
-        } else delta.select(col("vec_id"), col("emb"),
-          Similarity.kmeansAssignCol(Similarity.quantize(col("emb")),
-            cents).as("cell"))
-      assigned.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(staging)
-    }
-  }
+              iters: Int = 3): Unit =
+    retrain(spark, path)(build(_, _, cells, iters))
 
   /** [[rebuild]] for the COMPRESSED index: retrains the coarse
     * quantizer AND the PQ codebooks from the stored vectors (both
-    * drift-frozen under [[appendPq]]), re-encodes every vector, and
-    * swaps the MANIFEST atomically — same crash contract as
-    * [[rebuild]].
+    * drift-frozen under [[append]]), re-encodes every vector — same
+    * crash contract as [[rebuild]].
     */
   def rebuildPq(spark: SparkSession, path: String, cells: Int = 0,
                 iters: Int = 3, subspaces: Int = 8, kcents: Int = 16,
-                pqIters: Int = 2): Unit = {
-    val cur = resolveRoot(path)
-    val (snapPaths, snapIds) = snapshot(cur)
-    val vecs = AtomicCommit.readPaths(spark, snapPaths)
-      .select(col("vec_id"), col("emb"))
-    val next = nextVersion(path)
-    buildPq(vecs, s"$path/$next", cells, iters, subspaces, kcents, pqIters)
-    finishMaintenance(spark, path, cur, next, snapIds)
+                pqIters: Int = 2): Unit =
+    retrain(spark, path)(
+      buildPq(_, _, cells, iters, subspaces, kcents, pqIters))
+
+  // One maintenance step whose rewrite is `train(stored vectors,
+  // next version root)`.
+  private def retrain(spark: SparkSession, path: String)(
+      train: (DataFrame, String) => Unit): Unit =
+    AtomicCommit.maintain(path, Seq("vectors")) { v =>
+      train(AtomicCommit.readPaths(spark, v.roots("vectors"))
+        .select(col("vec_id"), col("emb")), v.next)
+    }(refold(spark))
+
+  // The vector fold-forward: re-assign (and re-encode) a committed
+  // delta against the quantizers of the version it moves into.
+  private def refold(spark: SparkSession)(
+      v: AtomicCommit.Version, from: String, staging: String): Unit =
+    assignWith(spark, v.next,
+      spark.read.parquet(from).select(col("vec_id"), col("emb")))(staging)
+
+  // [[writeAssigned]] with the quantizers stored at version root
+  // `root`, loaded now — the PQ shape when the root carries codebooks.
+  private def assignWith(spark: SparkSession, root: String,
+                         delta: DataFrame): String => Unit = {
+    val cbs =
+      if (Files.isDirectory(Paths.get(s"$root/codebooks")))
+        Some(loadCodebooks(spark, root))
+      else None
+    writeAssigned(delta, loadCentroids(spark, root), cbs, _)
   }
 
   /** COMPACT the live version's base + committed deltas into the
@@ -260,68 +215,32 @@ object VectorIndex {
     * codebooks when present) unchanged: assignments are preserved
     * because the quantizer is, so a probe against the compacted
     * version is bit-identical to one against base + deltas
-    * (RoundSeventeenOpsSpec pins it). Same atomic MANIFEST-swap
-    * commit as [[rebuild]]: a killed compaction leaves the old
-    * version fully live.
+    * (RoundSeventeenOpsSpec pins it). Same [[AtomicCommit.maintain]]
+    * step as [[rebuild]].
     */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val cur = resolveRoot(path)
-    val next = nextVersion(path)
-    spark.read.parquet(s"$cur/centroids").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/$next/centroids")
-    if (Files.isDirectory(Paths.get(s"$cur/codebooks")))
-      spark.read.parquet(s"$cur/codebooks").coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/$next/codebooks")
-    val (snapPaths, snapIds) = snapshot(cur)
-    AtomicCommit.readPaths(spark, snapPaths)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/$next/vectors")
-    finishMaintenance(spark, path, cur, next, snapIds)
-  }
+  def compact(spark: SparkSession, path: String): Unit =
+    AtomicCommit.maintain(path, Seq("vectors")) { v =>
+      def copy(t: String): Unit = spark.read.parquet(s"${v.live}/$t")
+        .coalesce(1).write.mode("overwrite").parquet(s"${v.next}/$t")
+      copy("centroids")
+      if (Files.isDirectory(Paths.get(s"${v.live}/codebooks"))) copy("codebooks")
+      AtomicCommit.readPaths(spark, v.roots("vectors"))
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(s"${v.next}/vectors")
+    }(refold(spark))
 
   /** Drop every NON-LIVE version directory (and, once a MANIFEST
     * exists, the superseded legacy flat artifacts) — the retention
-    * sweep after [[rebuild]]/[[compact]] cycles. Old versions are
-    * kept by default precisely because probes in flight may still
-    * hold their root; vacuum is the CALLER's declaration that no
-    * reader predates the current MANIFEST. A flat (un-versioned)
-    * index is untouched. Idempotent; crash-safe trivially (deleting
-    * a dir no reader resolves).
-    *
-    * ORPHAN GUARD: REFUSES (IllegalStateException) while any
-    * superseded root still holds a committed delta absent from the
-    * live version's committed set ([[AtomicCommit.orphanedDeltas]])
-    * — an append that raced a maintenance swap. Sweeping it here
-    * would be the one way the protocol loses an acknowledged commit;
-    * run [[compact]] first (it folds orphans forward), then vacuum.
+    * sweep after [[rebuild]]/[[compact]] cycles: [[AtomicCommit
+    * .vacuum]] over the vectors table and the training artifacts. Old
+    * versions are kept by default precisely because probes in flight
+    * may still hold their root. REFUSES (IllegalStateException) while
+    * an orphaned delta exists — run [[compact]] first (it folds
+    * orphans forward), then vacuum.
     */
-  def vacuum(path: String): Unit = {
-    val m = Paths.get(path, "MANIFEST")
-    if (!Files.exists(m)) return
-    val orphans = AtomicCommit.orphanedDeltas(path, "vectors")
-    if (orphans.nonEmpty)
-      throw new IllegalStateException(
-        "vacuum refused: superseded versions hold committed deltas " +
-          "the live version never folded (an append raced a " +
-          "compact/rebuild) — run compact to fold them forward, then " +
-          "vacuum. Orphans: " +
-          orphans.map { case (r, id) => s"$r/vectors.deltas/$id" }
-            .mkString(", "))
-    val live = new String(Files.readAllBytes(m),
-      java.nio.charset.StandardCharsets.UTF_8).trim
-    Option(new java.io.File(path).listFiles())
-      .map(_.toSeq).getOrElse(Seq.empty)
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+") &&
-        f.getName != live)
-      .foreach(f => AtomicCommit.deleteRecursively(f.toPath))
-    Seq("centroids", "codebooks", "vectors", "vectors.deltas",
-        "vectors.staging", "vectors.folded")
-      .foreach(nm => AtomicCommit.deleteRecursively(Paths.get(path, nm)))
-  }
-
-  private def nextVersion(path: String): String =
-    AtomicCommit.nextVersion(path)
+  def vacuum(path: String): Unit =
+    AtomicCommit.vacuum(path, Seq("vectors"), Seq("centroids", "codebooks"))
 
   /** The stored coarse quantizer of the LIVE version, cell-ordered —
     * bounded driver state (cells·dim longs, the same rows every
@@ -337,11 +256,12 @@ object VectorIndex {
 
   /** Fold `delta` (vec_id, emb) into the stored index WITHOUT
     * retraining: assign each delta vector with the stored centroids
-    * (one codegen projection over the delta only) and COMMIT the
-    * cell-partitioned rows via [[AtomicCommit]] — staged write,
-    * atomic rename, so a killed append exposes nothing to probes
-    * (VectorIndexSpec's torn-write test). Cost is delta-assign +
-    * delta-write, independent of the standing index size.
+    * — and, on a compressed index, encode it with the stored
+    * codebooks — (one codegen projection over the delta only) and
+    * COMMIT the cell-partitioned rows via [[AtomicCommit]] — staged
+    * write, atomic rename, so a killed append exposes nothing to
+    * probes (VectorIndexSpec's torn-write test). Cost is delta-assign
+    * + delta-write, independent of the standing index size.
     * Pass `commitId` (a streaming batchId, an ingest-day key) to make
     * redelivery a protocol-level no-op — no side ledger needed
     * (StreamingSpec's ingest twin); without one, replaying the same
@@ -350,15 +270,8 @@ object VectorIndex {
   def append(spark: SparkSession, path: String, delta: DataFrame,
              commitId: Option[String] = None): Unit = {
     val root = resolveRoot(path)
-    val cents = loadCentroids(spark, root)
-    AtomicCommit.commitAppend(s"$root/vectors", commitId) { staging =>
-      delta.select(col("vec_id"), col("emb"),
-          Similarity.kmeansAssignCol(Similarity.quantize(col("emb")),
-            cents).as("cell"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(staging)
-    }
+    AtomicCommit.commitAppend(s"$root/vectors", commitId)(
+      assignWith(spark, root, delta))
   }
 
   /** Train and persist the COMPRESSED index — coarse quantizer plus
@@ -376,33 +289,11 @@ object VectorIndex {
   def buildPq(emb: DataFrame, path: String, cells: Int = 0,
               iters: Int = 3, subspaces: Int = 8, kcents: Int = 16,
               pqIters: Int = 2): Unit = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     val e = emb.select(col("vec_id"), col("emb"))
-    val sized =
-      if (cells > 0) cells
-      else Similarity.autoCells(e.filter(col("emb").isNotNull).count())
-    val coarse = Similarity.kmeansCentroids(e, sized, iters)
-    coarse.zipWithIndex
-      .map { case ((s, n), c) => (c.toLong, s.toSeq, n) }
-      .toSeq.toDF("cell", "s", "n")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    val subDim = Similarity.pqSubDim(e, subspaces)
-    val cbs = Similarity.pqCodebooks(e, subspaces, kcents, pqIters)
-    cbs.zipWithIndex.flatMap { case (cb, s) =>
-      cb.zipWithIndex.map { case ((sv, n), c) =>
-        (s.toLong, c.toLong, sv.toSeq, n) }
-    }.toSeq.toDF("subspace", "cell", "s", "n")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/codebooks")
-    e.select(col("vec_id"), col("emb"),
-        Similarity.pqCodeCol(cbs, subDim).as("code"),
-        Similarity.kmeansAssignCol(Similarity.quantize(col("emb")),
-          coarse.toSeq).as("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/vectors")
+    val coarse =
+      Similarity.kmeansCentroids(e, Similarity.sizeCells(e, cells), iters)
+    persist(e, path, coarse.toSeq,
+      Some(Similarity.pqCodebooks(e, subspaces, kcents, pqIters)))
   }
 
   /** The stored PQ codebooks of the live version, (subspace, cell)-
@@ -418,28 +309,12 @@ object VectorIndex {
       .map { case (_, rows) => rows.map { case (_, s, n) => (s.toArray, n) }.toSeq }
   }
 
-  /** Fold `delta` into the stored COMPRESSED index: assign with the
-    * stored coarse centroids AND encode with the stored codebooks —
-    * both one delta-sized projection — then commit via
-    * [[AtomicCommit]] (same torn-write immunity as [[append]]). No
-    * retrain of either quantizer.
+  /** [[append]] under its compressed-index name: [[append]] already
+    * encodes with the stored codebooks when the index has them.
     */
   def appendPq(spark: SparkSession, path: String, delta: DataFrame,
-               commitId: Option[String] = None): Unit = {
-    val root = resolveRoot(path)
-    val coarse = loadCentroids(spark, root)
-    val cbs = loadCodebooks(spark, root)
-    val subDim = cbs.head.head._1.length
-    AtomicCommit.commitAppend(s"$root/vectors", commitId) { staging =>
-      delta.select(col("vec_id"), col("emb"),
-          Similarity.pqCodeCol(cbs, subDim).as("code"),
-          Similarity.kmeansAssignCol(Similarity.quantize(col("emb")),
-            coarse).as("cell"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(staging)
-    }
-  }
+               commitId: Option[String] = None): Unit =
+    append(spark, path, delta, commitId)
 
   /** IVF-PQ serving from the STORED index — row-identical to
     * [[Similarity.ivfPqTopK]] (VectorIndexSpec pins it) with zero
@@ -544,21 +419,15 @@ object VectorIndex {
     * ([[graft.functions.ExactRound.ratio]]).
     *
     * Alongside the SKEW readout (the [[rebuild]] trigger), the
-    * readout carries the two COMPACT triggers: `n_deltas` — the
-    * committed delta-dir count, which is exactly how many extra
-    * roots every probe's file listing unions — and `n_files`, the
-    * data-file count across base + deltas (per-cell open cost). Both
-    * are bounded driver-side listings, constant per row.
+    * readout carries the two COMPACT triggers, [[AtomicCommit
+    * .tableStats]]' `n_deltas` and `n_files`, constant per row.
     *
     * Output: (cell, n_vecs, share, skew, n_deltas, n_files) — 6-dp
     * ratios.
     */
   def indexStats(spark: SparkSession, path: String): DataFrame = {
     val root = resolveRoot(path)
-    val nDeltas =
-      AtomicCommit.committedDeltaIds(s"$root/vectors").size.toLong
-    val nFiles = AtomicCommit.committedPaths(s"$root/vectors")
-      .map(countDataFiles).sum
+    val (nDeltas, nFiles) = AtomicCommit.tableStats(s"$root/vectors")
     val cells = readVectors(spark, root)
       .select(col("cell").cast("long").as("cell"))
     val g = cells.groupBy(col("cell")).agg(count(lit(1)).as("n_vecs"))
@@ -570,16 +439,6 @@ object VectorIndex {
         graft.functions.ExactRound.ratio(col("n_vecs") * col("k"),
           col("tot"), 6).as("skew"),
         lit(nDeltas).as("n_deltas"), lit(nFiles).as("n_files"))
-  }
-
-  /** Parquet data files (part-*) under `root`, recursively — the
-    * probe-side open count a compaction re-bounds.
-    */
-  private[datapipe] def countDataFiles(root: String): Long = {
-    val s = Files.walk(Paths.get(root))
-    try s.filter(p => Files.isRegularFile(p) &&
-        p.getFileName.toString.startsWith("part-")).count()
-    finally s.close()
   }
 
   /** Serve top-k from the STORED index: queries probe their `nprobe`

@@ -828,8 +828,8 @@ object DedupQueries {
     }
     // day-1 verdicts published BEFORE the append mutates the index
     probe(day1).write.mode("overwrite").parquet(s"$path/verdicts1")
-    Dedup.minhashIndexAppend(day1, "id", "text",
-      s"$path/hh", s"$path/bb", numHashes = MinhashIndexHashes, bands = MinhashIndexBands)
+    Dedup.minhashIndexAppendRoot(day1, "id", "text", path,
+      numHashes = MinhashIndexHashes, bands = MinhashIndexBands)
     if (compact) Dedup.minhashIndexCompact(s, path)
     s.read.parquet(s"$path/verdicts1")
       .select(lit(1L).as("day"), col("delta_id"), col("index_id"),

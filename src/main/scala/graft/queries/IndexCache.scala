@@ -2,9 +2,9 @@ package graft.queries
 
 import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 
-import org.apache.commons.io.FileUtils
+import graft.datapipe.AtomicCommit
 
 /** The on-disk index caches of the entries that serve from a
   * materialized index, and the scratch copies their append chains
@@ -86,7 +86,7 @@ object IndexCache {
         Files.isRegularFile(marker) &&
           new String(Files.readAllBytes(marker), UTF_8).trim == kind.format.toString
       }
-      .foreach(dir => FileUtils.deleteQuietly(dir))
+      .foreach(dir => AtomicCommit.deleteRecursively(dir.toPath))
 
   // Scratch copies: each append-chain run mutates a file-level COPY of
   // a cached index, so a fresh directory per run is part of the
@@ -97,7 +97,7 @@ object IndexCache {
   private val live = scala.collection.mutable.Map.empty[String, Path]
 
   sys.addShutdownHook {
-    IndexCache.synchronized { live.values.foreach(p => FileUtils.deleteQuietly(p.toFile)) }
+    IndexCache.synchronized { live.values.foreach(AtomicCommit.deleteRecursively) }
   }
 
   /** A fresh scratch directory for `name` holding a copy of the
@@ -105,25 +105,12 @@ object IndexCache {
     */
   def scratchCopy(name: String, cached: String, parts: Seq[String]): String = {
     val p = synchronized {
-      live.remove(name).foreach(p => FileUtils.deleteQuietly(p.toFile))
+      live.remove(name).foreach(AtomicCommit.deleteRecursively)
       val p = Files.createTempDirectory(s"graft_scratch_$name")
       live(name) = p
       p
     }
-    parts.foreach(part => copyDir(s"$cached/$part", s"$p/$part"))
+    parts.foreach(part => AtomicCommit.copyDir(s"$cached/$part", s"$p/$part"))
     p.toString
-  }
-
-  // Files.walk holds a directory handle until its stream is closed
-  private def copyDir(from: String, to: String): Unit = {
-    val src = Paths.get(from)
-    val s = Files.walk(src)
-    try {
-      s.forEach { p =>
-        val dst = Paths.get(to).resolve(src.relativize(p))
-        if (Files.isDirectory(p)) Files.createDirectories(dst)
-        else Files.copy(p, dst)
-      }
-    } finally s.close()
   }
 }

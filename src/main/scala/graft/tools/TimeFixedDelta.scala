@@ -70,8 +70,8 @@ object TimeFixedDelta {
     // nothing). Timed against the real materialized dir with no
     // warm-up; repeated runs only accumulate small delta files.
     val (_, appendRuns) = Bench.warmThenTime(spark)(()) {
-      Dedup.minhashIndexAppend(delta, "id", "text",
-        s"$idxPath/hh", s"$idxPath/bb", numHashes = 64, bands = 32)
+      Dedup.minhashIndexAppendRoot(delta, "id", "text", idxPath,
+        numHashes = 64, bands = 32)
     }
     println(f"FIXED-DELTA index_append   ${appendRuns.min}%6.2f s  ${Bench.runsNote(appendRuns)}")
     spark.stop()

@@ -75,4 +75,83 @@ class AtomicCommitSpec extends SparkSpec {
     assert(AtomicCommit.resolveVersionRoot(root) === s"$root/v4",
       "the manifest swap repoints atomically (REPLACE_EXISTING)")
   }
+
+  private def put(target: String, id: String, v: Long): Unit =
+    AtomicCommit.commitAppend(target, Some(id)) { st =>
+      Seq(v).toDF("a").write.parquet(st) }
+
+  // the toy rewrite: copy the snapshot of table `t`; the toy refold
+  // copies a delta dir into the staging dir
+  private def maintainToy(root: String,
+                          during: AtomicCommit.Version => Unit = _ => ())
+      : Seq[String] = {
+    val refolded = Seq.newBuilder[String]
+    AtomicCommit.maintain(root, Seq("t")) { v =>
+      AtomicCommit.readPaths(spark, v.roots("t"))
+        .write.parquet(s"${v.next}/t")
+      during(v)
+    } { (_, from, staging) =>
+      refolded += from
+      AtomicCommit.copyDir(from, staging)
+    }
+    refolded.result()
+  }
+
+  test("maintain: snapshot once, rewrite, folded ledger, late and " +
+    "orphaned commits folded forward under their ids, MANIFEST last; " +
+    "vacuum refuses while an orphan exists, then sweeps") {
+    val root = Files.createTempDirectory("graft_ac_maintain").toString
+    Seq(1L).toDF("a").write.parquet(s"$root/t")
+    put(s"$root/t", "d1", 2L)
+    val refolded = maintainToy(root, during = { v =>
+      assert(v.live === root && v.next === s"$root/v1")
+      assert(v.roots("t") === Seq(s"$root/t", s"$root/t.deltas/d1"))
+      assert(!Files.exists(Paths.get(root, "MANIFEST")),
+        "the swap comes after the rewrite")
+      put(s"$root/t", "late", 3L) // commits after the snapshot
+    })
+    assert(refolded === Seq(s"$root/t.deltas/late"))
+    assert(AtomicCommit.resolveVersionRoot(root) === s"$root/v1")
+    assert(AtomicCommit.foldedIds(s"$root/v1/t") === Set("d1"))
+    assert(AtomicCommit.committedDeltaIds(s"$root/v1/t") === Seq("late"))
+    assert(AtomicCommit.read(spark, s"$root/v1/t").as[Long].collect().sorted
+      === Array(1L, 2L, 3L))
+    assert(AtomicCommit.tableStats(s"$root/v1/t")._1 === 1L)
+    // a stale writer commits into the superseded flat root
+    put(s"$root/t", "orphan", 4L)
+    assert(AtomicCommit.orphanedDeltas(root, "t") === Seq(root -> "orphan"))
+    val refusal = intercept[IllegalStateException] {
+      AtomicCommit.vacuum(root, Seq("t"), Seq.empty)
+    }
+    assert(refusal.getMessage.contains(s"$root/t.deltas/orphan"))
+    assert(maintainToy(root) === Seq(s"$root/t.deltas/orphan"))
+    assert(AtomicCommit.orphanedDeltas(root, "t").isEmpty)
+    assert(AtomicCommit.foldedIds(s"$root/v2/t") === Set("d1", "late"))
+    AtomicCommit.vacuum(root, Seq("t"), Seq.empty)
+    val names = new java.io.File(root).listFiles().map(_.getName).sorted.toSeq
+    assert(names === Seq("MANIFEST", "v2"), s"swept layout: $names")
+    assert(AtomicCommit.read(spark, s"$root/v2/t").as[Long].collect().sorted
+      === Array(1L, 2L, 3L, 4L))
+    // a redelivery of any folded commit stays a no-op after the sweep
+    put(s"$root/v2/t", "d1", 99L)
+    assert(AtomicCommit.read(spark, s"$root/v2/t").count() === 4)
+  }
+
+  test("maintain: a rewrite that fails leaves the live version, its " +
+    "MANIFEST and every commit untouched") {
+    val root = Files.createTempDirectory("graft_ac_maintain_fail").toString
+    Seq(1L).toDF("a").write.parquet(s"$root/t")
+    maintainToy(root) // → v1
+    put(s"$root/v1/t", "d1", 2L)
+    intercept[IllegalStateException] {
+      AtomicCommit.maintain(root, Seq("t")) { _ =>
+        throw new IllegalStateException("killed mid-rewrite")
+      } { (_, _, _) => fail("no refold after a failed rewrite") }
+    }
+    assert(AtomicCommit.resolveVersionRoot(root) === s"$root/v1")
+    assert(AtomicCommit.read(spark, s"$root/v1/t").as[Long].collect().sorted
+      === Array(1L, 2L))
+    assert(!Files.exists(Paths.get(s"$root/v2/t.folded")),
+      "no ledger is written for a version that never swapped")
+  }
 }

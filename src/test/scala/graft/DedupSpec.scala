@@ -476,4 +476,26 @@ class DedupSpec extends SparkSpec {
       assert(!vecOlder.exists() && !vecUnmarked.exists())
     } finally org.apache.commons.io.FileUtils.deleteQuietly(root)
   }
+
+  test("scratchCopy copies every listed part of a cached index and " +
+    "replaces the previous copy of the same name") {
+    import java.nio.file.{Files, Paths}
+    import graft.queries.IndexCache
+    val cached = Files.createTempDirectory("minhash-cached").toString
+    Seq((1L, "a b c")).toDF("id", "text").write.parquet(s"$cached/hh")
+    Seq((2L, "d e f")).toDF("id", "text").write.parquet(s"$cached/bb")
+    Files.write(Paths.get(cached, "FORMAT"), "1".getBytes)
+    val first = IndexCache.scratchCopy("dedup_spec", cached, Seq("hh", "bb"))
+    assert(spark.read.parquet(s"$first/hh").as[(Long, String)].collect()
+      === Array((1L, "a b c")))
+    assert(new java.io.File(first, "bb/_SUCCESS").exists())
+    assert(!new java.io.File(first, "FORMAT").exists(),
+      "only the listed parts are copied")
+    val second = IndexCache.scratchCopy("dedup_spec", cached, Seq("hh"))
+    assert(second != first && !new java.io.File(first).exists(),
+      "a new copy of the same name deletes the previous one")
+    assert(spark.read.parquet(s"$second/hh").count() === 1)
+    assert(new java.io.File(s"$cached/hh/_SUCCESS").exists(),
+      "the cached index itself is never touched")
+  }
 }

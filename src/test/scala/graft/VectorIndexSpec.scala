@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.datapipe.{Similarity, VectorIndex}
+import graft.datapipe.{AtomicCommit, Similarity, VectorIndex}
 
 /** The materialized IVF index lifecycle: build → probe (row-identical
   * to the retrain path, served plan-pinned from the stored parquet) →
@@ -144,6 +144,85 @@ class VectorIndexSpec extends SparkSpec {
       .orderBy(col("rnk")).collect()
     assert(top.head.getLong(2) === 1000000L && top.head.getDouble(3) === 1.0,
       s"the appended exact twin must rank first: ${top.mkString(", ")}")
+  }
+
+  test("append on a buildPq index encodes the delta with the stored " +
+    "codebooks: probePq serves the delta rows and the readouts keep " +
+    "working") {
+    val e = fixtureEmb
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_vecidx_pq_plain_append").toString
+    VectorIndex.buildPq(e, dir, cells = 8, iters = 3, subspaces = 4)
+    val delta = e.filter(col("vec_id") < 5)
+      .select((col("vec_id") + 1000000L).as("vec_id"), col("emb"))
+    VectorIndex.append(spark, dir, delta)
+    // every delta row is an exact twin: same cell and code as its
+    // original, so the ADC stage surfaces it and the rescore scores 1.0
+    val q = e.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
+    val served = VectorIndex.probePq(spark, dir, q, 3, nprobe = 3).collect()
+      .map(r => (r.getLong(0), r.getLong(2), r.getDouble(3))).toSet
+    for (i <- 0L until 5L)
+      assert(served.contains((i, i + 1000000L, 1.0)),
+        s"query $i must be served its appended twin: $served")
+    val stored = AtomicCommit.read(spark, s"$dir/vectors")
+      .select(col("vec_id"), col("code"), col("cell").cast("long"))
+      .collect().map(r => r.getLong(0) -> ((r.getSeq[Long](1), r.getLong(2))))
+      .toMap
+    for (i <- 0L until 5L)
+      assert(stored(i + 1000000L) === stored(i),
+        s"twin $i must carry its original's (code, cell)")
+    assert(VectorIndex.probe(spark, dir, q, 1, nprobe = 3).count() === 5)
+    assert(VectorIndex.indexStats(spark, dir)
+      .agg(sum(col("n_vecs"))).head().getLong(0) === e.count() + 5)
+  }
+
+  test("PQ fold-forward: a delta committed into a root rebuildPq " +
+    "superseded is refused by vacuum, folded by compact with a code " +
+    "from the live codebooks, then swept") {
+    val e = fixtureEmb
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_vecidx_pq_orphan").toString
+    VectorIndex.buildPq(e, dir, cells = 8, iters = 3, subspaces = 8,
+      kcents = 16)
+    // the retrain changes both quantizers' shapes: 4 cells, 4 subspaces
+    VectorIndex.rebuildPq(spark, dir, cells = 4, iters = 3, subspaces = 4,
+      kcents = 8)
+    assert(VectorIndex.resolveRoot(dir) === s"$dir/v1")
+    // the RACE: a writer that resolved the flat root before the swap
+    // commits an exact twin of vector 0 with the flat version's
+    // (cell, code) — exactly the flat base row of vector 0
+    val raced = spark.read.parquet(s"$dir/vectors")
+      .filter(col("vec_id") === 0)
+      .withColumn("vec_id", col("vec_id") + 7000000L)
+    AtomicCommit.commitAppend(s"$dir/vectors", Some("raced")) { staging =>
+      raced.write.mode("overwrite").partitionBy("cell").parquet(staging)
+    }
+    assert(AtomicCommit.orphanedDeltas(dir, "vectors") === Seq(dir -> "raced"))
+    val refusal = intercept[IllegalStateException] { VectorIndex.vacuum(dir) }
+    assert(refusal.getMessage.contains(s"$dir/vectors.deltas/raced"),
+      refusal.getMessage)
+    VectorIndex.compact(spark, dir)
+    assert(VectorIndex.resolveRoot(dir) === s"$dir/v2")
+    assert(AtomicCommit.orphanedDeltas(dir, "vectors").isEmpty)
+    def codeCell(id: Long) = AtomicCommit.read(spark, s"$dir/v2/vectors")
+      .filter(col("vec_id") === id)
+      .select(col("code"), col("cell").cast("long"))
+      .collect().map(r => (r.getSeq[Long](0), r.getLong(1))).toSeq
+    val Seq(folded) = codeCell(7000000L)
+    assert(folded._1.size === 4 && codeCell(0L) === Seq(folded),
+      s"the fold re-encodes with the live codebooks: $folded")
+    val q = e.filter(col("vec_id") === 0)
+      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
+    def served() = VectorIndex.probePq(spark, dir, q, 3, nprobe = 3)
+      .collect().map(r => (r.getLong(2), r.getDouble(3))).toSet
+    val before = served()
+    assert(before.contains((7000000L, 1.0)), s"the folded twin serves: $before")
+    VectorIndex.vacuum(dir)
+    val names = Option(new java.io.File(dir).listFiles())
+      .map(_.toSeq).getOrElse(Seq.empty).map(_.getName).sorted
+    assert(names === Seq("MANIFEST", "v2"), s"swept layout: $names")
+    assert(served() === before, "vacuum must not change what serves")
   }
 
   test("decontaminateIndexed: nprobe = cells recovers the exact " +
